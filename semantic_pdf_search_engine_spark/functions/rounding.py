@@ -15,7 +15,7 @@ a particular tie convention. Values beyond 2^53/10^d degrade to an
 identity rounding — identically in both engines.)
 
 Every float column the driver hash-compares goes through one of these
-three equivalents; using engine ROUND for a compared column is a bug.
+equivalents; using engine ROUND for a compared column is a bug.
 """
 
 from __future__ import annotations
@@ -37,8 +37,3 @@ def np_round_half_up(x, decimals: int = 6):
     scale = 10.0**decimals
     return np.floor(x * scale + 0.5) / scale
 
-
-def sql_round_half_up(expr: str, decimals: int = 6) -> str:
-    """DuckDB side — textual twin for oracle SQL construction."""
-    scale = 10**decimals
-    return f"floor(({expr}) * {scale}.0 + 0.5) / {scale}.0"

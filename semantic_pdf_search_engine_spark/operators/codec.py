@@ -250,29 +250,6 @@ CODECS = {
 DEFAULT_CODEC = "vbyte"
 
 
-def _single_encode(arr: np.ndarray, codec_name: str) -> bytes:
-    enc, _ = CODECS[codec_name]
-    a = np.ascontiguousarray(arr, dtype=np.uint64)
-    return enc(
-        a, np.zeros(1, dtype=np.int64), np.asarray([a.size], dtype=np.int64)
-    )[0]
-
-
-def encode_block(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    base: int,
-    codec_name: str = DEFAULT_CODEC,
-):
-    """(sorted doc_ids, tfs, dls) → (gaps_bin, tfs_bin, dls_bin)."""
-    return (
-        _single_encode(delta_encode(doc_ids, base), codec_name),
-        _single_encode(np.ascontiguousarray(tfs, dtype=np.uint64), codec_name),
-        _single_encode(np.ascontiguousarray(dls, dtype=np.uint64), codec_name),
-    )
-
-
 def decode_block(
     gaps_bin: bytes,
     tfs_bin: bytes,

@@ -519,48 +519,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def passage_windows(
-    docs: DataFrame,
-    k: int = PASSAGE_K,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, fp): md5 fingerprint of EVERY k-token window occurrence
-    (positions 1..len-k+1 under the pinned tokenizer) — NOT distinct:
-    duplicate-passage accounting weighs each occurrence. One Arrow pass
-    (tokenize + slide + hash per batch); the 128-bit digest replaces
-    the gram string as the shuffle key, so downstream exchanges move
-    fixed-width uniform keys instead of variable-length text."""
-    import hashlib
-
-    import pandas as pd
-
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-
-    id_type = docs.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            ids, fps = [], []
-            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                toks = tokenize_py(text, normalize=False)
-                for j in range(len(toks) - k + 1):
-                    ids.append(did)
-                    fps.append(
-                        hashlib.md5(" ".join(toks[j : j + k]).encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                    "fp": fps,
-                }
-            )
-
-    return _ensure_parallelism(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, fp string"
-    )
-
-
 def dup_passage_stats(
     docs: DataFrame,
     k: int = PASSAGE_K,

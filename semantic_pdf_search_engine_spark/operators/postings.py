@@ -103,16 +103,6 @@ def term_frequencies(
     )
 
 
-def corpus_stats(docs: DataFrame, tf: DataFrame) -> tuple[int, float]:
-    """N and avgdl without shuffling on doc_id: N is a scan count of
-    the docs table (includes zero-token docs, matching the brute-force
-    dl_df semantics); Σdl == Σtf over the tf table (integer-exact),
-    both map-side partial aggregates."""
-    n_docs = docs.count()
-    total = tf.agg(F.sum(F.col("tf").cast("long")).alias("t")).collect()[0]["t"] or 0
-    return int(n_docs), (float(total) / n_docs if n_docs else 0.0)
-
-
 def docfreq(tf: DataFrame) -> DataFrame:
     """(term, df) — plain count: tf already has one row per (doc, term)."""
     return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))

@@ -23,9 +23,8 @@ Pipeline (replacing the reference's Qdrant search,
      blocks, dense float64 accumulation over the ≤STRIPE_DOCS-wide
      doc range in canonical (sorted-term) order — bit-identical to the
      numpy oracle's summation order — emit the stripe-local top-k;
-  5. global merge: candidates ≤ (#stripes_kept × k) rows — either
-     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k) or
-     the treeReduce heap merge (`topk_tree`) for the RDD path.
+  5. global merge: candidates ≤ (#stripes_kept × k) rows —
+     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k).
 
 Stripe-level block-max pruning is the engine's moral twin of the
 reference's anchor-based candidate pruning before expensive scoring
@@ -35,11 +34,9 @@ cannot beat the current threshold.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.config import (
@@ -169,7 +166,6 @@ def score_topk(
     k: int = DEFAULT_TOP_K,
     round_scores: bool = True,
     prune: bool = True,
-    use_tree_reduce: bool = False,
     conv_id: str | None = None,
     membership_cap: int | None = None,
 ) -> DataFrame:
@@ -276,7 +272,6 @@ def score_topk(
     qidf = index.docfreq.filter(F.col("term").isin(q_terms)).select("term", "idf")
     qblocks = qblocks.join(F.broadcast(qidf), "term")
 
-    k1, b = K1, B
     avgdl = index.avgdl
 
     if prune:
@@ -287,8 +282,6 @@ def score_topk(
         qblocks = qblocks.join(F.broadcast(_kept_stripes(meta, k)), "stripe_id")
 
     stripe_docs = index.stripe_docs
-    avgdl = index.avgdl
-
     codec_name = index.codec
 
     # semi-join fallback: per-stripe truncation OFF (k_local = the
@@ -312,8 +305,6 @@ def score_topk(
         candidates = candidates.withColumn(
             "score", round_half_up(F.col("score"), SCORE_DECIMALS)
         )
-    if use_tree_reduce:
-        return topk_tree(spark, candidates, k)
     return candidates.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -438,37 +429,6 @@ def search(
         docs.join(F.broadcast(hits), "doc_id")
         .select("doc_id", "score", "conv_id", "turn_idx", "text")
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    )
-
-
-def topk_tree(spark: SparkSession, scored: DataFrame, k: int) -> DataFrame:
-    """RDD treeReduce top-k heap merge — O(log P) merge depth for very
-    wide candidate sets (SURVEY.md §4 custom-4). Semantically identical
-    to ORDER BY score DESC, doc_id ASC LIMIT k."""
-
-    def part_topk(it):
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of best k
-        for row in it:
-            item = (row["score"], -row["doc_id"])
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-        yield heap
-
-    def merge(a, b):
-        for item in b:
-            if len(a) < k:
-                heapq.heappush(a, item)
-            elif item > a[0]:
-                heapq.heapreplace(a, item)
-        return a
-
-    parts = scored.rdd.mapPartitions(part_topk)
-    heap = parts.treeReduce(merge)
-    rows = sorted(((-nd, s) for s, nd in heap), key=lambda x: (-x[1], x[0]))
-    return spark.createDataFrame(
-        [(int(d), float(s)) for d, s in rows], "doc_id long, score double"
     )
 
 

@@ -97,21 +97,24 @@ LIMIT {k}
 # ---------------------------------------------------------------------------
 
 
-_SCHEMA_CACHE: dict[str, object] = {}
+_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with the inferred schema memoized per path:
-    a schemaless parquet read runs a 1-task footer-inference JOB on
-    every call — one scheduler round-trip per registry query (~98 per
-    bench pass). The memo holds the table's StructType (metadata only,
-    never rows); every invocation still scans the parquet data itself.
-    The test directories are immutable fixtures, so a cached schema
-    cannot go stale within a process."""
-    sch = _SCHEMA_CACHE.get(path)
+    """spark.read.parquet with the inferred schema memoized per
+    (path, stat signature): a schemaless parquet read runs a 1-task
+    footer-inference JOB on every call — one scheduler round-trip per
+    registry query (~98 per bench pass). The memo holds the table's
+    StructType (metadata only, never rows); every invocation still
+    scans the parquet data itself. Keying on the stat-only signature
+    (no footer reads) means a table rewritten in-process — new files,
+    sizes or mtimes — infers its schema afresh instead of reusing a
+    stale one."""
+    key = (path, _parquet_signature_cheap(path))
+    sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
         return df
     return spark.read.schema(sch).parquet(path)
 

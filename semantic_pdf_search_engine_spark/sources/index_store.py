@@ -37,7 +37,7 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.config import STRIPE_DOCS
@@ -433,49 +433,43 @@ def load_index(
     was taken. Raises if the snapshot was expired or its files are
     gone."""
     m = Manifest(index_dir)
+    files: dict[str, list[str] | None] = {}
     if snapshot_id is None:
         p = m.data["params"]
-        return InvertedIndex(
-            spark,
-            index_dir,
-            p["n_docs"],
-            p["avgdl"],
-            p.get("stripe_docs", STRIPE_DOCS),
-            codec=p.get("codec", "vbyte"),
-            postings_rel=p.get("postings_rel", "postings"),
-            docfreq_rel=p.get("docfreq_rel", "docfreq"),
-            docs_rel=p.get("docs_rel", "docs"),
-            tf_rel=p.get("tf_rel", "tf"),
-        )
-    snaps = {s["snapshot_id"]: s for s in m.data.get("snapshots", [])}
-    if snapshot_id not in snaps:
-        raise ValueError(
-            f"snapshot {snapshot_id} not found (retained: {sorted(snaps)}) — "
-            "expired snapshots cannot be read"
-        )
-    s = snaps[snapshot_id]
-    p = s["params"]
-    missing = [
-        f
-        for base in _SNAPSHOT_BASES
-        for f in s["tables"].get(base, [])
-        if not Path(f).exists()
-    ]
-    if missing:
-        raise ValueError(
-            f"snapshot {snapshot_id} is unreadable: {len(missing)} file(s) "
-            f"missing (first: {missing[0]})"
-        )
-    for base in ("postings", "docfreq", "docs"):
-        if not s["tables"].get(base):
-            # fail at LOAD time with a clear message — an empty file
-            # list would otherwise surface as an opaque read error on
-            # the first query
+    else:
+        snaps = {s["snapshot_id"]: s for s in m.data.get("snapshots", [])}
+        if snapshot_id not in snaps:
             raise ValueError(
-                f"snapshot {snapshot_id} records no files for table "
-                f"{base!r} — the snapshot predates that table or the "
-                "manifest is damaged"
+                f"snapshot {snapshot_id} not found (retained: {sorted(snaps)}) — "
+                "expired snapshots cannot be read"
             )
+        s = snaps[snapshot_id]
+        p = s["params"]
+        missing = [
+            f
+            for base in _SNAPSHOT_BASES
+            for f in s["tables"].get(base, [])
+            if not Path(f).exists()
+        ]
+        if missing:
+            raise ValueError(
+                f"snapshot {snapshot_id} is unreadable: {len(missing)} file(s) "
+                f"missing (first: {missing[0]})"
+            )
+        for base in ("postings", "docfreq", "docs"):
+            if not s["tables"].get(base):
+                # fail at LOAD time with a clear message — an empty file
+                # list would otherwise surface as an opaque read error on
+                # the first query
+                raise ValueError(
+                    f"snapshot {snapshot_id} records no files for table "
+                    f"{base!r} — the snapshot predates that table or the "
+                    "manifest is damaged"
+                )
+            files[f"{base}_files"] = s["tables"][base]
+        # pre-tf-snapshot manifests may record no tf files; fall back
+        # to the live path rather than an empty (unreadable) list
+        files["tf_files"] = s["tables"].get("tf") or None
     return InvertedIndex(
         spark,
         index_dir,
@@ -487,13 +481,44 @@ def load_index(
         docfreq_rel=p.get("docfreq_rel", "docfreq"),
         docs_rel=p.get("docs_rel", "docs"),
         tf_rel=p.get("tf_rel", "tf"),
-        postings_files=s["tables"]["postings"],
-        docfreq_files=s["tables"]["docfreq"],
-        docs_files=s["tables"]["docs"],
-        # pre-tf-snapshot manifests may record no tf files; fall back
-        # to the live path rather than an empty (unreadable) list
-        tf_files=s["tables"].get("tf") or None,
+        **files,
     )
+
+
+def _idf_column(n_docs: int) -> Column:
+    """idf of the `df` column under corpus size `n_docs`, computed by
+    numpy on executors — ONE libm implementation shared bit-exactly by
+    stored idf, block-max bounds, and the numpy oracle (Java Math.log
+    can differ by 1 ulp, which would make pruning bounds inconsistent
+    with scoring)."""
+
+    @F.pandas_udf("double")
+    def idf_udf(dfs):
+        import numpy as np
+
+        return np.log(1.0 + (float(n_docs) - dfs + 0.5) / (dfs + 0.5))
+
+    return idf_udf(F.col("df").cast("double"))
+
+
+def _write_postings(
+    blocks: DataFrame, path: Path, mode: str = "overwrite"
+) -> Observation:
+    """Write posting blocks partitioned by `term_bucket`; the returned
+    Observation carries the block `rows` and `n_postings` written.
+    Repartitioning on the partition column first keeps one file per
+    bucket directory: otherwise every shuffle partition writes a sliver
+    into every bucket (P × NUM_TERM_BUCKETS small files); blocks are
+    compact, so this extra shuffle moves little data."""
+    obs = Observation("postings")
+    blocks.withColumn("term_bucket", term_bucket_udf(F.col("term"))).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("n_postings").alias("n_postings"),
+    ).repartition(NUM_TERM_BUCKETS, "term_bucket").write.mode(mode).partitionBy(
+        "term_bucket"
+    ).parquet(str(path))
+    return obs
 
 
 def build_index(
@@ -508,8 +533,8 @@ def build_index(
     """Full index build: docids → tf → stats/docfreq → posting blocks.
 
     `codec_name` ('vbyte' | 'for') selects the posting-block codec; it
-    is recorded in the manifest params so every downstream decode —
-    query kernels, compaction, snapshots — dispatches the same codec.
+    is recorded in the manifest params so query kernels and snapshots
+    decode, and appends and compaction encode, with the same codec.
     On a resumed build whose postings stage already committed, the
     RECORDED codec wins (the stored blocks are what they are).
 
@@ -520,8 +545,6 @@ def build_index(
     a partially-resumable state is refused rather than silently served
     with pre-append stats.
     """
-    from pyspark.sql import Observation
-
     d = Path(index_dir)
     m = Manifest(index_dir)
     metrics = m.data["metrics"]
@@ -603,18 +626,7 @@ def build_index(
             F.sum("tf_sum").alias("total_tokens"),
             F.count(F.lit(1)).alias("rows"),
         )
-
-        # idf via numpy on executors — ONE libm implementation shared
-        # bit-exactly by stored idf, block-max bounds, and the numpy
-        # oracle (Java Math.log can differ by 1 ulp, which would make
-        # pruning bounds inconsistent with scoring).
-        @F.pandas_udf("double")
-        def idf_udf(dfs):
-            import numpy as np
-
-            return np.log(1.0 + (float(n_docs) - dfs + 0.5) / (dfs + 0.5))
-
-        dfreq_cnt.withColumn("idf", idf_udf(F.col("df").cast("double"))).drop(
+        dfreq_cnt.withColumn("idf", _idf_column(n_docs)).drop(
             "tf_sum"
         ).write.mode("overwrite").parquet(str(d / docfreq_rel))
         total_tokens = int(obs.get["total_tokens"] or 0)
@@ -640,23 +652,14 @@ def build_index(
     postings_rel = m.data["params"].get("postings_rel", "postings")
     if not (resume and m.stage_complete("postings")):
         t0 = time.time()
-        m.data["params"]["codec"] = codec_name
+        # load_index reads both back: a resumed build may carry stage-3
+        # params written under another stripe_docs
+        m.data["params"].update(codec=codec_name, stripe_docs=stripe_docs)
         blocks = P.build_posting_blocks(
             tf, dfreq.select("term", "idf"), avgdl, stripe_docs,
             codec_name=codec_name,
-        ).withColumn("term_bucket", term_bucket_udf(F.col("term")))
-        # repartition on the partition column first: otherwise every
-        # shuffle partition writes a sliver into every bucket directory
-        # (P × NUM_TERM_BUCKETS small files); blocks are compact, so
-        # this extra shuffle moves little data
-        obs = Observation("postings")
-        blocks.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n_postings").alias("n_postings"),
-        ).repartition(NUM_TERM_BUCKETS, "term_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("term_bucket").parquet(str(d / postings_rel))
+        )
+        obs = _write_postings(blocks, d / postings_rel)
         dt = m.record("postings", d / postings_rel, int(obs.get["rows"]), t0)
         metrics["postings_turns_per_sec"] = round(n_turns / dt, 1)
         n_postings = int(obs.get["n_postings"] or 0)
@@ -670,18 +673,7 @@ def build_index(
 
     m.save()
     record_snapshot(m, index_dir, "build")
-    return InvertedIndex(
-        spark,
-        index_dir,
-        n_docs,
-        avgdl,
-        stripe_docs,
-        codec=m.data["params"].get("codec", "vbyte"),
-        postings_rel=postings_rel,
-        docfreq_rel=docfreq_rel,
-        docs_rel=docs_rel,
-        tf_rel=tf_rel,
-    )
+    return load_index(spark, index_dir)
 
 
 def append_to_index(
@@ -746,15 +738,8 @@ def append_to_index(
         df_old.unionByName(df_new)
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
+        .withColumn("idf", _idf_column(n_all))
     )
-
-    @F.pandas_udf("double")
-    def idf_udf(dfs):
-        import numpy as np
-
-        return np.log(1.0 + (float(n_all) - dfs + 0.5) / (dfs + 0.5))
-
-    merged = merged.withColumn("idf", idf_udf(F.col("df").cast("double")))
     # atomic swap: write the NEW version dir, flip the manifest pointer
     # (os.replace inside Manifest.save), only then remove the old dir —
     # a concurrent reader resolving through the manifest never sees a
@@ -769,10 +754,8 @@ def append_to_index(
     blocks = P.build_posting_blocks(
         tf_new, dfreq_idf, avgdl, stripe_docs,
         codec_name=params.get("codec", "vbyte"),
-    ).withColumn("term_bucket", term_bucket_udf(F.col("term")))
-    blocks.repartition(NUM_TERM_BUCKETS, "term_bucket").write.mode(
-        "append"
-    ).partitionBy("term_bucket").parquet(str(d / postings_rel))
+    )
+    _write_postings(blocks, d / postings_rel, mode="append")
 
     new_docs.unpersist()
     tf_new.unpersist()
@@ -804,18 +787,7 @@ def append_to_index(
 
         shutil.rmtree(d / docfreq_rel)
     record_snapshot(m, index_dir, f"append_{seg_id}")
-    return InvertedIndex(
-        spark,
-        index_dir,
-        n_all,
-        avgdl,
-        stripe_docs,
-        codec=params.get("codec", "vbyte"),
-        postings_rel=postings_rel,
-        docfreq_rel=new_docfreq_rel,
-        docs_rel=docs_rel,
-        tf_rel=tf_rel,
-    )
+    return load_index(spark, index_dir)
 
 
 def _next_version(current_rel: str, base: str) -> str:
@@ -881,119 +853,43 @@ def compact_docs_tf(
 def compact_index(
     spark: SparkSession, index_dir: str, include_docs_tf: bool = True
 ) -> InvertedIndex:
-    """LSM major compaction: merge every (term, stripe)'s block rows —
-    one per append segment that touched the stripe — into a single
-    block, bit-identical to what a one-shot build over the merged
-    corpus would produce.
+    """LSM major compaction: rebuild the postings table with one block
+    per (term, stripe), byte-identical to a one-shot build over the
+    merged corpus.
 
     Appends only ever ADD block rows (old blocks are never rewritten:
     doc ranges are disjoint, pruning bounds are recomputed from raw
     facts), so read amplification grows with segment count at shared
-    boundary stripes; this job folds it back to 1. Mechanics mirror
-    the build encoder: repartition on (term, stripe_id), decode +
-    concatenate postings in doc order, re-encode, re-pick the argmax
-    posting under CURRENT stats (same numpy expression as the build —
-    required for the compact≡one-shot equality that tests pin).
+    boundary stripes; this job folds it back to 1. It re-runs the
+    build's encoder (`build_posting_blocks`) over the index's own tf
+    table under CURRENT stats (idf, avgdl) and the recorded codec, so
+    compaction equals a one-shot build by construction. Only committed
+    rows (doc_id < n_docs) are read: an append that crashed between its
+    tf write and its manifest flip leaves orphan tf rows behind.
     The rewritten table lands in a new versioned dir; the manifest
     pointer flip is the atomic commit (same pattern as docfreq).
     `include_docs_tf` additionally folds the docs/tf small files that
     appends accumulate (compact_docs_tf) — the full LSM maintenance
     pass the streaming compact_every hook runs."""
-    import numpy as np
-    import pandas as pd
-
-    from semantic_pdf_search_engine_spark.config import B, K1
-    from semantic_pdf_search_engine_spark.operators import codec
-    from semantic_pdf_search_engine_spark.operators.postings import POSTINGS_SCHEMA
-
     idx = load_index(spark, index_dir)
     d = Path(index_dir)
     m = Manifest(index_dir)
     params = m.data["params"]
-    stripe_docs = idx.stripe_docs
-    avgdl = idx.avgdl
-    codec_name = idx.codec
-    k1, b = K1, B
-
-    posts = idx.postings.join(
-        F.broadcast(idx.docfreq.select("term", "idf")), "term"
-    )
-
-    def merge_partition(batches):
-        def flush(rows: pd.DataFrame):
-            # rows: all block rows of ONE (term, stripe), sorted by min_doc
-            stripe = int(rows["stripe_id"].iloc[0])
-            base = stripe * stripe_docs
-            docs_l, tfs_l, dls_l = [], [], []
-            for r in rows.itertuples(index=False):
-                dd, tt, ll = codec.decode_block(
-                    r.gaps, r.tfs, r.dls, base, codec_name
-                )
-                docs_l.append(dd)
-                tfs_l.append(tt)
-                dls_l.append(ll)
-            docs = np.concatenate(docs_l)
-            tfs = np.concatenate(tfs_l)
-            dls = np.concatenate(dls_l)
-            idf = float(rows["idf"].iloc[0])
-            contrib = (idf * (tfs * (k1 + 1.0))) / (
-                tfs + k1 * (1.0 - b + b * dls / avgdl)
-            )
-            top = int(np.flatnonzero(contrib == contrib.max())[0])
-            g, t, l = codec.encode_block(docs, tfs.astype(np.uint64),
-                                         dls.astype(np.uint64), base,
-                                         codec_name)
-            return {
-                "term": rows["term"].iloc[0],
-                "stripe_id": stripe,
-                "n_postings": int(docs.size),
-                "min_doc": int(docs[0]),
-                "max_doc": int(docs[-1]),
-                "gaps": g,
-                "tfs": t,
-                "dls": l,
-                "max_tf": int(tfs.max()),
-                "top_tf": int(tfs[top]),
-                "top_dl": int(dls[top]),
-                "term_bucket": int(rows["term_bucket"].iloc[0]),
-            }
-
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if pdf.empty:
-                carry = None
-                continue
-            last_t = pdf["term"].iloc[-1]
-            last_s = pdf["stripe_id"].iloc[-1]
-            mask = (pdf["term"] == last_t) & (pdf["stripe_id"] == last_s)
-            carry = pdf[mask]
-            body = pdf[~mask]
-            if len(body):
-                out = [
-                    flush(g.sort_values("min_doc"))
-                    for _, g in body.groupby(["term", "stripe_id"], sort=False)
-                ]
-                yield pd.DataFrame(out)
-        if carry is not None and len(carry):
-            yield pd.DataFrame([flush(carry.sort_values("min_doc"))])
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    merged = (
-        posts.repartition(n_parts, "term", "stripe_id")
-        .sortWithinPartitions("term", "stripe_id", "min_doc")
-        .mapInPandas(merge_partition, schema=POSTINGS_SCHEMA + ", term_bucket int")
+    blocks = P.build_posting_blocks(
+        idx.tf.filter(F.col("doc_id") < idx.n_docs),
+        idx.docfreq.select("term", "idf"),
+        idx.avgdl,
+        idx.stripe_docs,
+        codec_name=idx.codec,
     )
     postings_rel = params.get("postings_rel", "postings")
     new_rel = _next_version(postings_rel, "postings")
     t0 = time.time()
-    merged.repartition(NUM_TERM_BUCKETS, "term_bucket").write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(str(d / new_rel))
+    obs = _write_postings(blocks, d / new_rel)
     params["postings_rel"] = new_rel
     seg_id = sum(1 for s in m.data["stages"] if s.startswith("compact_"))
-    m.record(f"compact_{seg_id}", d / new_rel, 0, t0)  # saves = pointer flip
+    # record() saves the manifest — the atomic pointer flip
+    m.record(f"compact_{seg_id}", d / new_rel, int(obs.get["rows"]), t0)
     if (d / postings_rel).exists() and not _rel_referenced_by_snapshot(
         m, postings_rel
     ):

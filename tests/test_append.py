@@ -135,6 +135,49 @@ def test_compaction_equals_one_shot(spark, tmp_path):
     assert idx_re.postings_rel.startswith("postings_v")
 
 
+def _block_facts(idx) -> dict:
+    """(term, stripe_id) → every stored block column, binaries as bytes."""
+    cols = ["term", "stripe_id", "n_postings", "min_doc", "max_doc",
+            "gaps", "tfs", "dls", "max_tf", "top_tf", "top_dl"]
+    return {
+        (r["term"], r["stripe_id"]): tuple(
+            bytes(r[c]) if isinstance(r[c], (bytes, bytearray)) else r[c]
+            for c in cols[2:]
+        )
+        for r in idx.postings.select(*cols).collect()
+    }
+
+
+def test_compaction_ignores_uncommitted_tf_rows(spark, corpora, tmp_path):
+    """append_to_index writes tf/ before its manifest flip, so a crash
+    in between leaves tf rows with doc_id >= n_docs. Compaction rebuilds
+    the postings from tf, and must read committed rows only: the result
+    stays byte-identical to a one-shot build of A∪B."""
+    from pyspark.sql import functions as F
+
+    from semantic_pdf_search_engine_spark.sources.index_store import compact_index
+
+    full, a, b = corpora
+    idx_full = build_index(spark, full, str(tmp_path / "f5"), stripe_docs=64)
+    build_index(spark, a, str(tmp_path / "i5"), stripe_docs=64)
+    idx = append_to_index(spark, b, str(tmp_path / "i5"))
+
+    # the tf rows a crashed third append would leave behind: real terms,
+    # doc_ids past the committed corpus
+    orphans = spark.createDataFrame(
+        idx.tf.filter(F.col("doc_id") < 100)
+        .withColumn("doc_id", F.col("doc_id") + F.lit(idx.n_docs))
+        .toPandas(),
+        schema=idx.tf.schema,
+    )
+    orphans.write.mode("append").parquet(f"{idx.index_dir}/{idx.tf_rel}")
+    assert idx.tf.filter(F.col("doc_id") >= idx.n_docs).count() > 0
+
+    idx_c = compact_index(spark, str(tmp_path / "i5"))
+    assert idx_c.n_docs == idx_full.n_docs
+    assert _block_facts(idx_c) == _block_facts(idx_full)
+
+
 def test_docs_tf_compaction_bounds_files(spark, tmp_path):
     """Sustained appends accumulate parquet files in docs/ and tf/
     forever; compact_docs_tf must fold them to the row-count target

@@ -16,21 +16,34 @@ def test_vb_roundtrip(vals):
     assert np.array_equal(codec.vb_decode(codec.vb_encode(arr)), arr)
 
 
+def _block_roundtrip(gaps, base, codec_name):
+    """Encode one block with the codec's group encoder (what the build
+    runs), decode it with decode_block (what the query kernels run)."""
+    # build a strictly increasing doc list from positive gaps
+    doc_ids = base + np.cumsum(np.array(gaps, dtype=np.int64) + 1)
+    tfs = np.arange(1, len(doc_ids) + 1, dtype=np.uint64)
+    dls = tfs * 3 + 1
+    group_encode = codec.CODECS[codec_name][0]
+    starts = np.zeros(1, dtype=np.int64)
+    ends = np.asarray([doc_ids.size], dtype=np.int64)
+    g, t, d = (
+        group_encode(arr, starts, ends)[0]
+        for arr in (codec.delta_encode(doc_ids, base), tfs, dls)
+    )
+    docs2, tfs2, dls2 = codec.decode_block(g, t, d, base, codec_name)
+    assert np.array_equal(docs2, doc_ids)
+    assert np.array_equal(tfs2.astype(np.uint64), tfs)
+    assert np.array_equal(dls2.astype(np.uint64), dls)
+
+
 @given(
     st.lists(st.integers(min_value=0, max_value=2**31), min_size=1, max_size=300),
     st.integers(min_value=0, max_value=1000),
 )
 @settings(max_examples=100, deadline=None)
 def test_block_roundtrip(gaps, base):
-    # build a strictly increasing doc list from positive gaps
-    doc_ids = base + np.cumsum(np.array(gaps, dtype=np.int64) + 1)
-    tfs = np.arange(1, len(doc_ids) + 1, dtype=np.uint64)
-    dls = tfs * 3 + 1
-    g, t, d = codec.encode_block(doc_ids, tfs, dls, base)
-    docs2, tfs2, dls2 = codec.decode_block(g, t, d, base)
-    assert np.array_equal(docs2, doc_ids)
-    assert np.array_equal(tfs2.astype(np.uint64), tfs)
-    assert np.array_equal(dls2.astype(np.uint64), dls)
+    for codec_name in ("vbyte", "auto"):
+        _block_roundtrip(gaps, base, codec_name)
 
 
 def test_empty():
@@ -87,14 +100,7 @@ def test_for_groups_equal_single(groups):
 )
 @settings(max_examples=100, deadline=None)
 def test_for_block_roundtrip(gaps, base):
-    doc_ids = base + np.cumsum(np.array(gaps, dtype=np.int64) + 1)
-    tfs = np.arange(1, len(doc_ids) + 1, dtype=np.uint64)
-    dls = tfs * 3 + 1
-    g, t, d = codec.encode_block(doc_ids, tfs, dls, base, "for")
-    docs2, tfs2, dls2 = codec.decode_block(g, t, d, base, "for")
-    assert np.array_equal(docs2, doc_ids)
-    assert np.array_equal(tfs2.astype(np.uint64), tfs)
-    assert np.array_equal(dls2.astype(np.uint64), dls)
+    _block_roundtrip(gaps, base, "for")
 
 
 def test_for_empty():

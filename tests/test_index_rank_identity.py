@@ -6,7 +6,7 @@ top-10 docIDs AND scores identical to the pinned single-node numpy
 BM25 oracle (float64, canonical term order, ties → ascending doc_id).
 
 Also: per-turn text equality after round-trip under stable ordering
-(input_hint invariant), pruned ≡ unpruned, treeReduce ≡ sort-limit.
+(input_hint invariant), pruned ≡ unpruned.
 """
 
 from __future__ import annotations
@@ -78,13 +78,6 @@ def test_pruned_equals_unpruned(spark, index, oracle):
     for q in make_queries(30)[:30:4]:
         a = _topk(score_topk(index, q, K, prune=True))
         b = _topk(score_topk(index, q, K, prune=False))
-        assert a == b, f"query={q!r}"
-
-
-def test_tree_reduce_equals_sort_limit(spark, index):
-    for q in make_queries(12)[:12:5]:
-        a = _topk(score_topk(index, q, K, use_tree_reduce=True))
-        b = _topk(score_topk(index, q, K, use_tree_reduce=False))
         assert a == b, f"query={q!r}"
 
 

@@ -133,3 +133,20 @@ def test_fuzzy_spans_no_per_call_drift(spark, sf_dir, tmp_path, monkeypatch):
     early = sum(walls[1:4]) / 3
     late = sum(walls[-3:]) / 3
     assert late <= max(2.0 * early, early + 1.0), f"wall drift: {walls}"
+
+
+def test_schema_memo_follows_in_process_rewrite(spark, tmp_path):
+    """The memoized parquet schema is keyed on the file's stat
+    signature: rewriting a table in the same process with an extra
+    column must expose that column on the next read, not the schema
+    cached from the first one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert registry._read_parquet(spark, path).columns == ["a"]
+
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    got = registry._read_parquet(spark, path).select("b").collect()
+    assert sorted(r["b"] for r in got) == ["x", "y"]
