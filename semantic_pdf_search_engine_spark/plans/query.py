@@ -3,6 +3,13 @@
 Pipeline (replacing the reference's Qdrant search,
 /root/reference/src/qdrant.rs:70-96):
 
+  0. footprint gate, before any Spark job: the query terms' df is read
+     from docfreq with pyarrow; when Σdf ≤ LOCAL_POSTINGS_CAP the query
+     is served IN PROCESS — pyarrow reads only its posting blocks and
+     the same DAAT kernel as step 4 scores them on the driver (the
+     reference answers in process too, search.rs:16-65), returning a
+     local relation that launches zero jobs. Otherwise steps 1-5 run
+     as a Spark DAG;
   1. driver tokenizes the query with the pinned tokenizer (tiny — the
      analog of in-process embed_query, /root/reference/src/embed.rs:65-78);
   2. posting scan pruned two ways: parquet partition pruning on
@@ -34,8 +41,13 @@ cannot beat the current threshold.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,7 +58,10 @@ from semantic_pdf_search_engine_spark.config import (
     SCORE_DECIMALS,
 )
 from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-from semantic_pdf_search_engine_spark.functions.rounding import round_half_up
+from semantic_pdf_search_engine_spark.functions.rounding import (
+    np_round_half_up,
+    round_half_up,
+)
 from semantic_pdf_search_engine_spark.sources.index_store import (
     InvertedIndex,
     term_bucket_of,
@@ -156,8 +171,129 @@ def _daat_stripe_topk(
 
 # Above this many member docIDs, a non-contiguous conversation's
 # membership is NOT collected to the driver as a numpy mask; the scoped
-# search falls back to an in-plan broadcast semi-join (see score_topk).
+# search falls back to an in-plan semi-join (see _spark_topk).
 NONCONTIG_MEMBERSHIP_CAP = 100_000
+
+# Σdf over the query terms up to which score_topk serves in process
+# (pyarrow block read + _daat_stripe_topk on the driver) instead of the
+# Spark DAG; it bounds the postings the driver decodes. Set from a
+# measured local-vs-Spark crossover: score_topk(...).collect(), median
+# of 3, a query of the j highest-df terms, indexes built from the
+# benchmark generator (seed 7) with 4,096-doc stripes, local[4] on
+# 4 vCPUs.
+#   89,070 turns (2.95M postings)      local ms   Spark ms
+#     j=8     Σdf    574,689               175       1248
+#     j=160   Σdf  2,064,903               937       2112
+#     j=500   Σdf  2,515,687         1969, 2311  3161, 4103
+#     j=700   Σdf  2,631,219              2962       3728
+#     j=1000  Σdf  2,745,403         3816, 4378  3758, 4362   tie
+#   449,118 turns (14.8M postings)
+#     j=10    Σdf  3,398,014               791       1866
+#     j=120   Σdf  9,752,116              2206       2975
+#     j=200   Σdf 10,882,973              4552       3961   Spark wins
+# Local cost grows with Σdf and with the block count (one Python decode
+# per block), so many-term queries cross first. The cap is the first
+# measured point where local did not win (Σdf 2.75M), rounded down.
+# Wall time, not memory, binds first: the Σdf 9.75M local query grew
+# the driver's peak RSS by ~100 MB.
+LOCAL_POSTINGS_CAP = 2_500_000
+
+_HITS = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
+
+log = logging.getLogger(__name__)
+
+
+def _local_frame(spark, schema: pa.Schema, cols: dict | None = None) -> DataFrame:
+    """≤k driver rows as a local relation: Spark reads an Arrow table
+    into a LocalRelation whose collect() launches no job — the zero-row
+    case included (a Python list, or an empty pandas frame, goes
+    through a one-job RDD path instead). Arrow-table input needs
+    PySpark ≥ 4.0, the floor pinned in pyproject.toml."""
+    table = pa.table(cols, schema=schema) if cols else schema.empty_table()
+    return spark.createDataFrame(table)
+
+
+def _log_path(path: str, reason: str, sum_df=None, block_rows=None, stripes=None):
+    log.debug(
+        "score_topk path=%s reason=%s sum_df=%s block_rows=%s stripes=%s",
+        path, reason, sum_df, block_rows, stripes,
+    )
+
+
+def _conv_scope(index: InvertedIndex, conv_id: str):
+    """conv_id → (lo, hi, ids, in_plan) from the docs table, streamed
+    in doc_id batches under a pushed `conv_id ==` filter; None when the
+    conversation is absent. For a non-contiguous conversation (count <
+    hi−lo+1) `ids` is its sorted exact membership when it has
+    ≤ NONCONTIG_MEMBERSHIP_CAP docs; above the cap `in_plan` is set
+    instead and the membership is never materialized on the driver (at
+    most the cap's worth of ids is held while streaming)."""
+    cap = NONCONTIG_MEMBERSHIP_CAP
+    lo, hi, n, kept = None, None, 0, []
+    for batch in index.arrow_dataset("docs").to_batches(
+        columns=["doc_id"], filter=ds.field("conv_id") == conv_id
+    ):
+        ids = batch.column(0).to_numpy()
+        if ids.size == 0:
+            continue
+        lo = int(ids.min()) if lo is None else min(lo, int(ids.min()))
+        hi = int(ids.max()) if hi is None else max(hi, int(ids.max()))
+        n += ids.size
+        if n <= cap:
+            kept.append(ids)
+        else:
+            kept.clear()
+    if lo is None:
+        return None
+    if n == hi - lo + 1:
+        return lo, hi, None, False
+    if n > cap:
+        return lo, hi, None, True
+    return lo, hi, np.sort(np.concatenate(kept)), False
+
+
+def _local_topk(
+    index: InvertedIndex,
+    qidf: pa.Table,
+    k: int,
+    round_scores: bool,
+    scope,
+) -> tuple[DataFrame, int, int]:
+    """score_topk served in process: pyarrow reads only the query's
+    posting blocks, `_daat_stripe_topk` scores each stripe on the
+    driver, and the stripe top-k lists merge under the Spark path's
+    order. Returns (the ≤k winners as a local relation, block rows
+    read, stripes scored). Only blocks of terms present in docfreq
+    (`qidf`) are read — the Spark path's inner join with docfreq drops
+    the rest, e.g. blocks an uncommitted append left for a new term."""
+    terms = qidf.column("term").to_pylist()
+    filt = ds.field("term_bucket").isin(sorted({term_bucket_of(t) for t in terms}))
+    filt &= ds.field("term").isin(terms)
+    scope_range = scope_ids = None
+    if scope is not None:
+        lo, hi, scope_ids, _ = scope
+        scope_range = (lo, hi)
+        filt &= (ds.field("max_doc") >= lo) & (ds.field("min_doc") <= hi)
+    blocks = index.arrow_dataset("postings").to_table(
+        columns=["term", "stripe_id", "gaps", "tfs", "dls"], filter=filt
+    ).to_pandas()
+    idf = dict(zip(qidf.column("term").to_pylist(), qidf.column("idf").to_pylist()))
+    blocks["idf"] = blocks["term"].map(idf)
+    stripes = [
+        _daat_stripe_topk(
+            pdf, index.stripe_docs, index.avgdl, k, scope_ids=scope_ids,
+            scope_range=scope_range, codec_name=index.codec,
+        )
+        for _, pdf in blocks.groupby("stripe_id", sort=False)
+    ]
+    ids = np.concatenate([np.empty(0, dtype=np.int64), *(i for i, _ in stripes)])
+    scores = np.concatenate([np.empty(0, dtype=np.float64), *(s for _, s in stripes)])
+    if round_scores:
+        # rounded before the merge, as the Spark path orders candidates
+        scores = np_round_half_up(scores, SCORE_DECIMALS)
+    top = np.lexsort((ids, -scores))[:k]
+    hits = _local_frame(index.spark, _HITS, {"doc_id": ids[top], "score": scores[top]})
+    return hits, len(blocks), len(stripes)
 
 
 def score_topk(
@@ -167,9 +303,25 @@ def score_topk(
     round_scores: bool = True,
     prune: bool = True,
     conv_id: str | None = None,
-    membership_cap: int | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) from the compressed posting blocks.
+
+    Step 0 is a footprint gate, decided before any Spark job: the query
+    terms' (term, df, idf) are read from docfreq with pyarrow. When
+    Σdf ≤ LOCAL_POSTINGS_CAP the query is served IN PROCESS — pyarrow
+    reads only the query's blocks (`term_bucket` partitions, `term`
+    filter, and for a scoped query the [lo, hi] block-range filter),
+    the shared `_daat_stripe_topk` kernel scores each stripe on the
+    driver, and the ≤k winners come back as a local relation whose
+    collect() launches no job. Scores are bit-identical to the Spark
+    path (same kernel, same stored idf, same rounding before the same
+    (score DESC, doc_id) merge); `prune` does not apply there — every
+    stripe of a bounded footprint is scored, so the answer is the
+    unpruned one. Larger footprints run the Spark DAG (steps 1-5).
+    An empty query, a query with no indexed term and an absent
+    conversation are answered empty in process. One DEBUG record per
+    call says which path ran and why, with Σdf, block rows read and
+    stripes scored (the last two only on the local path).
 
     `conv_id` scopes the search to one conversation — the reference's
     filename filter evaluated INSIDE the index (/root/reference/src/
@@ -178,14 +330,14 @@ def score_topk(
     (conv_id, turn_idx) order, so a conversation is one contiguous
     docID range; blocks whose [min_doc, max_doc] miss the range are
     skipped at the scan, and the scorer masks the range inside the
-    stripe. Contiguity is VERIFIED, not assumed: the same aggregate
-    that finds [lo, hi] also counts the conversation's docs — if
+    stripe. Contiguity is VERIFIED, not assumed: the same pass that
+    finds [lo, hi] also counts the conversation's docs — if
     count < hi−lo+1 (an append added turns to an existing conv), the
     exact docID set (bounded by the conversation's size) is collected
     and the scorer masks by membership instead of range, so docs of
     OTHER conversations inside the range are never scored into scoped
-    results. Above NONCONTIG_MEMBERSHIP_CAP member docs (override with
-    `membership_cap`) the driver collect is skipped entirely: the
+    results. Above NONCONTIG_MEMBERSHIP_CAP member docs the driver
+    collect is skipped entirely and the Spark DAG runs: the
     scorer masks by range with per-stripe truncation off, and the
     candidates are semi-joined against the conversation's doc_ids
     IN-PLAN before the global top-k (no broadcast hint — AQE picks
@@ -197,60 +349,67 @@ def score_topk(
     pruning is disabled under scope: a block's top posting may lie
     outside the range, making the lower bound unachievable in scope.
     """
-    spark = index.spark
     q_terms = sorted(set(tokenize_py(query)))
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not q_terms:
-        return empty  # empty-query guard (reference P8, search.rs:20-22)
+        # empty-query guard (reference P8, search.rs:20-22)
+        _log_path("local", "empty_query", 0, 0, 0)
+        return _local_frame(index.spark, _HITS)
+    qidf = index.arrow_dataset("docfreq").to_table(
+        columns=["term", "df", "idf"], filter=ds.field("term").isin(q_terms)
+    )
+    sum_df = int(pc.sum(qidf.column("df")).as_py() or 0)
+    scope = None
+    if sum_df and conv_id is not None:
+        scope = _conv_scope(index, conv_id)
+    if sum_df == 0 or (conv_id is not None and scope is None):
+        reason = "no_indexed_term" if sum_df == 0 else "conv_absent"
+        _log_path("local", reason, sum_df, 0, 0)
+        return _local_frame(index.spark, _HITS)
+    if sum_df > LOCAL_POSTINGS_CAP:
+        reason = f"sum_df>{LOCAL_POSTINGS_CAP}"
+    elif scope is not None and scope[3]:  # in_plan: membership above its cap
+        reason = f"scope_members>{NONCONTIG_MEMBERSHIP_CAP}"
+    else:
+        hits, block_rows, stripes = _local_topk(index, qidf, k, round_scores, scope)
+        _log_path("local", f"sum_df<={LOCAL_POSTINGS_CAP}", sum_df, block_rows, stripes)
+        return hits
+    _log_path("spark", reason, sum_df)
+    return _spark_topk(index, q_terms, k, round_scores, prune, conv_id, scope)
 
+
+def _spark_topk(
+    index: InvertedIndex,
+    q_terms: list[str],
+    k: int,
+    round_scores: bool = True,
+    prune: bool = True,
+    conv_id: str | None = None,
+    scope=None,
+) -> DataFrame:
+    """score_topk's Spark DAG over the sorted, distinct `q_terms`;
+    `scope` is `_conv_scope(index, conv_id)`."""
     scope_range: tuple[int, int] | None = None
     scope_ids: np.ndarray | None = None
     scope_semi: DataFrame | None = None
-    if conv_id is not None:
-        row = (
-            index.docs.filter(F.col("conv_id") == conv_id)
-            .agg(
-                F.min("doc_id").alias("lo"),
-                F.max("doc_id").alias("hi"),
-                F.count("*").alias("n"),
-            )
-            .collect()[0]
-        )
-        if row["lo"] is None:
-            return empty
-        scope_range = (int(row["lo"]), int(row["hi"]))
-        if int(row["n"]) != scope_range[1] - scope_range[0] + 1:
-            cap = NONCONTIG_MEMBERSHIP_CAP if membership_cap is None else membership_cap
-            if int(row["n"]) <= cap:
-                # non-contiguous conversation: exact membership mask,
-                # bounded by one conversation's size (≤ cap)
-                scope_ids = np.array(
-                    sorted(
-                        r["doc_id"]
-                        for r in index.docs.filter(F.col("conv_id") == conv_id)
-                        .select("doc_id")
-                        .collect()
-                    ),
-                    dtype=np.int64,
-                )
-            else:
-                # pathological million-turn conversation: keep the
-                # membership IN-PLAN — the scorer masks by the [lo, hi]
-                # range only and skips per-stripe truncation (a range hit
-                # outside the membership must not displace a member from
-                # a stripe's local top-k), then the candidate set is
-                # semi-joined against the conversation's doc_ids before
-                # the global top-k. NO broadcast hint: a forced
-                # F.broadcast would collect the membership to the driver
-                # to build the broadcast relation — the exact
-                # data-shaped driver materialization this fallback
-                # exists to avoid (and past Spark's 8 GB broadcast cap
-                # it would fail outright instead of degrading). Left as
-                # a plain join, AQE broadcasts it only when its measured
-                # size is safely small and shuffles otherwise.
-                scope_semi = index.docs.filter(
-                    F.col("conv_id") == conv_id
-                ).select("doc_id")
+    if scope is not None:
+        lo, hi, scope_ids, in_plan = scope
+        scope_range = (lo, hi)
+        if in_plan:
+            # pathological million-turn conversation: keep the
+            # membership IN-PLAN — the scorer masks by the [lo, hi]
+            # range only and skips per-stripe truncation (a range hit
+            # outside the membership must not displace a member from
+            # a stripe's local top-k), then the candidate set is
+            # semi-joined against the conversation's doc_ids before
+            # the global top-k. NO broadcast hint: a forced
+            # F.broadcast would collect the membership to the driver
+            # to build the broadcast relation — the exact
+            # data-shaped driver materialization this fallback
+            # exists to avoid (and past Spark's 8 GB broadcast cap
+            # it would fail outright instead of degrading). Left as
+            # a plain join, AQE broadcasts it only when its measured
+            # size is safely small and shuffles otherwise.
+            scope_semi = index.docs.filter(F.col("conv_id") == conv_id).select("doc_id")
         prune = False  # lb not achievable-in-scope; range skipping below
 
     buckets = sorted({term_bucket_of(t) for t in q_terms})
@@ -332,18 +491,18 @@ def score_topk_batch(
       * per-(query, stripe) DAAT scoring in one applyInPandas, then a
         per-query window top-k.
 
-    At 20 queries this replaces 20×(scan+schedule) with one DAG —
-    scheduling dominates warm-index latency at sandbox scale, so the
-    amortized per-query cost drops well under the single-query p50
-    (measured in bench.py as query_batch_per_query)."""
+    At 20 queries this replaces 20×(scan+schedule) of the Spark
+    single-query DAG with one DAG (measured in bench.py as
+    query_batch_per_query). Small-footprint single queries skip
+    scheduling altogether (score_topk's in-process path); at the serve
+    benchmark's scale their p50 is about the batch's per-query cost."""
     from pyspark.sql.window import Window
 
     spark = index.spark
     qterms = {qi: sorted(set(tokenize_py(q))) for qi, q in enumerate(queries)}
     pairs = [(qi, t) for qi, ts in qterms.items() for t in ts]
-    empty = spark.createDataFrame([], "query_id int, doc_id long, score double")
     if not pairs:
-        return empty
+        return _local_frame(spark, pa.schema([("query_id", pa.int32()), *_HITS]))
 
     all_terms = sorted({t for _, t in pairs})
     buckets = sorted({term_bucket_of(t) for t in all_terms})
@@ -415,12 +574,12 @@ def search(
     shape joined the live score_topk plan, re-scoring on materialize)."""
     rows = score_topk(index, query, k, **kw).collect()
     if not rows:
-        return index.spark.createDataFrame(
-            [], "doc_id long, score double, conv_id string, turn_idx int, text string"
-        )
-    hits = index.spark.createDataFrame(
-        [(int(r["doc_id"]), float(r["score"])) for r in rows],
-        "doc_id long, score double",
+        payload = [("conv_id", pa.string()), ("turn_idx", pa.int32()), ("text", pa.string())]
+        return _local_frame(index.spark, pa.schema([*_HITS, *payload]))
+    hits = _local_frame(
+        index.spark,
+        _HITS,
+        {"doc_id": [r["doc_id"] for r in rows], "score": [r["score"] for r in rows]},
     )
     docs = index.fetch_docs([r["doc_id"] for r in rows]).select(
         "doc_id", "conv_id", "turn_idx", "text"
@@ -475,7 +634,7 @@ def more_like_this_indexed(
         .collect()
     ]
     if not terms:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return _local_frame(index.spark, _HITS)
     winners = score_topk(index, " ".join(terms), k + 1)
     if id_col == "doc_id":
         return (

@@ -338,6 +338,24 @@ class InvertedIndex:
             return self.spark.read.parquet(*self.docfreq_files)
         return self.spark.read.parquet(self.docfreq_path)
 
+    def arrow_dataset(self, table: str):
+        """Index table `table` ("postings", "docfreq", "docs", …) as a
+        pyarrow dataset over the files the Spark read of that table
+        resolves to: a snapshot handle's exact file list, else the
+        current `*_rel` directory. Postings keep their `term_bucket`
+        partition column (hive partitioning based at the postings dir —
+        the pyarrow twin of the Spark read's basePath)."""
+        import pyarrow.dataset as ds
+
+        files = getattr(self, f"{table}_files")
+        src = files if files is not None else f"{self.index_dir}/{getattr(self, f'{table}_rel')}"
+        if table != "postings":
+            return ds.dataset(src, format="parquet")
+        return ds.dataset(
+            src, format="parquet", partitioning="hive",
+            partition_base_dir=self.postings_path,
+        )
+
     @property
     def postings(self) -> DataFrame:
         if self._postings_cached is not None:
@@ -356,7 +374,9 @@ class InvertedIndex:
         parquet re-reads are a cold-start artifact). Lazy on first use.
 
         `warm=True` additionally runs ONE throwaway top-k query through
-        the full serving plan — Lucene's searcher-warming posture
+        the Spark serving plan (the one large-footprint queries take;
+        small ones are served in process and need no warming) —
+        Lucene's searcher-warming posture
         (IndexWriter.IndexReaderWarmer / warming queries on a new
         searcher): the first few queries on a fresh session otherwise
         pay whole-stage-codegen compilation, Python-worker pool
@@ -375,10 +395,10 @@ class InvertedIndex:
             row = self._docfreq_cached.select("term").head(1)
             if row:
                 from semantic_pdf_search_engine_spark.plans.query import (
-                    score_topk,
+                    _spark_topk,
                 )
 
-                score_topk(self, row[0]["term"], 10).collect()
+                _spark_topk(self, [row[0]["term"]], 10).collect()
         return self
 
     def unpersist(self) -> "InvertedIndex":

@@ -21,3 +21,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def both_paths():
+    """`for path in both_paths():` runs a test body once per score_topk
+    path: "local" at the default LOCAL_POSTINGS_CAP (every fixture-scale
+    query fits under it), then "spark" with the cap at 0, which forces
+    the Spark DAG — without that pass the Spark path's properties would
+    go untested at fixture scale. The cap is restored after each loop
+    and at teardown."""
+    from semantic_pdf_search_engine_spark.plans import query
+
+    cap = query.LOCAL_POSTINGS_CAP
+
+    def paths():
+        for path, c in (("local", cap), ("spark", 0)):
+            query.LOCAL_POSTINGS_CAP = c
+            yield path
+        query.LOCAL_POSTINGS_CAP = cap
+
+    yield paths
+    query.LOCAL_POSTINGS_CAP = cap

@@ -6,10 +6,15 @@ top-10 docIDs AND scores identical to the pinned single-node numpy
 BM25 oracle (float64, canonical term order, ties → ascending doc_id).
 
 Also: per-turn text equality after round-trip under stable ordering
-(input_hint invariant), pruned ≡ unpruned.
+(input_hint invariant), pruned ≡ unpruned, and the in-process serving
+path ≡ the Spark DAG, bit for bit.
 """
 
 from __future__ import annotations
+
+import logging
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +22,7 @@ from pyspark.sql import functions as F
 from semantic_pdf_search_engine_spark.config import SCORE_DECIMALS
 from semantic_pdf_search_engine_spark.fixtures import make_queries, make_transcripts
 from semantic_pdf_search_engine_spark.oracle import BM25Oracle
+from semantic_pdf_search_engine_spark.plans import query
 from semantic_pdf_search_engine_spark.plans.query import score_topk, search
 from semantic_pdf_search_engine_spark.sources.index_store import build_index
 
@@ -65,20 +71,23 @@ def test_round_trip_text_equality(spark, corpus, index):
 
 
 @pytest.mark.parametrize("qi", range(0, 60, 3))
-def test_rank_identity(spark, index, oracle, qi):
+def test_rank_identity(spark, index, oracle, both_paths, qi):
     q = make_queries(100)[qi]
-    got = _topk(score_topk(index, q, K, round_scores=False))
     want = oracle.top_k(q, K)
-    assert [d for d, _ in got] == [d for d, _ in want], f"query={q!r}"
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert abs(gs - ws) < 1e-9, f"query={q!r} doc={gd}: {gs} != {ws}"
+    # the Spark DAG on a subset: the local path runs every query
+    for path in both_paths() if qi % 12 == 0 else ["local"]:
+        got = _topk(score_topk(index, q, K, round_scores=False))
+        assert [d for d, _ in got] == [d for d, _ in want], f"{path} query={q!r}"
+        for (gd, gs), (wd, ws) in zip(got, want):
+            assert abs(gs - ws) < 1e-9, f"{path} query={q!r} doc={gd}: {gs} != {ws}"
 
 
-def test_pruned_equals_unpruned(spark, index, oracle):
-    for q in make_queries(30)[:30:4]:
-        a = _topk(score_topk(index, q, K, prune=True))
-        b = _topk(score_topk(index, q, K, prune=False))
-        assert a == b, f"query={q!r}"
+def test_pruned_equals_unpruned(spark, index, oracle, both_paths):
+    for path in both_paths():
+        for q in make_queries(30)[:30:4]:
+            a = _topk(score_topk(index, q, K, prune=True))
+            b = _topk(score_topk(index, q, K, prune=False))
+            assert a == b, f"{path} query={q!r}"
 
 
 def test_search_returns_text(spark, index):
@@ -103,7 +112,7 @@ def test_empty_and_absent(spark, index):
     assert score_topk(index, "zzzznotaword").count() == 0
 
 
-def test_scoped_search_matches_oracle(spark, index, oracle):
+def test_scoped_search_matches_oracle(spark, index, oracle, both_paths):
     """Conv-scoped search (reference filename filter inside the index,
     qdrant.rs:84-90): global stats, candidates restricted to one conv's
     contiguous docID range."""
@@ -114,25 +123,27 @@ def test_scoped_search_matches_oracle(spark, index, oracle):
         .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
         .collect()
     }
-    for conv in convs:
-        q = make_queries(10)[2]  # hot term → matches in most convs
-        got = _topk(score_topk(index, q, K, round_scores=False, conv_id=conv))
-        lo, hi = ranges[conv]
-        scores = oracle.score_all(q)
-        want = sorted(
-            ((d, s) for d, s in scores.items() if lo <= d <= hi),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[:K]
-        assert [d for d, _ in got] == [d for d, _ in want], conv
-        for (gd, gs), (_, ws) in zip(got, want):
-            assert abs(gs - ws) < 1e-9
+    q = make_queries(10)[2]  # hot term → matches in most convs
+    scores = oracle.score_all(q)
+    for path in both_paths():
+        for conv in convs:
+            got = _topk(score_topk(index, q, K, round_scores=False, conv_id=conv))
+            lo, hi = ranges[conv]
+            want = sorted(
+                ((d, s) for d, s in scores.items() if lo <= d <= hi),
+                key=lambda kv: (-kv[1], kv[0]),
+            )[:K]
+            assert [d for d, _ in got] == [d for d, _ in want], (path, conv)
+            for (gd, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) < 1e-9
 
 
-def test_scoped_search_missing_conv(spark, index):
-    assert score_topk(index, make_queries(3)[2], K, conv_id="convNOPE").count() == 0
+def test_scoped_search_missing_conv(spark, index, both_paths):
+    for path in both_paths():
+        assert score_topk(index, make_queries(3)[2], K, conv_id="convNOPE").count() == 0, path
 
 
-def test_batch_equals_single_query(spark, index):
+def test_batch_equals_single_query(spark, index, both_paths):
     """score_topk_batch must return, per query, EXACTLY the single-query
     score_topk answer (ids and scores) — pruned and unpruned — with
     empty/absent queries simply absent from the output."""
@@ -144,10 +155,85 @@ def test_batch_equals_single_query(spark, index):
         rows = score_topk_batch(index, queries, 10, prune=prune).collect()
         for r in rows:
             got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-        for qi, q in enumerate(queries):
-            want = _topk(score_topk(index, q, 10, prune=prune))
-            have = sorted(got.get(qi, []), key=lambda t: (-t[1], t[0]))
-            assert have == sorted(want, key=lambda t: (-t[1], t[0])), (prune, q)
+        for path in both_paths():
+            for qi, q in enumerate(queries):
+                want = _topk(score_topk(index, q, 10, prune=prune))
+                have = sorted(got.get(qi, []), key=lambda t: (-t[1], t[0]))
+                assert have == sorted(want, key=lambda t: (-t[1], t[0])), (path, prune, q)
+
+
+@pytest.mark.parametrize("round_scores", [True, False])
+def test_local_path_equals_spark_path(spark, index, both_paths, round_scores):
+    """The in-process path runs the Spark path's kernel on the same
+    stored idf and rounds before the same merge, so its answers are
+    bit-identical (==, no tolerance), scoped and unscoped."""
+    convs = [None] + [
+        r["conv_id"] for r in index.docs.select("conv_id").distinct().limit(2).collect()
+    ]
+    cases = [(q, c) for q in make_queries(40)[::5] for c in convs]
+    got = {
+        path: [
+            _topk(score_topk(index, q, K, round_scores=round_scores, conv_id=c))
+            for q, c in cases
+        ]
+        for path in both_paths()
+    }
+    assert sum(map(len, got["local"])) > 0
+    assert got["local"] == got["spark"]
+
+
+def _jobs_launched(spark, action) -> int:
+    """Spark jobs `action` launches, counted under its own job group.
+    The status tracker is fed asynchronously; a sentinel job run after
+    the action is waited for, and listener events arrive in order."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, sentinel = f"count-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(group, group)
+        action()
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_small_footprint_query_launches_no_jobs(spark, index, both_paths):
+    """A small-footprint query and an empty answer are served in
+    process: collect() launches no Spark job. With the cap at 0 the
+    same query takes the Spark DAG and does launch jobs."""
+    q = make_queries(10)[2]
+    for path in both_paths():
+        n_query = _jobs_launched(spark, lambda: score_topk(index, q, K).collect())
+        n_empty = _jobs_launched(spark, lambda: score_topk(index, "zzzznotaword", K).collect())
+        assert n_empty == 0, path
+        if path == "local":
+            assert n_query == 0
+        else:
+            assert n_query > 0
+
+
+def test_path_is_logged(spark, index, both_paths, caplog):
+    """One DEBUG record per score_topk call: which path ran and why,
+    with Σdf, block rows read and stripes scored."""
+    q = make_queries(10)[2]
+    with caplog.at_level(logging.DEBUG, logger=query.__name__):
+        for path in both_paths():
+            caplog.clear()
+            score_topk(index, q, K).collect()
+            (msg,) = [r.getMessage() for r in caplog.records if r.name == query.__name__]
+            rec = dict(kv.split("=", 1) for kv in msg.split()[1:])
+            assert rec["path"] == path
+            assert int(rec["sum_df"]) > 0
+            if path == "local":
+                assert rec["reason"].startswith("sum_df<=")
+                assert int(rec["block_rows"]) > 0 and int(rec["stripes"]) > 0
+            else:
+                assert rec["reason"] == "sum_df>0"
 
 
 def test_more_like_this_indexed_equals_relational(spark, tmp_path_factory):

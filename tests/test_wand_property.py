@@ -29,7 +29,7 @@ def _random_corpus(seed: int, n_docs: int):
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_engine_equals_brute_equals_oracle(spark, tmp_path, seed):
+def test_engine_equals_brute_equals_oracle(spark, tmp_path, both_paths, seed):
     rows = _random_corpus(seed, n_docs=60)
     df = spark.createDataFrame(
         rows,
@@ -44,14 +44,15 @@ def test_engine_equals_brute_equals_oracle(spark, tmp_path, seed):
     for _ in range(4):
         k = int(rng.integers(1, 4))
         q = " ".join(rng.choice(WORDS, size=k, replace=False))
-        engine = [
-            (r["doc_id"], r["score"])
-            for r in score_topk(idx, q, 10, round_scores=False).collect()
-        ]
         want = oracle.top_k(q, 10)
-        assert [d for d, _ in engine] == [d for d, _ in want], f"q={q!r}"
-        for (gd, gs), (_, ws) in zip(engine, want):
-            assert abs(gs - ws) < 1e-9
+        for path in both_paths():
+            engine = [
+                (r["doc_id"], r["score"])
+                for r in score_topk(idx, q, 10, round_scores=False).collect()
+            ]
+            assert [d for d, _ in engine] == [d for d, _ in want], f"{path} q={q!r}"
+            for (gd, gs), (_, ws) in zip(engine, want):
+                assert abs(gs - ws) < 1e-9
         brute = [
             (r["doc_id"], r["score"])
             for r in bm25_topk(
