@@ -3,35 +3,37 @@
 Pipeline (replacing the reference's Qdrant search,
 /root/reference/src/qdrant.rs:70-96):
 
-  0. footprint gate, before any Spark job: the query terms' df is read
-     from docfreq with pyarrow; when Σdf ≤ LOCAL_POSTINGS_CAP the query
-     is served IN PROCESS — pyarrow reads only its posting blocks and
-     the same DAAT kernel as step 4 scores them on the driver (the
-     reference answers in process too, search.rs:16-65), returning a
-     local relation that launches zero jobs. Otherwise steps 1-5 run
-     as a Spark DAG;
+  0. footprint gate (score_topk), before any Spark job: the query
+     terms' df is read from docfreq with pyarrow; when
+     Σdf ≤ LOCAL_POSTINGS_CAP the query is served IN PROCESS — pyarrow
+     reads only its posting blocks and the same DAAT kernel as step 4
+     scores them on the driver (the reference answers in process too,
+     search.rs:16-65), returning a local relation that launches zero
+     jobs. Otherwise steps 1-5 run as ONE Spark DAG for one or many
+     queries (`_candidates`; score_topk is a batch of one);
   1. driver tokenizes the query with the pinned tokenizer (tiny — the
      analog of in-process embed_query, /root/reference/src/embed.rs:65-78);
-  2. posting scan pruned two ways: parquet partition pruning on
-     `term_bucket` (buckets computed driver-side from the query terms,
-     pushed as a partition filter) + row-group min/max skipping on
-     `term`;
-  3. **stripe pruning (block-max)**: per stripe, bounds recomputed
-     from RAW block facts under CURRENT stats —
+  2. posting scan over the union of the queries' terms, pruned two
+     ways: parquet partition pruning on `term_bucket` (buckets computed
+     driver-side from the terms, pushed as a partition filter) +
+     row-group min/max skipping on `term`; idf and the queries'
+     (query_id, term) pairs are broadcast-joined onto the blocks;
+  3. **stripe pruning (block-max)**: per (query, stripe), bounds
+     recomputed from RAW block facts under CURRENT stats —
      ub = Σ_terms idf·contrib(max_tf, dl→0) (no doc can beat it);
      lb = max_terms idf·contrib(top_tf, top_dl) (achievable: (top_tf,
      top_dl) is a real stored posting, so some doc in the stripe scores
-     ≥ lb). Threshold T = k-th largest lb across stripes — at least k
-     distinct docs (one per stripe) score ≥ T, so any stripe with
-     ub < T cannot contribute to the top k. The lb top-k is a tiny
-     TakeOrdered over stripe metadata; the kept-stripe set is
-     broadcast back.
-  4. per-stripe document-at-a-time scoring in one Arrow UDF: decode
-     blocks, dense float64 accumulation over the ≤STRIPE_DOCS-wide
+     ≥ lb). Threshold T = k-th largest lb across the query's stripes —
+     at least k distinct docs (one per stripe) score ≥ T, so any stripe
+     with ub < T cannot contribute to the top k. T is a window over the
+     tiny (query, stripe) metadata; the kept set is broadcast back.
+  4. per-(query, stripe) document-at-a-time scoring in one Arrow UDF:
+     decode blocks, dense float64 accumulation over the ≤STRIPE_DOCS-wide
      doc range in canonical (sorted-term) order — bit-identical to the
      numpy oracle's summation order — emit the stripe-local top-k;
-  5. global merge: candidates ≤ (#stripes_kept × k) rows —
-     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k).
+  5. merge: candidates ≤ (#stripes_kept × k) rows per query —
+     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k) for
+     score_topk, a per-query row_number window for score_topk_batch.
 
 Stripe-level block-max pruning is the engine's moral twin of the
 reference's anchor-based candidate pruning before expensive scoring
@@ -70,8 +72,7 @@ from semantic_pdf_search_engine_spark.sources.index_store import (
 
 def _bm25_bounds(avgdl: float):
     """(ub, lb) Column exprs over a block's RAW posting facts under
-    CURRENT stats — ONE definition shared by the single-query and batch
-    paths (they must stay bit-identical for batch ≡ single to hold):
+    CURRENT stats:
 
       ub: dl→0 limit of the contribution at the block's max tf — no
           posting can exceed it under any dl;
@@ -90,20 +91,20 @@ def _bm25_bounds(avgdl: float):
     return ub, lb
 
 
-def _kept_stripes(meta: DataFrame, k: int, keys: tuple[str, ...] = ()) -> DataFrame:
-    """Stripes whose ub can reach the k-th-largest lb threshold, per
-    `keys` group (empty keys = one global group). The threshold stays
-    IN-PLAN — two windows over the stripe-METADATA rows (#stripes per
-    group, tiny) instead of a driver collect + second plan compile.
-    _t is NULL when a group has fewer than k stripes ⇒ no valid
-    threshold ⇒ nothing pruned. The 1e-12 relative shave is the
+def _kept_stripes(meta: DataFrame, k: int) -> DataFrame:
+    """(query_id, stripe_id) whose ub can reach the query's
+    k-th-largest lb threshold. The threshold stays IN-PLAN — two
+    windows over the stripe-METADATA rows (#stripes per query, tiny)
+    instead of a driver collect + second plan compile. _t is NULL when
+    a query has fewer than k stripes ⇒ no valid threshold ⇒ nothing
+    pruned. The 1e-12 relative shave is the
     cross-runtime (JVM lb vs numpy scores) 1-ulp guard."""
     from pyspark.sql.window import Window
 
     rnk = F.row_number().over(
-        Window.partitionBy(*keys).orderBy(F.col("lb").desc())
+        Window.partitionBy("query_id").orderBy(F.col("lb").desc())
     )
-    wall = Window.partitionBy(*keys).rowsBetween(
+    wall = Window.partitionBy("query_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     return (
@@ -112,7 +113,7 @@ def _kept_stripes(meta: DataFrame, k: int, keys: tuple[str, ...] = ()) -> DataFr
         .filter(
             F.col("_t").isNull() | (F.col("ub") >= F.col("_t") * (1.0 - 1e-12))
         )
-        .select(*keys, "stripe_id")
+        .select("query_id", "stripe_id")
     )
 
 
@@ -126,7 +127,7 @@ def _daat_stripe_topk(
     codec_name: str = "vbyte",
 ):
     """The per-stripe DAAT scoring kernel — ONE definition shared by the
-    single-query and batch paths: decode blocks, dense float64
+    in-process and Spark paths: decode blocks, dense float64
     accumulation in canonical (sorted-term) order — bit-identical to
     the numpy oracle's summation order — stripe-local top-k with doc_id
     tie-break. Returns (doc_id int64 array, score float64 array)."""
@@ -171,7 +172,7 @@ def _daat_stripe_topk(
 
 # Above this many member docIDs, a non-contiguous conversation's
 # membership is NOT collected to the driver as a numpy mask; the scoped
-# search falls back to an in-plan semi-join (see _spark_topk).
+# search falls back to an in-plan semi-join (see _candidates).
 NONCONTIG_MEMBERSHIP_CAP = 100_000
 
 # Σdf over the query terms up to which score_topk serves in process
@@ -204,10 +205,12 @@ log = logging.getLogger(__name__)
 
 
 def _local_frame(spark, schema: pa.Schema, cols: dict | None = None) -> DataFrame:
-    """≤k driver rows as a local relation: Spark reads an Arrow table
-    into a LocalRelation whose collect() launches no job — the zero-row
-    case included (a Python list, or an empty pandas frame, goes
-    through a one-job RDD path instead). Arrow-table input needs
+    """Driver rows (≤k results, a query map) as a local relation: Spark
+    reads an Arrow table into a LocalRelation whose collect() launches
+    no job — the zero-row case included (a Python list, or an empty
+    pandas frame, goes through an RDD path instead: one job to collect,
+    and a Python-worker job each time a plan broadcasts it, about 2 s
+    a query on local[4], 4 vCPUs). Arrow-table input needs
     PySpark ≥ 4.0, the floor pinned in pyproject.toml."""
     table = pa.table(cols, schema=schema) if cols else schema.empty_table()
     return spark.createDataFrame(table)
@@ -317,11 +320,14 @@ def score_topk(
     path (same kernel, same stored idf, same rounding before the same
     (score DESC, doc_id) merge); `prune` does not apply there — every
     stripe of a bounded footprint is scored, so the answer is the
-    unpruned one. Larger footprints run the Spark DAG (steps 1-5).
+    unpruned one. Larger footprints run score_topk_batch's Spark DAG
+    (steps 2-4, `_candidates`) as a batch of one query, merged by
+    ORDER BY score DESC, doc_id LIMIT k (TakeOrderedAndProject).
     An empty query, a query with no indexed term and an absent
     conversation are answered empty in process. One DEBUG record per
     call says which path ran and why, with Σdf, block rows read and
-    stripes scored (the last two only on the local path).
+    stripes scored (the last two only on the local path). k < 0 raises
+    ValueError; k = 0 is an empty answer.
 
     `conv_id` scopes the search to one conversation — the reference's
     filename filter evaluated INSIDE the index (/root/reference/src/
@@ -349,6 +355,8 @@ def score_topk(
     pruning is disabled under scope: a block's top posting may lie
     outside the range, making the lower bound unachievable in scope.
     """
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
         # empty-query guard (reference P8, search.rs:20-22)
@@ -374,26 +382,44 @@ def score_topk(
         _log_path("local", f"sum_df<={LOCAL_POSTINGS_CAP}", sum_df, block_rows, stripes)
         return hits
     _log_path("spark", reason, sum_df)
-    return _spark_topk(index, q_terms, k, round_scores, prune, conv_id, scope)
+    pairs = [(0, t) for t in q_terms]
+    return (
+        _candidates(index, pairs, k, round_scores, prune, conv_id, scope)
+        .select("doc_id", "score")
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+    )
 
 
-def _spark_topk(
+def _candidates(
     index: InvertedIndex,
-    q_terms: list[str],
+    pairs: list[tuple[int, str]],
     k: int,
-    round_scores: bool = True,
-    prune: bool = True,
+    round_scores: bool,
+    prune: bool,
     conv_id: str | None = None,
     scope=None,
 ) -> DataFrame:
-    """score_topk's Spark DAG over the sorted, distinct `q_terms`;
-    `scope` is `_conv_scope(index, conv_id)`."""
+    """Steps 2-4 for the queries' (query_id, term) pairs: rounded
+    (query_id, doc_id, score) stripe-local top-k candidates, which each
+    caller merges into its top-k. `scope` is `_conv_scope(index,
+    conv_id)` of a single query. Absent terms simply don't join the
+    broadcast docfreq; a block row used by m queries is duplicated m×
+    by the broadcast query map (block rows are compact; the
+    alternative is m scans)."""
     scope_range: tuple[int, int] | None = None
     scope_ids: np.ndarray | None = None
     scope_semi: DataFrame | None = None
+    terms = sorted({t for _, t in pairs})
+    buckets = sorted({term_bucket_of(t) for t in terms})
+    blocks = index.postings.filter(
+        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+    )
     if scope is not None:
         lo, hi, scope_ids, in_plan = scope
         scope_range = (lo, hi)
+        # block-range skipping: pushed to the scan via min/max stats
+        blocks = blocks.filter((F.col("max_doc") >= lo) & (F.col("min_doc") <= hi))
         if in_plan:
             # pathological million-turn conversation: keep the
             # membership IN-PLAN — the scorer masks by the [lo, hi]
@@ -410,38 +436,26 @@ def _spark_topk(
             # a plain join, AQE broadcasts it only when its measured
             # size is safely small and shuffles otherwise.
             scope_semi = index.docs.filter(F.col("conv_id") == conv_id).select("doc_id")
-        prune = False  # lb not achievable-in-scope; range skipping below
-
-    buckets = sorted({term_bucket_of(t) for t in q_terms})
-    qblocks = index.postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(q_terms)
+        prune = False  # lb not achievable-in-scope; range skipping above
+    qidf = index.docfreq.filter(F.col("term").isin(terms)).select("term", "idf")
+    qmap = _local_frame(
+        index.spark,
+        pa.schema([("query_id", pa.int32()), ("term", pa.string())]),
+        {"query_id": [q for q, _ in pairs], "term": [t for _, t in pairs]},
     )
-    if scope_range is not None:
-        lo, hi = scope_range
-        # block-range skipping: pushed to the scan via min/max stats
-        qblocks = qblocks.filter(
-            (F.col("max_doc") >= lo) & (F.col("min_doc") <= hi)
-        )
-    # idf arrives by broadcast-joining the (cached/vocab-sized) docfreq
-    # restricted to the query terms — NOT a per-query driver collect:
-    # this drops one Spark job per query (scheduling dominates latency
-    # at serving scale; fresh stored idf stays valid across appends).
-    # Absent terms simply don't join; an all-absent query falls through
-    # to an empty candidate set.
-    qidf = index.docfreq.filter(F.col("term").isin(q_terms)).select("term", "idf")
-    qblocks = qblocks.join(F.broadcast(qidf), "term")
+    qblocks = blocks.join(F.broadcast(qidf), "term").join(F.broadcast(qmap), "term")
 
     avgdl = index.avgdl
+    stripe_docs = index.stripe_docs
+    codec_name = index.codec
 
     if prune:
         ub, lb = _bm25_bounds(avgdl)
-        meta = qblocks.groupBy("stripe_id").agg(
+        meta = qblocks.groupBy("query_id", "stripe_id").agg(
             F.sum(ub).alias("ub"), F.max(lb).alias("lb")
         )
-        qblocks = qblocks.join(F.broadcast(_kept_stripes(meta, k)), "stripe_id")
-
-    stripe_docs = index.stripe_docs
-    codec_name = index.codec
+        kept = _kept_stripes(meta, k)
+        qblocks = qblocks.join(F.broadcast(kept), ["query_id", "stripe_id"])
 
     # semi-join fallback: per-stripe truncation OFF (k_local = the
     # stripe width, so every in-range hit survives to the join) —
@@ -453,10 +467,11 @@ def _spark_topk(
             pdf, stripe_docs, avgdl, k_local, scope_ids=scope_ids,
             scope_range=scope_range, codec_name=codec_name,
         )
-        return pd.DataFrame({"doc_id": ids, "score": s})
+        qid = np.full(ids.size, pdf["query_id"].iloc[0], dtype="int32")
+        return pd.DataFrame({"query_id": qid, "doc_id": ids, "score": s})
 
-    candidates = qblocks.groupBy("stripe_id").applyInPandas(
-        score_stripe, schema="doc_id long, score double"
+    candidates = qblocks.groupBy("query_id", "stripe_id").applyInPandas(
+        score_stripe, schema="query_id int, doc_id long, score double"
     )
     if scope_semi is not None:
         candidates = candidates.join(scope_semi, "doc_id", "left_semi")
@@ -464,7 +479,7 @@ def _spark_topk(
         candidates = candidates.withColumn(
             "score", round_half_up(F.col("score"), SCORE_DECIMALS)
         )
-    return candidates.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return candidates
 
 
 def score_topk_batch(
@@ -477,76 +492,26 @@ def score_topk_batch(
     """(query_id, doc_id, score): top-k for MANY queries in ONE job —
     the amortized serving shape (query replay, offline evaluation,
     batch retrieval for a training pipeline). query_id = position in
-    `queries`.
+    `queries`; empty and absent queries are absent from the output.
 
-    Identical per-query results to score_topk (pinned by test), but the
-    postings scan happens ONCE for the union of all query terms:
-
-      * the (query_id, term) map is broadcast and joined onto the
-        blocks — a block row used by m queries is duplicated m× (block
-        rows are compact; the alternative is m scans);
-      * block-max stripe pruning runs PER QUERY via windows partitioned
-        by query_id over the (query, stripe) metadata — each query gets
-        exactly the threshold the single-query path computes;
-      * per-(query, stripe) DAAT scoring in one applyInPandas, then a
-        per-query window top-k.
-
-    At 20 queries this replaces 20×(scan+schedule) of the Spark
-    single-query DAG with one DAG (measured in bench.py as
-    query_batch_per_query). Small-footprint single queries skip
+    Identical per-query results to score_topk (pinned by test): the
+    candidates come from `_candidates`, the DAG score_topk's
+    large-footprint path runs as a batch of one (steps 2-4, ONE
+    postings scan over the union of all query terms), merged by a
+    per-query window top-k. Small-footprint single queries skip
     scheduling altogether (score_topk's in-process path); at the serve
-    benchmark's scale their p50 is about the batch's per-query cost."""
+    benchmark's scale their p50 is about the batch's per-query cost.
+    k < 0 raises ValueError; k = 0 is an empty answer."""
     from pyspark.sql.window import Window
 
-    spark = index.spark
-    qterms = {qi: sorted(set(tokenize_py(q))) for qi, q in enumerate(queries)}
-    pairs = [(qi, t) for qi, ts in qterms.items() for t in ts]
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    pairs = [
+        (qi, t) for qi, q in enumerate(queries) for t in sorted(set(tokenize_py(q)))
+    ]
     if not pairs:
-        return _local_frame(spark, pa.schema([("query_id", pa.int32()), *_HITS]))
-
-    all_terms = sorted({t for _, t in pairs})
-    buckets = sorted({term_bucket_of(t) for t in all_terms})
-    blocks = index.postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(all_terms)
-    )
-    qidf = index.docfreq.filter(F.col("term").isin(all_terms)).select("term", "idf")
-    blocks = blocks.join(F.broadcast(qidf), "term")
-    qmap = spark.createDataFrame(pairs, "query_id int, term string")
-    qblocks = blocks.join(F.broadcast(qmap), "term")
-
-    avgdl = index.avgdl
-    stripe_docs = index.stripe_docs
-
-    if prune:
-        # the SAME bounds/threshold/guard as score_topk (_bm25_bounds /
-        # _kept_stripes), thresholded per query via the keys argument
-        ub, lb = _bm25_bounds(avgdl)
-        meta = qblocks.groupBy("query_id", "stripe_id").agg(
-            F.sum(ub).alias("ub"), F.max(lb).alias("lb")
-        )
-        kept = _kept_stripes(meta, k, keys=("query_id",))
-        qblocks = qblocks.join(F.broadcast(kept), ["query_id", "stripe_id"])
-
-    codec_name = index.codec
-
-    def score_stripe_q(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        ids, s = _daat_stripe_topk(pdf, stripe_docs, avgdl, k, codec_name=codec_name)
-        return pd.DataFrame(
-            {
-                "query_id": np.full(ids.size, qid, dtype="int32"),
-                "doc_id": ids,
-                "score": s,
-            }
-        )
-
-    candidates = qblocks.groupBy("query_id", "stripe_id").applyInPandas(
-        score_stripe_q, schema="query_id int, doc_id long, score double"
-    )
-    if round_scores:
-        candidates = candidates.withColumn(
-            "score", round_half_up(F.col("score"), SCORE_DECIMALS)
-        )
+        return _local_frame(index.spark, pa.schema([("query_id", pa.int32()), *_HITS]))
+    candidates = _candidates(index, pairs, k, round_scores, prune)
     wfin = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )

@@ -368,14 +368,14 @@ class InvertedIndex:
             return self._docfreq_cached
         return self._read_docfreq()
 
-    def prepare(self, warm: bool = True) -> "InvertedIndex":
+    def prepare(self) -> "InvertedIndex":
         """Pin the hot read path in executor memory for a query-serving
         session (a real deployment keeps postings resident; per-query
         parquet re-reads are a cold-start artifact). Lazy on first use.
 
-        `warm=True` additionally runs ONE throwaway top-k query through
-        the Spark serving plan (the one large-footprint queries take;
-        small ones are served in process and need no warming) —
+        Then runs ONE throwaway top-k query through the Spark serving
+        plan (score_topk_batch's; large-footprint single queries run it
+        too, small ones are served in process and need no warming) —
         Lucene's searcher-warming posture
         (IndexWriter.IndexReaderWarmer / warming queries on a new
         searcher): the first few queries on a fresh session otherwise
@@ -391,14 +391,13 @@ class InvertedIndex:
         self._docfreq_cached = self._read_docfreq().persist()
         self._postings_cached.count()
         self._docfreq_cached.count()
-        if warm:
-            row = self._docfreq_cached.select("term").head(1)
-            if row:
-                from semantic_pdf_search_engine_spark.plans.query import (
-                    _spark_topk,
-                )
+        row = self._docfreq_cached.select("term").head(1)
+        if row:
+            from semantic_pdf_search_engine_spark.plans.query import (
+                score_topk_batch,
+            )
 
-                _spark_topk(self, [row[0]["term"]], 10).collect()
+            score_topk_batch(self, [row[0]["term"]], 10).collect()
         return self
 
     def unpersist(self) -> "InvertedIndex":

@@ -28,9 +28,10 @@ def both_paths():
     """`for path in both_paths():` runs a test body once per score_topk
     path: "local" at the default LOCAL_POSTINGS_CAP (every fixture-scale
     query fits under it), then "spark" with the cap at 0, which forces
-    the Spark DAG — without that pass the Spark path's properties would
-    go untested at fixture scale. The cap is restored after each loop
-    and at teardown."""
+    the Spark DAG (score_topk_batch's, run as a batch of one query) —
+    without that pass the Spark path's properties would go untested at
+    fixture scale. The cap is restored after each loop and at
+    teardown."""
     from semantic_pdf_search_engine_spark.plans import query
 
     cap = query.LOCAL_POSTINGS_CAP

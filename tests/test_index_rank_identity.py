@@ -146,10 +146,11 @@ def test_scoped_search_missing_conv(spark, index, both_paths):
 def test_batch_equals_single_query(spark, index, both_paths):
     """score_topk_batch must return, per query, EXACTLY the single-query
     score_topk answer (ids and scores) — pruned and unpruned — with
-    empty/absent queries simply absent from the output."""
+    empty/absent queries simply absent from the output. The repeated
+    query makes the same block rows serve two query ids."""
     from semantic_pdf_search_engine_spark.plans.query import score_topk_batch
 
-    queries = make_queries(12)[::2] + ["", "zzzzabsent"]
+    queries = make_queries(12)[::2] + ["", "zzzzabsent", make_queries(12)[0]]
     for prune in (True, False):
         got: dict[int, list] = {}
         rows = score_topk_batch(index, queries, 10, prune=prune).collect()
@@ -160,6 +161,22 @@ def test_batch_equals_single_query(spark, index, both_paths):
                 want = _topk(score_topk(index, q, 10, prune=prune))
                 have = sorted(got.get(qi, []), key=lambda t: (-t[1], t[0]))
                 assert have == sorted(want, key=lambda t: (-t[1], t[0])), (path, prune, q)
+
+
+def test_negative_k_rejected(spark, index, both_paths):
+    """k < 0 raises on every path (the local merge would slice [:k],
+    the Spark LIMIT rejects it, the batch window would return nothing);
+    k = 0 is an empty answer everywhere."""
+    from semantic_pdf_search_engine_spark.plans.query import score_topk_batch
+
+    q = make_queries(10)[2]
+    for path in both_paths():
+        with pytest.raises(ValueError):
+            score_topk(index, q, -1)
+        assert score_topk(index, q, 0).count() == 0, path
+    with pytest.raises(ValueError):
+        score_topk_batch(index, [q], -1)
+    assert score_topk_batch(index, [q], 0).count() == 0
 
 
 @pytest.mark.parametrize("round_scores", [True, False])

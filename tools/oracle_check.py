@@ -3,7 +3,7 @@
 DuckDB oracle — byte-identical values after canonical sort, mirroring the
 driver's rows+schema+hash gate (stricter than tests' 1e-9 float gate).
 
-Usage: python tools_oracle_check_r06.py <sf_dir> [query ...]
+Usage: python tools/oracle_check.py <sf_dir> [query ...]
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import os
 import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent
+REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 
@@ -36,7 +36,7 @@ def main() -> None:
 
     sf_dir = sys.argv[1]
     names = sys.argv[2:] or sorted(registry.ORACLE_SQL)
-    spark = get_spark(app_name="oracle-check-r06")
+    spark = get_spark(app_name="oracle-check")
     con = duckdb_con(sf_dir)
     bad = []
     for name in names:
