@@ -92,11 +92,14 @@ def main(argv: list[str] | None = None) -> int:
     an.add_argument("--centroids", type=int, default=16)
 
     qb = sub.add_parser(
-        "query-batch", help="top-k for MANY queries in one job (score_topk_batch)"
+        "query-batch", help="top-k for MANY queries in one call (score_topk_batch)"
     )
     qb.add_argument("--index", required=True)
     qb.add_argument(
-        "--queries", required=True, help="text file, one query per line"
+        "--queries",
+        required=True,
+        help="text file, one query per line; query_id is the 0-based line "
+        "number (blank lines yield no rows)",
     )
     qb.add_argument("--k", type=int, default=10)
 
@@ -311,7 +314,7 @@ def main(argv: list[str] | None = None) -> int:
         from semantic_pdf_search_engine_spark.sources.index_store import load_index
 
         with open(args.queries) as f:
-            queries = [line.rstrip("\n") for line in f if line.strip()]
+            queries = [line.rstrip("\n") for line in f]
         idx = load_index(spark, args.index)
         t0 = time.time()
         rows = score_topk_batch(idx, queries, args.k).collect()

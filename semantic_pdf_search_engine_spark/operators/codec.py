@@ -17,7 +17,8 @@ codec recorded in the index manifest and dispatched at decode:
   and stores whichever of the two encodings is smaller (see
   `auto_encode_groups` for the distribution trade-off).
 
-Runs inside applyInPandas (Arrow batches); no per-row Python. Encode
+Encode runs in the build's grouped UDF, decode in the query scoring
+kernel (driver or Arrow UDF); no per-value Python. Encode
 and decode are loop-free over the value count (loops run over
 byte-width ≤ 10 / bit-width ≤ 64, each iteration vectorized over the
 whole Arrow batch), so a 4096-entry block costs microseconds, not
@@ -88,10 +89,6 @@ def delta_encode(sorted_ids: np.ndarray, base: int = 0) -> np.ndarray:
         gaps[0] = ids[0] - base
         gaps[1:] = np.diff(ids)
     return gaps
-
-
-def delta_decode(gaps: np.ndarray, base: int = 0) -> np.ndarray:
-    return (np.cumsum(gaps.astype(np.int64)) + base).astype(np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -250,13 +247,34 @@ CODECS = {
 DEFAULT_CODEC = "vbyte"
 
 
-def decode_block(
-    gaps_bin: bytes,
-    tfs_bin: bytes,
-    dls_bin: bytes,
-    base: int,
-    codec_name: str = DEFAULT_CODEC,
-):
-    _, dec = CODECS[codec_name]
-    docs = delta_decode(dec(gaps_bin), base)
-    return docs, dec(tfs_bin).astype(np.int64), dec(dls_bin).astype(np.int64)
+def decode_rows(binary_array, codec_name: str = DEFAULT_CODEC):
+    """Decode every row of an Arrow binary column (one encoded block per
+    row) → (uint64 values of all rows, concatenated in row order; int64
+    per-row value counts). Takes a binary or large_binary Array or
+    ChunkedArray, sliced or not. Under `vbyte` the rows' bytes are one
+    contiguous span of the Arrow data buffer and VByte is
+    self-delimiting, so the span decodes in ONE pass and a row's count
+    is its number of terminator bytes; `for` and `auto` blocks carry
+    per-block headers and decode row by row."""
+    import pyarrow as pa
+
+    if isinstance(binary_array, pa.ChunkedArray):
+        binary_array = binary_array.combine_chunks()
+    n = len(binary_array)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
+    _, off_buf, data_buf = binary_array.buffers()
+    # buffers() ignore a slice's offset: index the offsets ourselves
+    width = 8 if pa.types.is_large_binary(binary_array.type) else 4
+    off = np.frombuffer(
+        off_buf, dtype=f"<i{width}", count=n + 1, offset=binary_array.offset * width
+    ).astype(np.int64)
+    data = np.frombuffer(data_buf, dtype=np.uint8)[off[0] : off[-1]]
+    off -= off[0]
+    if codec_name == "vbyte":
+        ends = np.concatenate([[0], np.cumsum((data & 0x80) == 0)])
+        return vb_decode(data), ends[off[1:]] - ends[off[:-1]]
+    dec = CODECS[codec_name][1]
+    rows = [dec(data[off[i] : off[i + 1]].tobytes()) for i in range(n)]
+    counts = np.asarray([r.size for r in rows], dtype=np.int64)
+    return np.concatenate(rows), counts

@@ -3,14 +3,16 @@
 Pipeline (replacing the reference's Qdrant search,
 /root/reference/src/qdrant.rs:70-96):
 
-  0. footprint gate (score_topk), before any Spark job: the query
-     terms' df is read from docfreq with pyarrow; when
-     Σdf ≤ LOCAL_POSTINGS_CAP the query is served IN PROCESS — pyarrow
-     reads only its posting blocks and the same DAAT kernel as step 4
-     scores them on the driver (the reference answers in process too,
-     search.rs:16-65), returning a local relation that launches zero
-     jobs. Otherwise steps 1-5 run as ONE Spark DAG for one or many
-     queries (`_candidates`; score_topk is a batch of one);
+  0. footprint gate (score_topk and score_topk_batch alike), before any
+     Spark job: the terms' df is read from docfreq with pyarrow; when
+     Σdf over the (query, term) pairs is ≤ LOCAL_POSTINGS_CAP the call
+     is served IN PROCESS — pyarrow reads the union of its posting
+     blocks once, idf and the query map are joined in Arrow, and ONE
+     call of the step-4 kernel scores the whole batch on the driver
+     (the reference answers in process too, search.rs:16-65),
+     returning a local relation that launches zero jobs. Otherwise
+     steps 1-5 run as ONE Spark DAG for one or many queries
+     (`_candidates`; score_topk is a batch of one);
   1. driver tokenizes the query with the pinned tokenizer (tiny — the
      analog of in-process embed_query, /root/reference/src/embed.rs:65-78);
   2. posting scan over the union of the queries' terms, pruned two
@@ -27,13 +29,16 @@ Pipeline (replacing the reference's Qdrant search,
      at least k distinct docs (one per stripe) score ≥ T, so any stripe
      with ub < T cannot contribute to the top k. T is a window over the
      tiny (query, stripe) metadata; the kept set is broadcast back.
-  4. per-(query, stripe) document-at-a-time scoring in one Arrow UDF:
-     decode blocks, dense float64 accumulation over the ≤STRIPE_DOCS-wide
-     doc range in canonical (sorted-term) order — bit-identical to the
-     numpy oracle's summation order — emit the stripe-local top-k;
-  5. merge: candidates ≤ (#stripes_kept × k) rows per query —
-     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k) for
-     score_topk, a per-query row_number window for score_topk_batch.
+  4. scoring by ONE columnar kernel (`_score_blocks`), run per (query,
+     stripe) group by `applyInArrow` on the Spark path and once over
+     every group in process: each binary column decoded once, doc gaps
+     turned into ids by a segmented cumsum, contributions summed by one
+     bincount in canonical (sorted-term) order — bit-identical to the
+     numpy oracle's summation order — and the stripe-local top-k kept;
+  5. merge: candidates ≤ (#stripes_kept × k) rows per query, rounded,
+     then (score DESC, doc_id) top-k per query — TakeOrderedAndProject
+     for a Spark single query, a per-query row_number window for a
+     Spark batch, a numpy lexsort in process.
 
 Stripe-level block-max pruning is the engine's moral twin of the
 reference's anchor-based candidate pruning before expensive scoring
@@ -46,7 +51,6 @@ from __future__ import annotations
 import logging
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -117,57 +121,121 @@ def _kept_stripes(meta: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _daat_stripe_topk(
-    pdf: pd.DataFrame,
+# The kernel scores whole (query, stripe) groups a slice at a time: a
+# slice holds at most _KERNEL_SLOTS dense accumulator slots (16 MB) and
+# about _KERNEL_POSTINGS postings (a larger single group is one slice),
+# so the driver's scratch memory is bounded by these, not by n_docs, the
+# number of groups or the footprint.
+_KERNEL_SLOTS = 1 << 20
+_KERNEL_POSTINGS = 1 << 19
+
+_CANDIDATES = pa.schema(
+    [("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
+)
+
+
+def _first_k_per_run(run_ids: np.ndarray, k: int) -> np.ndarray:
+    """Mask of the first k elements of each run of equal ids (sorted)."""
+    if run_ids.size == 0:
+        return np.zeros(0, dtype=bool)
+    starts = np.flatnonzero(np.r_[True, run_ids[1:] != run_ids[:-1]])
+    lens = np.diff(np.r_[starts, run_ids.size])
+    return np.arange(run_ids.size) - np.repeat(starts, lens) < k
+
+
+def _score_blocks(
+    blocks: pa.Table,
     stripe_docs: int,
     avgdl: float,
     k: int,
+    codec_name: str = "vbyte",
     scope_ids=None,
     scope_range=None,
-    codec_name: str = "vbyte",
-):
-    """The per-stripe DAAT scoring kernel — ONE definition shared by the
-    in-process and Spark paths: decode blocks, dense float64
-    accumulation in canonical (sorted-term) order — bit-identical to
-    the numpy oracle's summation order — stripe-local top-k with doc_id
-    tie-break. Returns (doc_id int64 array, score float64 array)."""
-    from semantic_pdf_search_engine_spark.operators.codec import decode_block
+) -> pa.Table:
+    """The scoring kernel — ONE definition for the in-process path (all
+    groups of a batch in one call) and the Spark path (one (query,
+    stripe) group per applyInArrow call). `blocks` holds (query_id,
+    term, stripe_id, n_postings, gaps, tfs, dls, idf) rows. Rows sort by
+    (query_id, stripe_id, term) and are scored in slices of whole
+    (query, stripe) groups, columnar within a slice: each binary column
+    is decoded once (`codec.decode_rows`), a segmented cumsum turns gaps
+    into doc offsets, one contribution array is computed in the op
+    order of oracle.bm25_term, and one `np.bincount` sums it over
+    (group, doc offset) slots. bincount adds in array order, which is
+    term order within a group, so every doc's score is the numpy
+    oracle's canonical-order sum, bit for bit. Returns each group's
+    unrounded top-k (query_id, doc_id, score), score DESC with a doc_id
+    tie-break."""
+    if blocks.num_rows == 0:
+        return _CANDIDATES.empty_table()
+    blocks = blocks.take(
+        pc.sort_indices(
+            blocks,
+            [("query_id", "ascending"), ("stripe_id", "ascending"), ("term", "ascending")],
+        )
+    )
+    qid = blocks.column("query_id").to_numpy()
+    stripe = blocks.column("stripe_id").to_numpy()
+    n = blocks.column("n_postings").to_numpy()
+    starts = np.flatnonzero(np.r_[True, (qid[1:] != qid[:-1]) | (stripe[1:] != stripe[:-1])])
+    before = (np.cumsum(n) - n)[starts] // _KERNEL_POSTINGS
+    per = np.arange(starts.size) // max(1, _KERNEL_SLOTS // stripe_docs)
+    cuts = starts[np.r_[True, (before[1:] != before[:-1]) | (per[1:] != per[:-1])]]
+    parts = [
+        _score_slice(
+            blocks.slice(lo, hi - lo), stripe_docs, avgdl, k, codec_name,
+            scope_ids, scope_range,
+        )
+        for lo, hi in zip(cuts, np.r_[cuts[1:], blocks.num_rows])
+    ]
+    q, d, sc = (np.concatenate(col) for col in zip(*parts))
+    return pa.table({"query_id": q, "doc_id": d, "score": sc}, schema=_CANDIDATES)
 
+
+def _score_slice(blocks, stripe_docs, avgdl, k, codec_name, scope_ids, scope_range):
+    """`_score_blocks` over one slice of whole groups, rows sorted."""
+    from semantic_pdf_search_engine_spark.operators.codec import decode_rows
+
+    qid = blocks.column("query_id").to_numpy()
+    stripe = blocks.column("stripe_id").to_numpy().astype(np.int64)
+    gaps, n = decode_rows(blocks.column("gaps"), codec_name)
+    tfs = decode_rows(blocks.column("tfs"), codec_name)[0].astype(np.int64)
+    dls = decode_rows(blocks.column("dls"), codec_name)[0].astype(np.int64)
+    row = np.repeat(np.arange(qid.size), n)
+    # segmented cumsum: a block's first gap is relative to its stripe base
+    cs = np.cumsum(gaps.astype(np.int64))
+    off = cs - np.r_[0, cs][np.cumsum(n) - n][row]
+    docs = stripe[row] * stripe_docs + off
+    if scope_ids is not None:
+        keep = np.isin(docs, scope_ids)  # exact membership
+    elif scope_range is not None:
+        keep = (docs >= scope_range[0]) & (docs <= scope_range[1])
+    else:
+        keep = slice(None)
+    row, off, tfs, dls = row[keep], off[keep], tfs[keep], dls[keep]
+    idf = blocks.column("idf").to_numpy()[row]
     k1, b = K1, B
-    stripe = int(pdf["stripe_id"].iloc[0])
-    base = stripe * stripe_docs
-    scores = np.zeros(stripe_docs, dtype=np.float64)
-    seen = np.zeros(stripe_docs, dtype=bool)
-    pdf = pdf.sort_values("term", kind="mergesort")
-    for row in pdf.itertuples(index=False):
-        docs, tfs, dls = decode_block(row.gaps, row.tfs, row.dls, base, codec_name)
-        if scope_ids is not None:
-            mask = np.isin(docs, scope_ids)  # exact membership
-            if not mask.any():
-                continue
-            docs, tfs, dls = docs[mask], tfs[mask], dls[mask]
-        elif scope_range is not None:
-            mask = (docs >= scope_range[0]) & (docs <= scope_range[1])
-            if not mask.any():
-                continue
-            docs, tfs, dls = docs[mask], tfs[mask], dls[mask]
-        off = docs - base
-        idf = row.idf
-        # op order pinned to match oracle.bm25_term bit-for-bit
-        contrib = (idf * (tfs * (k1 + 1.0))) / (
-            tfs + k1 * (1.0 - b + b * dls / avgdl)
-        )
-        scores[off] += contrib
-        seen[off] = True
+    # op order pinned to match oracle.bm25_term bit-for-bit
+    contrib = (idf * (tfs * (k1 + 1.0))) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    new_group = np.r_[True, (qid[1:] != qid[:-1]) | (stripe[1:] != stripe[:-1])]
+    group_of_row = np.cumsum(new_group) - 1
+    slot = group_of_row[row] * stripe_docs + off
+    size = (group_of_row[-1] + 1) * stripe_docs
+    acc = np.bincount(slot, weights=contrib, minlength=size)
+    seen = np.zeros(size, dtype=bool)
+    seen[slot] = True
     hit = np.flatnonzero(seen)
-    if hit.size == 0:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.float64),
-        )
-    s = scores[hit]
-    order = np.lexsort((hit, -s))[:k]  # stripe-local top-k, doc_id tie-break
-    return (hit[order] + base).astype("int64"), s[order]
+    g, doc_off, sc = hit // stripe_docs, hit % stripe_docs, acc[hit]
+    # per group: score DESC, then doc_id — one int64 sort key (group,
+    # dense score rank, doc offset; < 2^40 under the slot bound) sorts
+    # 3-4x faster than a three-key lexsort
+    uniq, rank = np.unique(sc, return_inverse=True)
+    order = np.argsort((g * uniq.size + (uniq.size - 1 - rank)) * stripe_docs + doc_off)
+    g, doc_off, sc = g[order], doc_off[order], sc[order]
+    top = _first_k_per_run(g, k)
+    g = g[top]
+    base = stripe[new_group] * stripe_docs
+    return qid[new_group][g], base[g] + doc_off[top], sc[top]
 
 
 # Above this many member docIDs, a non-contiguous conversation's
@@ -175,36 +243,54 @@ def _daat_stripe_topk(
 # search falls back to an in-plan semi-join (see _candidates).
 NONCONTIG_MEMBERSHIP_CAP = 100_000
 
-# Σdf over the query terms up to which score_topk serves in process
-# (pyarrow block read + _daat_stripe_topk on the driver) instead of the
-# Spark DAG; it bounds the postings the driver decodes. Set from a
-# measured local-vs-Spark crossover: score_topk(...).collect(), median
-# of 3, a query of the j highest-df terms, indexes built from the
-# benchmark generator (seed 7) with 4,096-doc stripes, local[4] on
-# 4 vCPUs.
-#   89,070 turns (2.95M postings)      local ms   Spark ms
-#     j=8     Σdf    574,689               175       1248
-#     j=160   Σdf  2,064,903               937       2112
-#     j=500   Σdf  2,515,687         1969, 2311  3161, 4103
-#     j=700   Σdf  2,631,219              2962       3728
-#     j=1000  Σdf  2,745,403         3816, 4378  3758, 4362   tie
-#   449,118 turns (14.8M postings)
-#     j=10    Σdf  3,398,014               791       1866
-#     j=120   Σdf  9,752,116              2206       2975
-#     j=200   Σdf 10,882,973              4552       3961   Spark wins
-# Local cost grows with Σdf and with the block count (one Python decode
-# per block), so many-term queries cross first. The cap is the first
-# measured point where local did not win (Σdf 2.75M), rounded down.
-# Wall time, not memory, binds first: the Σdf 9.75M local query grew
-# the driver's peak RSS by ~100 MB.
-LOCAL_POSTINGS_CAP = 2_500_000
+# Σdf over the (query, term) pairs up to which score_topk and
+# score_topk_batch serve in process (pyarrow block read + _score_blocks
+# on the driver) instead of the Spark DAG; it bounds the postings the
+# driver decodes. Set from a measured local-vs-Spark crossover:
+# score_topk(...).collect() on a prepare()d index, min / median of 3
+# interleaved runs, a query of the j highest-df terms, indexes built
+# from the benchmark generator (seed 7) with 4,096-doc stripes,
+# local[4] on 4 vCPUs.
+#   91,053 turns (3.0M postings)        local ms    Spark ms
+#     j=8     Σdf    588,161             58 /  80   721 /  754
+#     j=160   Σdf  2,111,474            126 / 133   666 /  709
+#     j=500   Σdf  2,571,949            142 / 153   713 /  738
+#     j=1000  Σdf  2,806,633            158 / 161   933 /  987
+#   452,033 turns (15.0M postings)
+#     j=10    Σdf  3,423,405            172 / 173   804 /  825
+#     j=120   Σdf  9,831,317            397 / 402   886 /  994
+#     j=400   Σdf 12,360,121            499 / 504   992 / 1013
+#     j=1000  Σdf 13,938,812            561 / 578  1365 / 1569
+#   1,124,170 turns (37.2M postings)
+#     j=10    Σdf  8,510,562            301 / 316   685 /  831
+#     j=100   Σdf 23,367,754            732 / 752   902 /  925
+#     j=300   Σdf 29,356,023            931 / 940   934 / 1081   tie
+#     j=1000  Σdf 34,665,881           1139 / 1168  1437 / 1504
+# The local path is one columnar pass, so its cost is linear in Σdf; the
+# Spark path pays a fixed ~0.7 s of scheduling. The cap is the first
+# measured point where local did not win on the min (Σdf 29.4M),
+# rounded down. Driver peak RSS grows about 20 bytes per posting
+# decoded (+104 MB at Σdf 2.57M, +233 MB at 9.8M, +605 MB at 29.4M);
+# the kernel's slices keep its scratch bounded, and the rest is the
+# encoded blocks the query reads.
+LOCAL_POSTINGS_CAP = 25_000_000
 
 _HITS = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
 
 log = logging.getLogger(__name__)
 
 
-def _local_frame(spark, schema: pa.Schema, cols: dict | None = None) -> DataFrame:
+_QUERY_MAP = pa.schema([("query_id", pa.int32()), ("term", pa.string())])
+
+
+def _query_map(pairs: list[tuple[int, str]]) -> pa.Table:
+    return pa.table(
+        {"query_id": [q for q, _ in pairs], "term": [t for _, t in pairs]},
+        schema=_QUERY_MAP,
+    )
+
+
+def _local_frame(spark, schema: pa.Schema, cols=None) -> DataFrame:
     """Driver rows (≤k results, a query map) as a local relation: Spark
     reads an Arrow table into a LocalRelation whose collect() launches
     no job — the zero-row case included (a Python list, or an empty
@@ -212,14 +298,16 @@ def _local_frame(spark, schema: pa.Schema, cols: dict | None = None) -> DataFram
     and a Python-worker job each time a plan broadcasts it, about 2 s
     a query on local[4], 4 vCPUs). Arrow-table input needs
     PySpark ≥ 4.0, the floor pinned in pyproject.toml."""
-    table = pa.table(cols, schema=schema) if cols else schema.empty_table()
+    table = schema.empty_table() if cols is None else pa.table(cols, schema=schema)
     return spark.createDataFrame(table)
 
 
-def _log_path(path: str, reason: str, sum_df=None, block_rows=None, stripes=None):
+def _log_path(
+    fn: str, path: str, reason: str, sum_df=None, block_rows=None, stripes=None
+):
     log.debug(
-        "score_topk path=%s reason=%s sum_df=%s block_rows=%s stripes=%s",
-        path, reason, sum_df, block_rows, stripes,
+        "%s path=%s reason=%s sum_df=%s block_rows=%s stripes=%s",
+        fn, path, reason, sum_df, block_rows, stripes,
     )
 
 
@@ -255,20 +343,38 @@ def _conv_scope(index: InvertedIndex, conv_id: str):
     return lo, hi, np.sort(np.concatenate(kept)), False
 
 
-def _local_topk(
+def _footprint(index: InvertedIndex, pairs: list[tuple[int, str]]):
+    """The queries' (term, idf) rows read from docfreq with pyarrow, and
+    Σdf over the (query_id, term) pairs — the postings a batch decodes
+    (a term shared by m queries counts m times, as its blocks are
+    scored once per query)."""
+    terms = sorted({t for _, t in pairs})
+    qidf = index.arrow_dataset("docfreq").to_table(
+        columns=["term", "df", "idf"], filter=ds.field("term").isin(terms)
+    )
+    df_of = dict(zip(qidf.column("term").to_pylist(), qidf.column("df").to_pylist()))
+    return qidf.select(["term", "idf"]), sum(df_of.get(t, 0) for _, t in pairs)
+
+
+def _serve_in_process(
     index: InvertedIndex,
+    pairs: list[tuple[int, str]],
     qidf: pa.Table,
     k: int,
     round_scores: bool,
-    scope,
-) -> tuple[DataFrame, int, int]:
-    """score_topk served in process: pyarrow reads only the query's
-    posting blocks, `_daat_stripe_topk` scores each stripe on the
-    driver, and the stripe top-k lists merge under the Spark path's
-    order. Returns (the ≤k winners as a local relation, block rows
-    read, stripes scored). Only blocks of terms present in docfreq
-    (`qidf`) are read — the Spark path's inner join with docfreq drops
-    the rest, e.g. blocks an uncommitted append left for a new term."""
+    scope=None,
+) -> tuple[pa.Table, int, int]:
+    """Top-k for the queries' (query_id, term) pairs served in process:
+    pyarrow reads the union of their posting blocks once (`term_bucket`
+    partitions, `term` filter, and for a scoped query the [lo, hi]
+    block-range filter), joins idf and the query map in Arrow, and ONE
+    `_score_blocks` call scores every (query, stripe) group; the
+    stripe-local lists are rounded and merged per query under the Spark
+    path's (score DESC, doc_id) order. Returns ((query_id, doc_id,
+    score) rows, block rows read, stripes read). Only blocks of terms
+    present in docfreq (`qidf`) are scored — the Spark path's inner join
+    with docfreq drops the rest, e.g. blocks an uncommitted append left
+    for a new term."""
     terms = qidf.column("term").to_pylist()
     filt = ds.field("term_bucket").isin(sorted({term_bucket_of(t) for t in terms}))
     filt &= ds.field("term").isin(terms)
@@ -278,25 +384,20 @@ def _local_topk(
         scope_range = (lo, hi)
         filt &= (ds.field("max_doc") >= lo) & (ds.field("min_doc") <= hi)
     blocks = index.arrow_dataset("postings").to_table(
-        columns=["term", "stripe_id", "gaps", "tfs", "dls"], filter=filt
-    ).to_pandas()
-    idf = dict(zip(qidf.column("term").to_pylist(), qidf.column("idf").to_pylist()))
-    blocks["idf"] = blocks["term"].map(idf)
-    stripes = [
-        _daat_stripe_topk(
-            pdf, index.stripe_docs, index.avgdl, k, scope_ids=scope_ids,
-            scope_range=scope_range, codec_name=index.codec,
-        )
-        for _, pdf in blocks.groupby("stripe_id", sort=False)
-    ]
-    ids = np.concatenate([np.empty(0, dtype=np.int64), *(i for i, _ in stripes)])
-    scores = np.concatenate([np.empty(0, dtype=np.float64), *(s for _, s in stripes)])
+        columns=["term", "stripe_id", "n_postings", "gaps", "tfs", "dls"], filter=filt
+    )
+    cands = _score_blocks(
+        blocks.join(qidf, "term").join(_query_map(pairs), "term"),
+        index.stripe_docs, index.avgdl, k, index.codec, scope_ids, scope_range,
+    )
+    q, d, sc = (cands.column(c).to_numpy() for c in _CANDIDATES.names)
     if round_scores:
         # rounded before the merge, as the Spark path orders candidates
-        scores = np_round_half_up(scores, SCORE_DECIMALS)
-    top = np.lexsort((ids, -scores))[:k]
-    hits = _local_frame(index.spark, _HITS, {"doc_id": ids[top], "score": scores[top]})
-    return hits, len(blocks), len(stripes)
+        sc = np_round_half_up(sc, SCORE_DECIMALS)
+    order = np.lexsort((d, -sc, q))
+    top = order[_first_k_per_run(q[order], k)]
+    hits = pa.table({"query_id": q[top], "doc_id": d[top], "score": sc[top]}, schema=_CANDIDATES)
+    return hits, blocks.num_rows, len(pc.unique(blocks.column("stripe_id")))
 
 
 def score_topk(
@@ -314,11 +415,12 @@ def score_topk(
     Σdf ≤ LOCAL_POSTINGS_CAP the query is served IN PROCESS — pyarrow
     reads only the query's blocks (`term_bucket` partitions, `term`
     filter, and for a scoped query the [lo, hi] block-range filter),
-    the shared `_daat_stripe_topk` kernel scores each stripe on the
-    driver, and the ≤k winners come back as a local relation whose
-    collect() launches no job. Scores are bit-identical to the Spark
-    path (same kernel, same stored idf, same rounding before the same
-    (score DESC, doc_id) merge); `prune` does not apply there — every
+    the shared `_score_blocks` kernel scores them on the driver (the
+    in-process batch path, with one query), and the ≤k winners come
+    back as a local relation whose collect() launches no job. Scores
+    are bit-identical to the Spark path (same kernel, same stored idf,
+    same rounding before the same (score DESC, doc_id) merge); `prune`
+    does not apply there — every
     stripe of a bounded footprint is scored, so the answer is the
     unpruned one. Larger footprints run score_topk_batch's Spark DAG
     (steps 2-4, `_candidates`) as a batch of one query, merged by
@@ -326,7 +428,7 @@ def score_topk(
     An empty query, a query with no indexed term and an absent
     conversation are answered empty in process. One DEBUG record per
     call says which path ran and why, with Σdf, block rows read and
-    stripes scored (the last two only on the local path). k < 0 raises
+    stripes read (the last two only on the local path). k < 0 raises
     ValueError; k = 0 is an empty answer.
 
     `conv_id` scopes the search to one conversation — the reference's
@@ -357,32 +459,32 @@ def score_topk(
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    q_terms = sorted(set(tokenize_py(query)))
-    if not q_terms:
+    pairs = [(0, t) for t in sorted(set(tokenize_py(query)))]
+    if not pairs:
         # empty-query guard (reference P8, search.rs:20-22)
-        _log_path("local", "empty_query", 0, 0, 0)
+        _log_path("score_topk", "local", "empty_query", 0, 0, 0)
         return _local_frame(index.spark, _HITS)
-    qidf = index.arrow_dataset("docfreq").to_table(
-        columns=["term", "df", "idf"], filter=ds.field("term").isin(q_terms)
-    )
-    sum_df = int(pc.sum(qidf.column("df")).as_py() or 0)
+    qidf, sum_df = _footprint(index, pairs)
     scope = None
     if sum_df and conv_id is not None:
         scope = _conv_scope(index, conv_id)
     if sum_df == 0 or (conv_id is not None and scope is None):
         reason = "no_indexed_term" if sum_df == 0 else "conv_absent"
-        _log_path("local", reason, sum_df, 0, 0)
+        _log_path("score_topk", "local", reason, sum_df, 0, 0)
         return _local_frame(index.spark, _HITS)
     if sum_df > LOCAL_POSTINGS_CAP:
         reason = f"sum_df>{LOCAL_POSTINGS_CAP}"
     elif scope is not None and scope[3]:  # in_plan: membership above its cap
         reason = f"scope_members>{NONCONTIG_MEMBERSHIP_CAP}"
     else:
-        hits, block_rows, stripes = _local_topk(index, qidf, k, round_scores, scope)
-        _log_path("local", f"sum_df<={LOCAL_POSTINGS_CAP}", sum_df, block_rows, stripes)
-        return hits
-    _log_path("spark", reason, sum_df)
-    pairs = [(0, t) for t in q_terms]
+        hits, block_rows, stripes = _serve_in_process(
+            index, pairs, qidf, k, round_scores, scope
+        )
+        _log_path(
+            "score_topk", "local", f"sum_df<={LOCAL_POSTINGS_CAP}", sum_df, block_rows, stripes
+        )
+        return _local_frame(index.spark, _HITS, hits.select(_HITS.names))
+    _log_path("score_topk", "spark", reason, sum_df)
     return (
         _candidates(index, pairs, k, round_scores, prune, conv_id, scope)
         .select("doc_id", "score")
@@ -438,11 +540,7 @@ def _candidates(
             scope_semi = index.docs.filter(F.col("conv_id") == conv_id).select("doc_id")
         prune = False  # lb not achievable-in-scope; range skipping above
     qidf = index.docfreq.filter(F.col("term").isin(terms)).select("term", "idf")
-    qmap = _local_frame(
-        index.spark,
-        pa.schema([("query_id", pa.int32()), ("term", pa.string())]),
-        {"query_id": [q for q, _ in pairs], "term": [t for _, t in pairs]},
-    )
+    qmap = _local_frame(index.spark, _QUERY_MAP, _query_map(pairs))
     qblocks = blocks.join(F.broadcast(qidf), "term").join(F.broadcast(qmap), "term")
 
     avgdl = index.avgdl
@@ -462,16 +560,17 @@ def _candidates(
     # candidates stay ≤ stripe_docs per stripe either way
     k_local = stripe_docs if scope_semi is not None else k
 
-    def score_stripe(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, s = _daat_stripe_topk(
-            pdf, stripe_docs, avgdl, k_local, scope_ids=scope_ids,
-            scope_range=scope_range, codec_name=codec_name,
+    def score_group(blocks: pa.Table) -> pa.Table:
+        return _score_blocks(
+            blocks, stripe_docs, avgdl, k_local, codec_name, scope_ids, scope_range
         )
-        qid = np.full(ids.size, pdf["query_id"].iloc[0], dtype="int32")
-        return pd.DataFrame({"query_id": qid, "doc_id": ids, "score": s})
 
-    candidates = qblocks.groupBy("query_id", "stripe_id").applyInPandas(
-        score_stripe, schema="query_id int, doc_id long, score double"
+    candidates = (
+        qblocks.select(
+            "query_id", "term", "stripe_id", "n_postings", "gaps", "tfs", "dls", "idf"
+        )
+        .groupBy("query_id", "stripe_id")
+        .applyInArrow(score_group, schema="query_id int, doc_id long, score double")
     )
     if scope_semi is not None:
         candidates = candidates.join(scope_semi, "doc_id", "left_semi")
@@ -489,37 +588,73 @@ def score_topk_batch(
     round_scores: bool = True,
     prune: bool = True,
 ) -> DataFrame:
-    """(query_id, doc_id, score): top-k for MANY queries in ONE job —
+    """(query_id, doc_id, score): top-k for MANY queries in one call —
     the amortized serving shape (query replay, offline evaluation,
     batch retrieval for a training pipeline). query_id = position in
     `queries`; empty and absent queries are absent from the output.
 
-    Identical per-query results to score_topk (pinned by test): the
-    candidates come from `_candidates`, the DAG score_topk's
-    large-footprint path runs as a batch of one (steps 2-4, ONE
-    postings scan over the union of all query terms), merged by a
-    per-query window top-k. Small-footprint single queries skip
-    scheduling altogether (score_topk's in-process path); at the serve
-    benchmark's scale their p50 is about the batch's per-query cost.
+    Identical per-query results to score_topk (pinned by test), under
+    the same footprint gate: when Σdf over the batch's (query_id, term)
+    pairs is ≤ LOCAL_POSTINGS_CAP the whole batch is served IN PROCESS
+    by one `_score_blocks` call over the union of its blocks and comes
+    back as a local relation (zero Spark jobs); `prune` does not apply
+    there. Larger batches run `_candidates` (steps 2-4, ONE postings
+    scan over the union of all query terms) merged by a per-query
+    window top-k. One DEBUG record per call, as for score_topk.
     k < 0 raises ValueError; k = 0 is an empty answer."""
-    from pyspark.sql.window import Window
-
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     pairs = [
         (qi, t) for qi, q in enumerate(queries) for t in sorted(set(tokenize_py(q)))
     ]
     if not pairs:
-        return _local_frame(index.spark, pa.schema([("query_id", pa.int32()), *_HITS]))
-    candidates = _candidates(index, pairs, k, round_scores, prune)
+        _log_path("score_topk_batch", "local", "empty_query", 0, 0, 0)
+        return _local_frame(index.spark, _CANDIDATES)
+    qidf, sum_df = _footprint(index, pairs)
+    if sum_df == 0:
+        _log_path("score_topk_batch", "local", "no_indexed_term", 0, 0, 0)
+        return _local_frame(index.spark, _CANDIDATES)
+    if sum_df > LOCAL_POSTINGS_CAP:
+        _log_path("score_topk_batch", "spark", f"sum_df>{LOCAL_POSTINGS_CAP}", sum_df)
+        return _spark_batch(index, pairs, k, round_scores, prune)
+    hits, block_rows, stripes = _serve_in_process(index, pairs, qidf, k, round_scores)
+    _log_path(
+        "score_topk_batch", "local", f"sum_df<={LOCAL_POSTINGS_CAP}", sum_df, block_rows, stripes
+    )
+    return _local_frame(index.spark, _CANDIDATES, hits)
+
+
+def _spark_batch(
+    index: InvertedIndex,
+    pairs: list[tuple[int, str]],
+    k: int,
+    round_scores: bool,
+    prune: bool,
+) -> DataFrame:
+    """score_topk_batch's Spark DAG: `_candidates` merged per query by a
+    row_number window."""
+    from pyspark.sql.window import Window
+
     wfin = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
-        candidates.withColumn("_r", F.row_number().over(wfin))
+        _candidates(index, pairs, k, round_scores, prune)
+        .withColumn("_r", F.row_number().over(wfin))
         .filter(F.col("_r") <= k)
         .drop("_r")
     )
+
+
+def warm_spark_plan(index: InvertedIndex, term: str) -> None:
+    """Collect score_topk_batch's Spark DAG for one term, whatever its
+    footprint — the searcher warm-up `InvertedIndex.prepare()` runs.
+    Under the footprint gate a warm-up query would be served in process
+    and warm nothing; this one always pays the first-use costs
+    (whole-stage codegen, the Python worker pool of the Arrow scoring
+    UDF, first touch of the cached blocks) so that large-footprint
+    queries do not."""
+    _spark_batch(index, [(0, term)], DEFAULT_TOP_K, True, True).collect()
 
 
 def search(

@@ -374,8 +374,9 @@ class InvertedIndex:
         parquet re-reads are a cold-start artifact). Lazy on first use.
 
         Then runs ONE throwaway top-k query through the Spark serving
-        plan (score_topk_batch's; large-footprint single queries run it
-        too, small ones are served in process and need no warming) —
+        plan (`plans.query.warm_spark_plan`: score_topk_batch's Spark
+        DAG, which large-footprint queries run; small ones are served in
+        process and need no warming) —
         Lucene's searcher-warming posture
         (IndexWriter.IndexReaderWarmer / warming queries on a new
         searcher): the first few queries on a fresh session otherwise
@@ -393,11 +394,9 @@ class InvertedIndex:
         self._docfreq_cached.count()
         row = self._docfreq_cached.select("term").head(1)
         if row:
-            from semantic_pdf_search_engine_spark.plans.query import (
-                score_topk_batch,
-            )
+            from semantic_pdf_search_engine_spark.plans.query import warm_spark_plan
 
-            score_topk_batch(self, [row[0]["term"]], 10).collect()
+            warm_spark_plan(self, row[0]["term"])
         return self
 
     def unpersist(self) -> "InvertedIndex":

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -18,7 +20,7 @@ def test_vb_roundtrip(vals):
 
 def _block_roundtrip(gaps, base, codec_name):
     """Encode one block with the codec's group encoder (what the build
-    runs), decode it with decode_block (what the query kernels run)."""
+    runs), decode it with decode_rows (what the query kernel runs)."""
     # build a strictly increasing doc list from positive gaps
     doc_ids = base + np.cumsum(np.array(gaps, dtype=np.int64) + 1)
     tfs = np.arange(1, len(doc_ids) + 1, dtype=np.uint64)
@@ -30,10 +32,13 @@ def _block_roundtrip(gaps, base, codec_name):
         group_encode(arr, starts, ends)[0]
         for arr in (codec.delta_encode(doc_ids, base), tfs, dls)
     )
-    docs2, tfs2, dls2 = codec.decode_block(g, t, d, base, codec_name)
-    assert np.array_equal(docs2, doc_ids)
-    assert np.array_equal(tfs2.astype(np.uint64), tfs)
-    assert np.array_equal(dls2.astype(np.uint64), dls)
+    (g2, n), (t2, _), (d2, _) = (
+        codec.decode_rows(pa.array([buf], pa.binary()), codec_name) for buf in (g, t, d)
+    )
+    assert n.tolist() == [doc_ids.size]
+    assert np.array_equal(base + np.cumsum(g2.astype(np.int64)), doc_ids)
+    assert np.array_equal(t2, tfs)
+    assert np.array_equal(d2, dls)
 
 
 @given(
@@ -171,3 +176,69 @@ def test_auto_picks_for_on_dense_vbyte_on_zipf():
         )
         assert buf[:1] == tag
         assert np.array_equal(codec.auto_decode(buf), arr)
+
+
+# ---------------------------------------------------------------------------
+# row-wise decode of an Arrow binary column (the query kernel's input)
+# ---------------------------------------------------------------------------
+
+_SINGLE_DECODERS = {
+    "vbyte": codec.vb_decode,
+    "for": codec.for_decode,
+    "auto": codec.auto_decode,
+}
+
+
+def _encode_rows(rows, codec_name):
+    group_encode = codec.CODECS[codec_name][0]
+    return [
+        group_encode(
+            np.array(r, dtype=np.uint64),
+            np.zeros(1, dtype=np.int64),
+            np.asarray([len(r)], dtype=np.int64),
+        )[0]
+        for r in rows
+    ]
+
+
+def _assert_rows_decode(arr, codec_name):
+    """decode_rows ≡ the per-row single-block decoder, values and counts."""
+    values, counts = codec.decode_rows(arr, codec_name)
+    want = [_SINGLE_DECODERS[codec_name](b) for b in arr.to_pylist()]
+    assert counts.tolist() == [w.size for w in want]
+    assert values.dtype == np.uint64
+    assert np.array_equal(values, np.concatenate([np.zeros(0, np.uint64), *want]))
+
+
+@pytest.mark.parametrize("codec_name", ["vbyte", "for", "auto"])
+@given(
+    rows=st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=40), max_size=12
+    ),
+    cut=st.integers(min_value=0, max_value=12),
+)
+@settings(max_examples=60, deadline=None)
+def test_decode_rows_equals_per_row(codec_name, rows, cut):
+    bufs = _encode_rows(rows, codec_name)
+    for typ in (pa.binary(), pa.large_binary()):
+        arr = pa.array(bufs, typ)
+        _assert_rows_decode(arr, codec_name)
+        _assert_rows_decode(arr.slice(min(cut, len(bufs))), codec_name)
+
+
+@pytest.mark.parametrize("codec_name", ["vbyte", "for", "auto"])
+def test_decode_rows_edges(codec_name):
+    """Empty blocks, 1-value blocks, values ≥ 2^35, a sliced array (its
+    offset ≠ 0, which buffers() ignores) and a chunked column."""
+    rows = [[], [7], [2**35, 2**35 + 1, 2**62], [], [0], [1, 2, 3]]
+    arr = pa.array(_encode_rows(rows, codec_name), pa.binary())
+    _assert_rows_decode(arr, codec_name)
+    for sliced in (arr.slice(1), arr.slice(2, 3), arr.slice(3, 1), arr.slice(6)):
+        assert sliced.offset > 0
+        _assert_rows_decode(sliced, codec_name)
+    values, counts = codec.decode_rows(arr.slice(2, 2), codec_name)
+    assert values.tolist() == [2**35, 2**35 + 1, 2**62] and counts.tolist() == [3, 0]
+    chunked = pa.chunked_array([arr.slice(0, 3), arr.slice(3)])
+    values, counts = codec.decode_rows(chunked, codec_name)
+    assert counts.tolist() == [len(r) for r in rows]
+    assert values.tolist() == [v for r in rows for v in r]

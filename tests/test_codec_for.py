@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from semantic_pdf_search_engine_spark.fixtures import make_queries, make_transcripts
-from semantic_pdf_search_engine_spark.plans.query import score_topk
+from semantic_pdf_search_engine_spark.plans.query import score_topk, score_topk_batch
 from semantic_pdf_search_engine_spark.sources.index_store import (
     build_index,
     append_to_index,
@@ -72,10 +72,20 @@ def test_unknown_codec_rejected(spark, corpus, tmp_path):
         )
 
 
+def _batch(index):
+    return sorted(
+        (r["query_id"], r["doc_id"], r["score"])
+        for r in score_topk_batch(index, QUERIES, K, round_scores=False).collect()
+    )
+
+
 @pytest.mark.parametrize("qi", range(len(QUERIES)))
-def test_for_equals_vbyte_topk(for_index, vb_index, qi):
+def test_for_equals_vbyte_topk(for_index, vb_index, both_paths, qi):
     q = QUERIES[qi]
     assert _topk(for_index, q) == _topk(vb_index, q)
+    if qi == 0:
+        for path in both_paths():
+            assert _batch(for_index) == _batch(vb_index), path
 
 
 def test_append_and_compact_under_for(spark, corpus, tmp_path):

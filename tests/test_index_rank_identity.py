@@ -97,7 +97,7 @@ def test_search_returns_text(spark, index):
     # payload-fetch plan must NOT embed the live scoring DAG — no
     # grouped-pandas scoring node, so materializing it cannot re-score
     plan = result._jdf.queryExecution().optimizedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsIn" not in plan
     rows = result.collect()
     assert 0 < len(rows) <= 5
     for r in rows:
@@ -152,11 +152,11 @@ def test_batch_equals_single_query(spark, index, both_paths):
 
     queries = make_queries(12)[::2] + ["", "zzzzabsent", make_queries(12)[0]]
     for prune in (True, False):
-        got: dict[int, list] = {}
-        rows = score_topk_batch(index, queries, 10, prune=prune).collect()
-        for r in rows:
-            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
         for path in both_paths():
+            got: dict[int, list] = {}
+            rows = score_topk_batch(index, queries, 10, prune=prune).collect()
+            for r in rows:
+                got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
             for qi, q in enumerate(queries):
                 want = _topk(score_topk(index, q, 10, prune=prune))
                 have = sorted(got.get(qi, []), key=lambda t: (-t[1], t[0]))
@@ -174,9 +174,30 @@ def test_negative_k_rejected(spark, index, both_paths):
         with pytest.raises(ValueError):
             score_topk(index, q, -1)
         assert score_topk(index, q, 0).count() == 0, path
-    with pytest.raises(ValueError):
-        score_topk_batch(index, [q], -1)
-    assert score_topk_batch(index, [q], 0).count() == 0
+        with pytest.raises(ValueError):
+            score_topk_batch(index, [q], -1)
+        assert score_topk_batch(index, [q], 0).count() == 0, path
+
+
+def test_kernel_slices_equal_one_pass(spark, index, monkeypatch):
+    """The scoring kernel's slicing (bounded scratch memory) changes no
+    answer: one slice per (query, stripe) group, or slices cut by the
+    postings bound, give exactly the one-pass batch."""
+    from semantic_pdf_search_engine_spark.plans.query import score_topk_batch
+
+    queries = make_queries(40)[::3]
+
+    def batch():
+        rows = score_topk_batch(index, queries, K, round_scores=False).collect()
+        return sorted((r["query_id"], r["doc_id"], r["score"]) for r in rows)
+
+    want = batch()
+    assert want
+    for slots, postings in ((1, 1 << 30), (1 << 30, 1), (3 * index.stripe_docs, 50)):
+        with monkeypatch.context() as m:
+            m.setattr(query, "_KERNEL_SLOTS", slots)
+            m.setattr(query, "_KERNEL_POSTINGS", postings)
+            assert batch() == want, (slots, postings)
 
 
 @pytest.mark.parametrize("round_scores", [True, False])
@@ -220,37 +241,74 @@ def _jobs_launched(spark, action) -> int:
 
 
 def test_small_footprint_query_launches_no_jobs(spark, index, both_paths):
-    """A small-footprint query and an empty answer are served in
-    process: collect() launches no Spark job. With the cap at 0 the
-    same query takes the Spark DAG and does launch jobs."""
+    """A small-footprint query or batch and an empty answer are served
+    in process: collect() launches no Spark job. With the cap at 0 the
+    same query and batch take the Spark DAG and do launch jobs."""
+    from semantic_pdf_search_engine_spark.plans.query import score_topk_batch
+
     q = make_queries(10)[2]
+    batch = make_queries(12)[::3]
     for path in both_paths():
         n_query = _jobs_launched(spark, lambda: score_topk(index, q, K).collect())
+        n_batch = _jobs_launched(spark, lambda: score_topk_batch(index, batch, K).collect())
         n_empty = _jobs_launched(spark, lambda: score_topk(index, "zzzznotaword", K).collect())
         assert n_empty == 0, path
         if path == "local":
-            assert n_query == 0
+            assert n_query == 0 and n_batch == 0
         else:
-            assert n_query > 0
+            assert n_query > 0 and n_batch > 0
+
+
+def test_warm_up_runs_the_spark_plan(spark, index):
+    """prepare()'s warm-up collects the Spark serving DAG even though,
+    at the default cap, a query of its term would be served in process
+    with no job."""
+    term = index.docfreq.select("term").head(1)[0]["term"]
+    assert query.LOCAL_POSTINGS_CAP > 0
+    assert _jobs_launched(spark, lambda: score_topk(index, term, K).collect()) == 0
+    assert _jobs_launched(spark, lambda: query.warm_spark_plan(index, term)) > 0
 
 
 def test_path_is_logged(spark, index, both_paths, caplog):
-    """One DEBUG record per score_topk call: which path ran and why,
-    with Σdf, block rows read and stripes scored."""
+    """One DEBUG record per score_topk and score_topk_batch call: which
+    path ran and why, with Σdf, block rows read and stripes read."""
+    from semantic_pdf_search_engine_spark.plans.query import score_topk_batch
+
     q = make_queries(10)[2]
+    calls = {
+        "score_topk": lambda: score_topk(index, q, K),
+        "score_topk_batch": lambda: score_topk_batch(index, [q, "", q], K),
+    }
     with caplog.at_level(logging.DEBUG, logger=query.__name__):
         for path in both_paths():
-            caplog.clear()
-            score_topk(index, q, K).collect()
-            (msg,) = [r.getMessage() for r in caplog.records if r.name == query.__name__]
-            rec = dict(kv.split("=", 1) for kv in msg.split()[1:])
-            assert rec["path"] == path
-            assert int(rec["sum_df"]) > 0
-            if path == "local":
-                assert rec["reason"].startswith("sum_df<=")
-                assert int(rec["block_rows"]) > 0 and int(rec["stripes"]) > 0
-            else:
-                assert rec["reason"] == "sum_df>0"
+            for fn, call in calls.items():
+                caplog.clear()
+                call().collect()
+                (msg,) = [r.getMessage() for r in caplog.records if r.name == query.__name__]
+                assert msg.split()[0] == fn
+                rec = dict(kv.split("=", 1) for kv in msg.split()[1:])
+                assert rec["path"] == path, fn
+                assert int(rec["sum_df"]) > 0
+                if path == "local":
+                    assert rec["reason"].startswith("sum_df<=")
+                    assert int(rec["block_rows"]) > 0 and int(rec["stripes"]) > 0
+                else:
+                    assert rec["reason"] == "sum_df>0"
+
+
+def test_cli_query_batch_numbers_lines(spark, index, tmp_path, capsys):
+    """cli query-batch keeps blank lines when numbering: query_id is the
+    0-based line number of the query in the file."""
+    import json
+
+    from semantic_pdf_search_engine_spark.cli import main
+
+    q = make_queries(10)[2]
+    path = tmp_path / "queries.txt"
+    path.write_text(f"{q}\n\n{q}\n")
+    assert main(["query-batch", "--index", index.index_dir, "--queries", str(path)]) == 0
+    rows = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert rows and {r["query_id"] for r in rows} == {0, 2}
 
 
 def test_more_like_this_indexed_equals_relational(spark, tmp_path_factory):
