@@ -7,13 +7,11 @@ PDF-artifact classes handled (mirroring the reference's fuzzy tests,
 hyphen U+00AD, zero-width chars, NBSP, ligatures, curly quotes,
 em/en dashes, repeated whitespace.
 
-Three implementations of ONE pinned rule table, guaranteed equivalent:
+Two implementations of ONE pinned rule table, guaranteed equivalent:
 
 * :func:`normalize_py` — pure Python (numpy-oracle + driver-side query path)
 * :func:`normalize_series` — pandas vectorized (inside mapInPandas; the
   scale path — no per-row Python, Arrow batches end-to-end)
-* :func:`normalize_expr` — Spark Column expression chain (whole-stage
-  codegen; used when the plan must stay fully JVM-side)
 
 Rule order is significant: de-hyphenation must see the raw newline, so
 it runs before whitespace collapsing.
@@ -24,11 +22,9 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-# Multi-char ligature expansion (regexp, not translate(): Spark translate
-# is strictly 1:1 so it cannot expand ﬁ→fi).
+# Multi-char ligature expansion (a substitution, not a 1:1 translate
+# table: ﬁ→fi is one char to two).
 LIGATURES: dict[str, str] = {
     "ﬀ": "ff",
     "ﬁ": "fi",
@@ -104,22 +100,3 @@ def normalize_series(s: pd.Series) -> pd.Series:
     out = out.copy()
     out[mask] = dirty
     return out.str.strip()
-
-
-def normalize_expr(col: Column, gated: bool = True) -> Column:
-    """Spark Column version (regexp_replace chain, whole-stage codegen).
-
-    gated=True applies the same artifact-detector short-circuit as the
-    pandas path: one rlike decides whether the 18-replace chain runs —
-    clean rows (the overwhelming majority in real corpora) pay one
-    regex scan instead of eighteen.
-    """
-    out = col
-    for lig, rep in LIGATURES.items():
-        out = F.regexp_replace(out, lig, rep)
-    for pat, repl in RULES:
-        # $ in Java regex replacement is a group ref; none of our repls use it
-        out = F.regexp_replace(out, pat, repl)
-    if gated:
-        return F.trim(F.when(col.rlike(_NEEDS_WORK.pattern), out).otherwise(col))
-    return F.trim(out)

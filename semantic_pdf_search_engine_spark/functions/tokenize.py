@@ -5,9 +5,11 @@ Replaces the reference's embedding tokenizer as the unit of matching
 parity with /root/reference/model/tokenizer_config.json do_lower_case
 and the query-side fold at /root/reference/src/fuzzy.rs:12-21).
 
-One regex (`config.TOKEN_SPLIT_RE`), three equivalent implementations:
-Python (oracle), pandas (mapInPandas scale path), Spark Column
-expression (JVM codegen — used for DuckDB-parity queries).
+One regex (`config.TOKEN_SPLIT_RE`), three implementations:
+Python (oracle and query side) and pandas (mapInPandas scale path)
+normalize first and are equivalent; the Spark Column expression
+(`tokens_expr`, JVM codegen) splits raw text, which is the relational
+queries' DuckDB-parity contract.
 """
 
 from __future__ import annotations

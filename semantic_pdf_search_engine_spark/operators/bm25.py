@@ -5,6 +5,10 @@ This is the engine's *semantic spec* and the DuckDB-oracle-parity path.
 The scale path (compressed posting blocks + block-max WAND,
 operators/postings.py + plans/query.py) is property-tested against it.
 
+`corpus()` is the one corpus construction: every query here takes its
+(tf, dfreq, stats) triple from it and scores through
+`score_over_terms`.
+
 Replaces the reference's Qdrant top-k (/root/reference/src/qdrant.rs:70-96):
   - filename filter pushed into the index (qdrant.rs:84-90)  →
     `scope` predicate pushed to the parquet scan by Catalyst;
@@ -94,6 +98,30 @@ def docfreq_df(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
 
 
+def corpus(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The corpus side of every relational BM25 query, built in ONE
+    place: (tf, dfreq, stats).
+
+    - tf: (id, term, dl, tf) from `tf_dl_df`;
+    - dfreq: (term, df) over that SAME tf subtree, so a consumer's
+      candidate and docfreq branches share one exchange
+      (ReusedExchange);
+    - stats: one row (n_docs, avgdl). A NULL-text doc counts as a
+      zero-length doc (`coalesce(dl, 0)`), as it does in the index
+      build and the numpy oracle.
+
+    Consumers restrict dfreq to their term set before it broadcasts
+    into `score_over_terms`."""
+    tf = tf_dl_df(docs, id_col, text_col)
+    stats = dl_df(docs, id_col, text_col).agg(
+        F.count("*").cast("double").alias("n_docs"),
+        F.avg(F.coalesce(F.col("dl"), F.lit(0))).alias("avgdl"),
+    )
+    return tf, docfreq_df(tf, id_col), stats
+
+
 def idf_expr(n_docs, df_col):
     return F.log(F.lit(1.0) + (n_docs - df_col + F.lit(0.5)) / (df_col + F.lit(0.5)))
 
@@ -161,16 +189,10 @@ def bm25_scores(
         # empty-query guard — reference parity (search.rs:20-22)
         return spark.createDataFrame([], f"{id_col} long, score double")
 
-    tf = tf_dl_df(docs, id_col, text_col)
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
     # restrict docfreq to query terms BEFORE the broadcast — we ship k
-    # rows to every executor, not the whole vocabulary. Built over the
-    # SAME tf-with-dl subtree as the candidate stream, so the two
-    # branches share one exchange (ReusedExchange).
-    dfreq = docfreq_df(tf, id_col).filter(F.col("term").isin(q_terms))
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    # rows to every executor, not the whole vocabulary
+    dfreq = dfreq.filter(F.col("term").isin(q_terms))
 
     candidates = tf
     if scope is not None:
@@ -200,7 +222,9 @@ def score_over_terms(
     expansion...), summed per doc. The query-term set rides a
     broadcast; only matching tf rows reach the score agg.
     `dl=None` (the r6 fast shape) means the candidate stream already
-    carries its `dl` column (tf_dl_df) — no per-doc length join at all.
+    carries its `dl` column (tf_dl_df) — no per-doc length join at all;
+    an (id, dl) frame is joined per doc instead (bm25f's weighted
+    lengths).
     `weight_col` (optional column of dfreq_q) scales each term's
     contribution — weighted-query BM25 (Rocchio feedback, boosts)."""
     qcols = ["term", "df"] + ([weight_col] if weight_col else [])
@@ -305,7 +329,7 @@ def boolean_search(
 
     # same fused subtree as bm25_scores' candidate stream, so the
     # candidate-set branches share its exchange (ReusedExchange)
-    tf = tf_dl_df(docs, id_col, text_col)
+    tf = corpus(docs, id_col, text_col)[0]
     cand = None
     if must_terms:
         cand = (
@@ -384,12 +408,7 @@ def more_like_this(
     weight DESC, term ASC), and the m-row term set broadcasts into the
     same candidate-scoring join bm25_scores uses. At 100 TB the extra
     cost over a literal-terms query is one broadcast of m rows."""
-    tf = tf_dl_df(docs, id_col, text_col)
-    dfreq = docfreq_df(tf, id_col)
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
     weight = round_half_up(
         F.col("tf").cast("double")
         * F.log(F.col("n_docs") / F.col("df").cast("double")),
@@ -457,14 +476,9 @@ def _expanded_term_topk(
     regex): filter the VOCAB-sized docfreq by `term_filter` (a Column
     predicate over `term`), ride the shared broadcast scoring tail,
     rank. One definition so the two expansion flavors cannot drift."""
-    tf = tf_dl_df(docs, id_col, text_col)
-    dfreq_q = docfreq_df(tf, id_col).filter(term_filter)
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
     return (
-        score_over_terms(tf, None, dfreq_q, stats, id_col)
+        score_over_terms(tf, None, dfreq.filter(term_filter), stats, id_col)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -518,8 +532,6 @@ def bm25f_topk(
     Scale: one scan + one (doc, term) groupBy + vocab-sized df
     broadcast — the identical shuffle budget as single-field BM25;
     adding fields adds zero corpus passes."""
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
-
     spark = docs.sparkSession
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms or not field_weights:
@@ -551,36 +563,22 @@ def bm25f_topk(
     for i, f in enumerate(fields):
         t = F.lit(field_weights[f]) * F.col(f"tf_{i}").cast("double")
         tfw_expr = t if tfw_expr is None else tfw_expr + t
-    tfw = per_field_tf.select(id_col, "term", tfw_expr.alias("tfw"))
+    # weighted tf and dl take the single-field names, so the shared
+    # scoring tail runs unchanged with the weighted lengths as its `dl`
+    tfw = per_field_tf.select(id_col, "term", tfw_expr.alias("tf"))
 
     dlw_expr = None
     for f in fields:
         t = F.lit(field_weights[f]) * F.size(tokens_expr(F.col(f))).cast("double")
         dlw_expr = t if dlw_expr is None else dlw_expr + t
-    dlw = docs.select(F.col(id_col), dlw_expr.alias("dlw"))
+    dlw = docs.select(F.col(id_col), dlw_expr.alias("dl"))
     stats = dlw.agg(
         F.count("*").cast("double").alias("n_docs"),
-        F.avg("dlw").alias("avgdlw"),
+        F.avg("dl").alias("avgdl"),
     )
-    dfreq_q = (
-        tfw.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
-        .filter(F.col("term").isin(q_terms))
-    )
-    contrib = bm25_contrib_expr(
-        F.col("tfw"),
-        F.col("dlw"),
-        F.col("avgdlw"),
-        idf_expr(F.col("n_docs"), F.col("df").cast("double")),
-    )
+    dfreq_q = docfreq_df(tfw, id_col).filter(F.col("term").isin(q_terms))
     return (
-        tfw.join(F.broadcast(dfreq_q), "term")
-        .join(dlw, id_col)
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", contrib)
-        .groupBy(id_col)
-        .agg(F.sum("contrib").alias("score"))
-        .withColumn("score", round_half_up(F.col("score"), SCORE_DECIMALS))
+        score_over_terms(tfw, dlw, dfreq_q, stats, id_col)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -647,8 +645,7 @@ def fuzzy_search(
     qdf = spark.createDataFrame(
         [(t, len(t)) for t in q_terms], "qterm string, qlen int"
     )
-    tf = tf_dl_df(docs, id_col, text_col)
-    vocab = docfreq_df(tf, id_col)
+    tf, vocab, stats = corpus(docs, id_col, text_col)
     expansion = (
         vocab.join(
             F.broadcast(qdf),
@@ -663,10 +660,6 @@ def fuzzy_search(
         .filter(F.col("w") > 0)
         .groupBy("term", "df")
         .agg(F.max("w").alias("w"))
-    )
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
     )
     return (
         score_over_terms(tf, None, expansion, stats, id_col, weight_col="w")
@@ -709,12 +702,8 @@ def synonym_search(
         .groupBy("term")
         .agg(F.max("w").alias("w"))
     )
-    tf = tf_dl_df(docs, id_col, text_col)
-    expansion = docfreq_df(tf, id_col).join(F.broadcast(wdf), "term")
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
+    expansion = dfreq.join(F.broadcast(wdf), "term")
     return (
         score_over_terms(tf, None, expansion, stats, id_col, weight_col="w")
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -744,12 +733,7 @@ def prf_expand(
     TakeOrderedAndProject(n_terms)."""
     q_terms = sorted(set(tokenize_py(query)))
     winners = bm25_topk(docs, query, k_docs, id_col, text_col).select(id_col)
-    tf = tf_dl_df(docs, id_col, text_col)
-    dfreq = docfreq_df(tf, id_col)
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
     expansion = (
         tf.join(winners, id_col, "left_semi")
         .filter(~F.col("term").isin(q_terms))
@@ -828,14 +812,11 @@ def prf_search(
     )
     # prf_expand excludes the query's own terms, so the union is disjoint
     wterms = wq.unionByName(exp.withColumn("w", F.lit(float(beta))))
-    tf = tf_dl_df(docs, id_col, text_col)
-    dfreq_q = docfreq_df(tf, id_col).join(wterms, "term")
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
+    tf, dfreq, stats = corpus(docs, id_col, text_col)
     return (
-        score_over_terms(tf, None, dfreq_q, stats, id_col, weight_col="w")
+        score_over_terms(
+            tf, None, dfreq.join(wterms, "term"), stats, id_col, weight_col="w"
+        )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )

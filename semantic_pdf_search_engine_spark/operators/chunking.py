@@ -33,7 +33,7 @@ Documented divergences from the reference (deliberate, not oversights):
    repeated-punctuation collapse, chunk.rs:522) before splitting. The
    transcript corpus has no PDF extraction artifacts, so smart_chunks
    operates on the raw turn text; users chunking PDF-derived text
-   should compose functions.normalize.normalize_expr /
+   should compose functions.normalize.normalize_series /
    quality.remove_section_headers upstream (both implemented and
    oracle-checked separately).
 3. Overlap-carry joint: after a flush the reference seeds the next

@@ -57,11 +57,6 @@ def vb_encode_counts(arr: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out.tobytes(), nbytes
 
 
-def vb_encode(arr: np.ndarray) -> bytes:
-    """VByte-encode a 1-D array of unsigned ints."""
-    return vb_encode_counts(arr)[0]
-
-
 def vb_decode(buf: bytes) -> np.ndarray:
     """Decode VByte buffer back to uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)
@@ -79,16 +74,6 @@ def vb_decode(buf: bytes) -> np.ndarray:
     vals = np.zeros(n, dtype=np.uint64)
     np.add.at(vals, group, contrib)
     return vals
-
-
-def delta_encode(sorted_ids: np.ndarray, base: int = 0) -> np.ndarray:
-    """Strictly-increasing ids → gaps (first gap relative to `base`)."""
-    ids = np.ascontiguousarray(sorted_ids, dtype=np.int64)
-    gaps = np.empty(ids.size, dtype=np.uint64)
-    if ids.size:
-        gaps[0] = ids[0] - base
-        gaps[1:] = np.diff(ids)
-    return gaps
 
 
 # ---------------------------------------------------------------------------
@@ -164,15 +149,6 @@ def for_encode_groups(
             pos = bit_start[active] + j
             np.bitwise_or.at(out, pos >> 3, bit << (7 - (pos & 7)).astype(np.uint8))
     return out.tobytes(), group_bytes
-
-
-def for_encode(arr: np.ndarray) -> bytes:
-    """FOR-encode a single 1-D array of unsigned ints as one block."""
-    a = np.ascontiguousarray(arr, dtype=np.uint64)
-    buf, _ = for_encode_groups(
-        a, np.zeros(1, dtype=np.int64), np.asarray([a.size], dtype=np.int64)
-    )
-    return buf
 
 
 def for_decode(buf: bytes) -> np.ndarray:

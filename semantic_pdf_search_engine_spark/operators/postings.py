@@ -43,9 +43,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from semantic_pdf_search_engine_spark.config import B, K1, STRIPE_DOCS
+from semantic_pdf_search_engine_spark.config import STRIPE_DOCS
 from semantic_pdf_search_engine_spark.functions.tokenize import term_freq_map_in_pandas
 from semantic_pdf_search_engine_spark.operators import codec
+from semantic_pdf_search_engine_spark.oracle import bm25_term
 
 # Pruning metadata is stored as RAW POSTING FACTS, not scores:
 # (top_tf, top_dl) are the tf/dl of the posting that maximizes the BM25
@@ -66,41 +67,12 @@ POSTINGS_SCHEMA = (
 _ENCODE_SCHEMA = POSTINGS_SCHEMA.replace("term string", "term_id long")
 
 
-def term_frequencies(
-    docs: DataFrame, text_col: str = "text", mode: str = "arrow"
-) -> DataFrame:
-    """(doc_id, term, tf, dl) — tokenize + term frequencies.
-
-    mode='arrow' (default): the Arrow-batched pandas path — one
-    vectorized pass per batch, map-side aggregated to (doc, term)
-    grain before any shuffle (E2 parity shape,
-    /root/reference/src/embed.rs:44-63). Measured FASTER than the JVM
-    path on this workload: pandas' C string kernels with the
-    artifact-detector gate beat an 18-deep regexp_replace chain in
-    java.util.regex (each chained replace copies the UTF8String).
-
-    mode='jvm': normalize_expr + tokens_expr + explode + hash
-    aggregate, entirely whole-stage codegen — zero Python; kept for
-    environments where Python workers are the constraint. Both modes
-    are pinned EXACTLY equal by tests/test_tf_parity.py.
-    """
-    if mode == "arrow":
-        return term_freq_map_in_pandas(docs, id_cols=("doc_id",), text_col=text_col)
-    from semantic_pdf_search_engine_spark.functions.normalize import normalize_expr
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
-
-    ft = tokens_expr(normalize_expr(F.col(text_col)))  # tokens_expr lowers
-    return (
-        docs.select("doc_id", ft.alias("_ft"))
-        .select(
-            "doc_id",
-            F.size("_ft").cast("int").alias("dl"),
-            F.explode("_ft").alias("term"),
-        )
-        .groupBy("doc_id", "term", "dl")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .select("doc_id", "term", "tf", "dl")
-    )
+def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, term, tf, dl) — tokenize + term frequencies on the
+    Arrow-batched pandas path: one vectorized pass per batch, map-side
+    aggregated to (doc, term) grain before any shuffle (E2 parity
+    shape: the reference's batch embed stage, `src/embed.rs:44-63`)."""
+    return term_freq_map_in_pandas(docs, id_cols=("doc_id",), text_col=text_col)
 
 
 def docfreq(tf: DataFrame) -> DataFrame:
@@ -167,7 +139,6 @@ def build_posting_blocks(
         "term_id", "doc_id", "tf", "dl", "idf"
     )
 
-    k1, b = K1, B
     group_encode = codec.CODECS[codec_name][0]  # module-level fn, pickles by ref
 
     # mapInPandas over repartition+sortWithinPartitions, NOT
@@ -203,11 +174,8 @@ def build_posting_blocks(
                 gaps[1:] = np.diff(docs)
             gaps[starts] = docs[starts] - bases
 
-            # contrib used only to pick the per-block argmax posting;
-            # op order pinned to match oracle.bm25_term bit-for-bit
-            contrib = (idfs * (tfs * (k1 + 1.0))) / (
-                tfs + k1 * (1.0 - b + b * dls / avgdl)
-            )
+            # contrib used only to pick the per-block argmax posting
+            contrib = bm25_term(tfs, dls, avgdl, idfs)
             # per-group argmax via reduceat on (contrib) then a masked
             # first-match scan — contrib ties resolve to the earliest
             # (lowest doc_id) posting, deterministic

@@ -22,8 +22,9 @@ def idf(n_docs: int, df: int) -> float:
 
 
 def bm25_term(tf: float, dl: float, avgdl: float, term_idf: float) -> float:
-    # parenthesization pinned — identical op order in oracle, posting
-    # build (block-max bounds) and stripe scoring → bit-identical float64
+    # parenthesization pinned. The posting build's argmax and the
+    # scoring kernel call this same function on numpy arrays, so every
+    # numpy BM25 path is bit-identical float64 to the oracle.
     return (term_idf * (tf * (K1 + 1.0))) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 

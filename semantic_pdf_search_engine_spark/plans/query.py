@@ -68,6 +68,7 @@ from semantic_pdf_search_engine_spark.functions.rounding import (
     np_round_half_up,
     round_half_up,
 )
+from semantic_pdf_search_engine_spark.oracle import bm25_term
 from semantic_pdf_search_engine_spark.sources.index_store import (
     InvertedIndex,
     term_bucket_of,
@@ -159,8 +160,8 @@ def _score_blocks(
     (query_id, stripe_id, term) and are scored in slices of whole
     (query, stripe) groups, columnar within a slice: each binary column
     is decoded once (`codec.decode_rows`), a segmented cumsum turns gaps
-    into doc offsets, one contribution array is computed in the op
-    order of oracle.bm25_term, and one `np.bincount` sums it over
+    into doc offsets, one contribution array is computed by
+    oracle.bm25_term itself, and one `np.bincount` sums it over
     (group, doc offset) slots. bincount adds in array order, which is
     term order within a group, so every doc's score is the numpy
     oracle's canonical-order sum, bit for bit. Returns each group's
@@ -214,9 +215,7 @@ def _score_slice(blocks, stripe_docs, avgdl, k, codec_name, scope_ids, scope_ran
         keep = slice(None)
     row, off, tfs, dls = row[keep], off[keep], tfs[keep], dls[keep]
     idf = blocks.column("idf").to_numpy()[row]
-    k1, b = K1, B
-    # op order pinned to match oracle.bm25_term bit-for-bit
-    contrib = (idf * (tfs * (k1 + 1.0))) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    contrib = bm25_term(tfs, dls, avgdl, idf)
     new_group = np.r_[True, (qid[1:] != qid[:-1]) | (stripe[1:] != stripe[:-1])]
     group_of_row = np.cumsum(new_group) - 1
     slot = group_of_row[row] * stripe_docs + off

@@ -47,12 +47,12 @@ toks AS (
 )"""
 
 # dl computed from `documents` directly (NOT from the unnested toks CTE,
-# which silently drops zero-token docs) so n_docs/avgdl match Spark's
-# dl_df exactly even when a doc tokenizes to nothing.
+# which silently drops zero-token docs), and a NULL text counts as 0
+# tokens, so n_docs/avgdl match bm25.corpus's stats for every doc.
 _DL_SQL = f"""dl AS (
     SELECT doc_id,
-           CAST(len(list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                                x -> x <> '')) AS INT) AS dl
+           CAST(COALESCE(len(list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
+                                         x -> x <> '')), 0) AS INT) AS dl
     FROM documents
 )"""
 
@@ -430,10 +430,10 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dl = bm25.dl_df(_docs(spark, sf_dir))
-    return dl.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        round_half_up(F.avg("dl"), SCORE_DECIMALS).alias("avgdl"),
+    stats = bm25.corpus(_docs(spark, sf_dir))[2]
+    return stats.select(
+        F.col("n_docs").cast("long").alias("n_docs"),
+        round_half_up(F.col("avgdl"), SCORE_DECIMALS).alias("avgdl"),
     )
 
 

@@ -336,9 +336,11 @@ def test_scoped_search_non_contiguous_conv(spark, tmp_path, both_paths, monkeypa
 
     # brute twin over NORMALIZED text (the index tokenizes normalized
     # turns; relational bm25_topk tokenizes its input as-is)
-    from semantic_pdf_search_engine_spark.functions.normalize import normalize_expr
+    from semantic_pdf_search_engine_spark.functions.normalize import normalize_py
 
-    docs = idx.docs.withColumn("text", normalize_expr(F.col("text")))
+    pdocs = idx.docs.select("doc_id", "conv_id", "text").toPandas()
+    pdocs["text"] = pdocs["text"].map(normalize_py)
+    docs = spark.createDataFrame(pdocs)
     members = {
         r["doc_id"]
         for r in docs.filter(F.col("conv_id") == "conv00000005")

@@ -341,3 +341,32 @@ def test_more_like_this_indexed_equals_relational(spark, tmp_path_factory):
     rel = [tuple(r) for r in more_like_this(docs, 0, m=3, k=5).collect()]
     srv = [tuple(r) for r in more_like_this_indexed(idx, 0, m=3, k=5).collect()]
     assert rel == srv and rel  # identical, non-empty, same order
+
+
+def test_null_text_is_a_zero_length_doc(spark, tmp_path_factory, both_paths):
+    """A NULL, an empty and a punctuation-only turn are all zero-length
+    docs in N and avgdl, on the relational spec, the numpy oracle and
+    both index paths alike."""
+    from semantic_pdf_search_engine_spark.operators.bm25 import bm25_topk
+
+    texts = ["alpha beta", None, "", "?! ...", "alpha", "beta gamma alpha"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    transcripts = docs.select(
+        F.format_string("%012d", F.col("doc_id")).alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        "text",
+    )
+    idx = build_index(
+        spark, transcripts, str(tmp_path_factory.mktemp("null_idx")), stripe_docs=64
+    )
+    oracle = BM25Oracle(list(enumerate(texts)), normalize=False)
+
+    def rounded(rows):
+        return [(d, round(s, 9)) for d, s in rows]
+
+    for q in ("alpha", "beta", "alpha beta gamma"):
+        want = rounded(oracle.top_k(q, K))
+        assert rounded(_topk(bm25_topk(docs, q, K, round_scores=False))) == want, q
+        for path in both_paths():
+            got = rounded(_topk(score_topk(idx, q, K, round_scores=False)))
+            assert got == want, (path, q)

