@@ -6,8 +6,11 @@ The scale path (compressed posting blocks + block-max WAND,
 operators/postings.py + plans/query.py) is property-tested against it.
 
 `corpus()` is the one corpus construction: every query here takes its
-(tf, dfreq, stats) triple from it and scores through
-`score_over_terms`.
+`Corpus` (docs, tf, dfreq, n_docs, avgdl) from it and scores through
+`score_over_terms`. An operator accepts either a documents DataFrame or
+a `Corpus` built earlier (the registry keeps one persisted per
+documents table), so a caller that scores many queries over one table
+tokenizes it once.
 
 Replaces the reference's Qdrant top-k (/root/reference/src/qdrant.rs:70-96):
   - filename filter pushed into the index (qdrant.rs:84-90)  →
@@ -21,10 +24,14 @@ Scale notes (100 TB / 10^12 turns):
   - the docfreq table is ~|vocab| rows → broadcast side of the score
     join (hot Zipf head would skew a shuffle join; broadcasting removes
     the shuffle entirely);
-  - corpus stats (2 numbers) are a broadcast scalar cross join.
+  - corpus stats (2 numbers) are collected once per corpus (one job)
+    and enter every score expression as literals — no stats subplan,
+    no cross join.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,28 +105,60 @@ def docfreq_df(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
 
 
-def corpus(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The corpus side of every relational BM25 query, built in ONE
-    place: (tf, dfreq, stats).
+class Corpus(NamedTuple):
+    """The corpus side of every relational BM25 query.
 
+    - docs: the documents DataFrame it was built from (operators that
+      need other document columns read them here);
     - tf: (id, term, dl, tf) from `tf_dl_df`;
     - dfreq: (term, df) over that SAME tf subtree, so a consumer's
       candidate and docfreq branches share one exchange
-      (ReusedExchange);
-    - stats: one row (n_docs, avgdl). A NULL-text doc counts as a
-      zero-length doc (`coalesce(dl, 0)`), as it does in the index
-      build and the numpy oracle.
+      (ReusedExchange), or one cache when tf is persisted;
+    - n_docs, avgdl: the corpus stats as driver-side floats (avgdl is
+      None for an empty table)."""
 
-    Consumers restrict dfreq to their term set before it broadcasts
-    into `score_over_terms`."""
+    docs: DataFrame
+    tf: DataFrame
+    dfreq: DataFrame
+    n_docs: float
+    avgdl: float | None
+
+    def unpersist(self) -> None:
+        """Release a persisted tf/dfreq (a no-op when never persisted)."""
+        self.tf.unpersist()
+        self.dfreq.unpersist()
+
+
+def corpus(
+    docs: DataFrame | Corpus, id_col: str = "doc_id", text_col: str = "text"
+) -> Corpus:
+    """The one corpus construction: a `Corpus` over a documents
+    DataFrame, or `docs` itself when it already is one.
+
+    tf and dfreq stay lazy; the stats are collected here, one job. A
+    NULL-text doc counts as a zero-length doc (`coalesce(dl, 0)`), as
+    it does in the index build and the numpy oracle. Consumers restrict
+    dfreq to their term set before it broadcasts into
+    `score_over_terms`."""
+    if isinstance(docs, Corpus):
+        return docs
     tf = tf_dl_df(docs, id_col, text_col)
-    stats = dl_df(docs, id_col, text_col).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg(F.coalesce(F.col("dl"), F.lit(0))).alias("avgdl"),
+    stats = (
+        dl_df(docs, id_col, text_col)
+        .agg(
+            F.count("*").cast("double").alias("n_docs"),
+            F.avg(F.coalesce(F.col("dl"), F.lit(0))).alias("avgdl"),
+        )
+        .first()
     )
-    return tf, docfreq_df(tf, id_col), stats
+    return Corpus(docs, tf, docfreq_df(tf, id_col), stats["n_docs"], stats["avgdl"])
+
+
+def no_hits(docs: DataFrame | Corpus, schema: str) -> DataFrame:
+    """The empty answer of a query with no usable terms, built without
+    touching the corpus (no stats job for a DataFrame input)."""
+    src = docs.docs if isinstance(docs, Corpus) else docs
+    return src.sparkSession.createDataFrame([], schema)
 
 
 def idf_expr(n_docs, df_col):
@@ -135,7 +174,7 @@ def bm25_contrib_expr(tf_col, dl_col, avgdl, idf_col):
 
 
 def bm25_topk(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     k: int = DEFAULT_TOP_K,
     id_col: str = "doc_id",
@@ -165,7 +204,7 @@ def bm25_topk(
 
 
 def bm25_scores(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -183,65 +222,67 @@ def bm25_scores(
     k array passes per row on both the stats and candidate scans. The
     relational explode+join form keeps whole-stage codegen and one
     shared exchange; see OPTIMIZATION_r06.md.)"""
-    spark = docs.sparkSession
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
         # empty-query guard — reference parity (search.rs:20-22)
-        return spark.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
 
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
     # restrict docfreq to query terms BEFORE the broadcast — we ship k
     # rows to every executor, not the whole vocabulary
-    dfreq = dfreq.filter(F.col("term").isin(q_terms))
+    dfreq = c.dfreq.filter(F.col("term").isin(q_terms))
 
-    candidates = tf
+    candidates = c.tf
     if scope is not None:
-        scoped_ids = docs.filter(scope).select(id_col)
-        candidates = tf.join(scoped_ids, id_col, "left_semi")
+        scoped_ids = c.docs.filter(scope).select(id_col)
+        candidates = c.tf.join(scoped_ids, id_col, "left_semi")
     if scope_ids is not None:
         # candidate restriction by an id DataFrame (boolean_search's
         # conjunctive/negated set); stats stay GLOBAL, same as `scope`
         candidates = candidates.join(scope_ids.select(id_col), id_col, "left_semi")
     # the broadcast join to the query-restricted dfreq both filters the
     # candidate stream to the query terms and attaches their df
-    return score_over_terms(candidates, None, dfreq, stats, id_col, round_scores)
+    return score_over_terms(c._replace(tf=candidates), dfreq, id_col, round_scores)
 
 
 def score_over_terms(
-    tf_candidates: DataFrame,
-    dl: DataFrame | None,
+    c: Corpus,
     dfreq_q: DataFrame,
-    stats: DataFrame,
     id_col: str = "doc_id",
     round_scores: bool = True,
     weight_col: str | None = None,
+    dl: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared BM25 scoring tail: a candidate (id, term, tf) stream
-    inner-joined to a PRE-RESTRICTED broadcastable (term, df) set
-    (literal query terms, a doc's top TF-IDF terms, a prefix
-    expansion...), summed per doc. The query-term set rides a
-    broadcast; only matching tf rows reach the score agg.
+    """Shared BM25 scoring tail: the corpus's candidate (id, term, tf)
+    stream `c.tf` inner-joined to a PRE-RESTRICTED broadcastable
+    (term, df) set (literal query terms, a doc's top TF-IDF terms, a
+    prefix expansion...), summed per doc. The query-term set rides a
+    broadcast; only matching tf rows reach the score agg. A caller
+    that restricts the candidates passes `c._replace(tf=...)`.
     `dl=None` (the r6 fast shape) means the candidate stream already
     carries its `dl` column (tf_dl_df) — no per-doc length join at all;
     an (id, dl) frame is joined per doc instead (bm25f's weighted
     lengths).
+    The corpus stats `c.n_docs`/`c.avgdl` are driver-side floats; they
+    enter the contribution as literals in the op order a broadcast
+    stats row had, so scores are unchanged and the plan carries no
+    stats subplan or cross join.
     `weight_col` (optional column of dfreq_q) scales each term's
     contribution — weighted-query BM25 (Rocchio feedback, boosts)."""
     qcols = ["term", "df"] + ([weight_col] if weight_col else [])
     contrib = bm25_contrib_expr(
         F.col("tf").cast("double"),
         F.col("dl").cast("double"),
-        F.col("avgdl"),
-        idf_expr(F.col("n_docs"), F.col("df").cast("double")),
+        F.lit(c.avgdl),
+        idf_expr(F.lit(c.n_docs), F.col("df").cast("double")),
     )
     if weight_col:
         contrib = F.col(weight_col) * contrib
-    scored = tf_candidates.join(F.broadcast(dfreq_q.select(*qcols)), "term")
+    scored = c.tf.join(F.broadcast(dfreq_q.select(*qcols)), "term")
     if dl is not None:
         scored = scored.join(dl, id_col)
     scored = (
-        scored.crossJoin(F.broadcast(stats))
-        .withColumn("contrib", contrib)
+        scored.withColumn("contrib", contrib)
         .groupBy(id_col)
         .agg(F.sum("contrib").alias("score"))
     )
@@ -251,7 +292,7 @@ def score_over_terms(
 
 
 def collapse_topk(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     collapse_col: str,
     k: int = DEFAULT_TOP_K,
@@ -273,8 +314,9 @@ def collapse_topk(
     """
     from pyspark.sql import Window
 
-    scored = bm25_scores(docs, query, id_col, text_col)
-    keyed = scored.join(docs.select(id_col, collapse_col), id_col)
+    c = corpus(docs, id_col, text_col)
+    scored = bm25_scores(c, query, id_col, text_col)
+    keyed = scored.join(c.docs.select(id_col, collapse_col), id_col)
     w = Window.partitionBy(collapse_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     )
@@ -289,7 +331,7 @@ def collapse_topk(
 
 
 def boolean_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     must: list[str],
     should: list[str] | None = None,
     must_not: list[str] | None = None,
@@ -325,11 +367,12 @@ def boolean_search(
     if not must_terms and not quorum:
         # no positive clause constrains the candidate set — refuse
         # rather than scan everything (ES rejects this shape too)
-        return docs.sparkSession.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
 
     # same fused subtree as bm25_scores' candidate stream, so the
     # candidate-set branches share its exchange (ReusedExchange)
-    tf = corpus(docs, id_col, text_col)[0]
+    c = corpus(docs, id_col, text_col)
+    tf = c.tf
     cand = None
     if must_terms:
         cand = (
@@ -352,7 +395,7 @@ def boolean_search(
         excl = tf.filter(F.col("term").isin(not_terms)).select(id_col).distinct()
         cand = cand.join(excl, id_col, "left_anti")
     return bm25_topk(
-        docs,
+        c,
         " ".join(must_terms + should_terms),
         k,
         id_col=id_col,
@@ -363,7 +406,7 @@ def boolean_search(
 
 
 def search_facets(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     facet_col: str,
     id_col: str = "doc_id",
@@ -376,9 +419,10 @@ def search_facets(
     One extra groupBy on the facet key after the score agg; best_score
     is max of the already-rounded per-doc scores, so the facet row is
     exactly reproducible from the ranked results."""
-    scored = bm25_scores(docs, query, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
+    scored = bm25_scores(c, query, id_col, text_col)
     return (
-        scored.join(docs.select(id_col, facet_col), id_col)
+        scored.join(c.docs.select(id_col, facet_col), id_col)
         .groupBy(facet_col)
         .agg(
             F.count("*").cast("long").alias("n_hits"),
@@ -388,7 +432,7 @@ def search_facets(
 
 
 def more_like_this(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     doc_id_val,
     m: int = 8,
     k: int = DEFAULT_TOP_K,
@@ -408,16 +452,15 @@ def more_like_this(
     weight DESC, term ASC), and the m-row term set broadcasts into the
     same candidate-scoring join bm25_scores uses. At 100 TB the extra
     cost over a literal-terms query is one broadcast of m rows."""
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
     weight = round_half_up(
         F.col("tf").cast("double")
-        * F.log(F.col("n_docs") / F.col("df").cast("double")),
+        * F.log(F.lit(c.n_docs) / F.col("df").cast("double")),
         SCORE_DECIMALS,
     )
     qterms = (
-        tf.filter(F.col(id_col) == doc_id_val)
-        .join(dfreq, "term")
-        .crossJoin(F.broadcast(stats))
+        c.tf.filter(F.col(id_col) == doc_id_val)
+        .join(c.dfreq, "term")
         .select("term", weight.alias("weight"))
         .orderBy(F.col("weight").desc(), F.col("term").asc())
         .limit(m)
@@ -425,9 +468,7 @@ def more_like_this(
     )
     # dfreq semi-filtered to qterms (<=m rows) both restricts tf to
     # the m query terms and attaches their df
-    scored = score_over_terms(
-        tf, None, dfreq.join(qterms, "term", "left_semi"), stats, id_col
-    )
+    scored = score_over_terms(c, c.dfreq.join(qterms, "term", "left_semi"), id_col)
     return (
         scored.filter(F.col(id_col) != doc_id_val)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -436,7 +477,7 @@ def more_like_this(
 
 
 def search_histogram(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     field_col: str,
     width: int,
@@ -450,13 +491,14 @@ def search_histogram(
     width; one extra groupBy on the bin key after the score agg, and
     best_score aggregates the already-rounded per-doc scores so every
     bar is exactly reproducible from the ranked results."""
-    scored = bm25_scores(docs, query, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
+    scored = bm25_scores(c, query, id_col, text_col)
     bin_expr = (
         F.floor(F.col(field_col).cast("double") / F.lit(float(width)))
         * F.lit(width)
     ).cast("long")
     return (
-        scored.join(docs.select(id_col, field_col), id_col)
+        scored.join(c.docs.select(id_col, field_col), id_col)
         .groupBy(bin_expr.alias("bin"))
         .agg(
             F.count("*").cast("long").alias("n_hits"),
@@ -466,7 +508,7 @@ def search_histogram(
 
 
 def _expanded_term_topk(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     term_filter,
     k: int,
     id_col: str,
@@ -476,16 +518,16 @@ def _expanded_term_topk(
     regex): filter the VOCAB-sized docfreq by `term_filter` (a Column
     predicate over `term`), ride the shared broadcast scoring tail,
     rank. One definition so the two expansion flavors cannot drift."""
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
     return (
-        score_over_terms(tf, None, dfreq.filter(term_filter), stats, id_col)
+        score_over_terms(c, c.dfreq.filter(term_filter), id_col)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
 
 def wildcard_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     prefix: str,
     k: int = DEFAULT_TOP_K,
     id_col: str = "doc_id",
@@ -500,7 +542,7 @@ def wildcard_search(
     broadcast the literal-terms path uses; at 100 TB the expansion is
     bounded by |vocab with that prefix|, not corpus size."""
     if not prefix:
-        return docs.sparkSession.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
     return _expanded_term_topk(
         docs, F.col("term").startswith(prefix), k, id_col, text_col
     )
@@ -529,14 +571,23 @@ def bm25f_topk(
     are floating aggregations (same class as every BM25 path here,
     absorbed by SCORE_DECIMALS rounding).
 
+    A NULL field has zero tokens, as an empty one does: its tf and dl
+    are 0, so the doc keeps its other fields' matches and counts in
+    avgdl.
+
     Scale: one scan + one (doc, term) groupBy + vocab-sized df
     broadcast — the identical shuffle budget as single-field BM25;
-    adding fields adds zero corpus passes."""
-    spark = docs.sparkSession
+    adding fields adds zero corpus passes. Its weighted stats are
+    collected once per call (one job), like `corpus()`'s."""
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms or not field_weights:
-        return spark.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
     fields = sorted(field_weights)  # pinned field order
+
+    def _toks(fname):
+        return F.coalesce(
+            tokens_expr(F.col(fname)), F.array().cast("array<string>")
+        )
 
     # one scan: explode the concatenation of per-field (term, field)
     # structs. The tag lambda takes ONE arg through a closure factory —
@@ -546,7 +597,7 @@ def bm25f_topk(
         return lambda t: F.struct(t.alias("term"), F.lit(fname).alias("field"))
 
     tagged = F.flatten(
-        F.array(*[F.transform(tokens_expr(F.col(f)), _tag(f)) for f in fields])
+        F.array(*[F.transform(_toks(f), _tag(f)) for f in fields])
     )
     tok = docs.select(
         F.col(id_col), F.explode(tagged).alias("tk")
@@ -569,23 +620,25 @@ def bm25f_topk(
 
     dlw_expr = None
     for f in fields:
-        t = F.lit(field_weights[f]) * F.size(tokens_expr(F.col(f))).cast("double")
+        t = F.lit(field_weights[f]) * F.size(_toks(f)).cast("double")
         dlw_expr = t if dlw_expr is None else dlw_expr + t
     dlw = docs.select(F.col(id_col), dlw_expr.alias("dl"))
     stats = dlw.agg(
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
-    )
-    dfreq_q = docfreq_df(tfw, id_col).filter(F.col("term").isin(q_terms))
+    ).first()
+    dfreq = docfreq_df(tfw, id_col)
+    weighted = Corpus(docs, tfw, dfreq, stats["n_docs"], stats["avgdl"])
+    dfreq_q = dfreq.filter(F.col("term").isin(q_terms))
     return (
-        score_over_terms(tfw, dlw, dfreq_q, stats, id_col)
+        score_over_terms(weighted, dfreq_q, id_col, dl=dlw)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
 
 def regex_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     pattern: str,
     k: int = DEFAULT_TOP_K,
     id_col: str = "doc_id",
@@ -602,7 +655,7 @@ def regex_search(
     min/max-skippable. At 100 TB the cost above plain BM25 is one
     regex evaluation per vocab term, zero extra corpus passes."""
     if not pattern:
-        return docs.sparkSession.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
     # anchor both ends: term-level regex semantics (Lucene RegexpQuery
     # matches the WHOLE term; DuckDB twin uses regexp_full_match)
     return _expanded_term_topk(
@@ -611,7 +664,7 @@ def regex_search(
 
 
 def fuzzy_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     k: int = DEFAULT_TOP_K,
     max_dist: int = 1,
@@ -638,16 +691,15 @@ def fuzzy_search(
     plain BM25 is |vocab in the length band| levenshtein DPs — vocab
     is Heaps-law sublinear and the DP is whole-stage-codegen'd
     (F.levenshtein), zero Python."""
-    spark = docs.sparkSession
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
-        return spark.createDataFrame([], f"{id_col} long, score double")
-    qdf = spark.createDataFrame(
+        return no_hits(docs, f"{id_col} long, score double")
+    c = corpus(docs, id_col, text_col)
+    qdf = c.docs.sparkSession.createDataFrame(
         [(t, len(t)) for t in q_terms], "qterm string, qlen int"
     )
-    tf, vocab, stats = corpus(docs, id_col, text_col)
     expansion = (
-        vocab.join(
+        c.dfreq.join(
             F.broadcast(qdf),
             F.abs(F.length("term") - F.col("qlen")) <= F.lit(max_dist),
         )
@@ -662,14 +714,14 @@ def fuzzy_search(
         .agg(F.max("w").alias("w"))
     )
     return (
-        score_over_terms(tf, None, expansion, stats, id_col, weight_col="w")
+        score_over_terms(c, expansion, id_col, weight_col="w")
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
 
 def synonym_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     synonyms: dict[str, list[str]],
     syn_weight: float = 0.8,
@@ -689,30 +741,29 @@ def synonym_search(
     rides the same broadcast every term set takes; at 100 TB the plan
     is byte-identical to plain BM25 plus a broadcast of the expansion
     frame. Only synonyms of terms ACTUALLY IN the query expand."""
-    spark = docs.sparkSession
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
-        return spark.createDataFrame([], f"{id_col} long, score double")
+        return no_hits(docs, f"{id_col} long, score double")
     rows = [(t, 1.0) for t in q_terms]
     for qt, syns in synonyms.items():
         if qt in q_terms:
             rows.extend((s, float(syn_weight)) for s in syns)
+    c = corpus(docs, id_col, text_col)
     wdf = (
-        spark.createDataFrame(rows, "term string, w double")
+        c.docs.sparkSession.createDataFrame(rows, "term string, w double")
         .groupBy("term")
         .agg(F.max("w").alias("w"))
     )
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
-    expansion = dfreq.join(F.broadcast(wdf), "term")
+    expansion = c.dfreq.join(F.broadcast(wdf), "term")
     return (
-        score_over_terms(tf, None, expansion, stats, id_col, weight_col="w")
+        score_over_terms(c, expansion, id_col, weight_col="w")
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
 
 def prf_expand(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     k_docs: int = DEFAULT_TOP_K,
     n_terms: int = 10,
@@ -732,19 +783,18 @@ def prf_expand(
     by k_docs x avg doc vocab, and the final rank is
     TakeOrderedAndProject(n_terms)."""
     q_terms = sorted(set(tokenize_py(query)))
-    winners = bm25_topk(docs, query, k_docs, id_col, text_col).select(id_col)
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
+    winners = bm25_topk(c, query, k_docs, id_col, text_col).select(id_col)
     expansion = (
-        tf.join(winners, id_col, "left_semi")
+        c.tf.join(winners, id_col, "left_semi")
         .filter(~F.col("term").isin(q_terms))
         .groupBy("term")
         .agg(F.sum("tf").cast("double").alias("tf_sum"))
-        .join(dfreq, "term")
-        .crossJoin(F.broadcast(stats))
+        .join(c.dfreq, "term")
         .select(
             "term",
             round_half_up(
-                F.col("tf_sum") * F.log(F.col("n_docs") / F.col("df").cast("double")),
+                F.col("tf_sum") * F.log(F.lit(c.n_docs) / F.col("df").cast("double")),
                 SCORE_DECIMALS,
             ).alias("weight"),
         )
@@ -753,7 +803,7 @@ def prf_expand(
 
 
 def search_after(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     cursor: tuple[float, int] | None = None,
     k: int = DEFAULT_TOP_K,
@@ -782,7 +832,7 @@ def search_after(
 
 
 def prf_search(
-    docs: DataFrame,
+    docs: DataFrame | Corpus,
     query: str,
     k: int = DEFAULT_TOP_K,
     k_docs: int = DEFAULT_TOP_K,
@@ -802,21 +852,18 @@ def prf_search(
     set stays a DataFrame (union of a literal q-term frame and the
     bounded expansion page) and rides the same broadcast as every
     other term set through score_over_terms(weight_col=...)."""
-    spark = docs.sparkSession
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
-        return spark.createDataFrame([], f"{id_col} long, score double")
-    exp = prf_expand(docs, query, k_docs, n_terms, id_col, text_col).select("term")
-    wq = spark.createDataFrame(
+        return no_hits(docs, f"{id_col} long, score double")
+    c = corpus(docs, id_col, text_col)
+    exp = prf_expand(c, query, k_docs, n_terms, id_col, text_col).select("term")
+    wq = c.docs.sparkSession.createDataFrame(
         [(t, 1.0) for t in q_terms], "term string, w double"
     )
     # prf_expand excludes the query's own terms, so the union is disjoint
     wterms = wq.unionByName(exp.withColumn("w", F.lit(float(beta))))
-    tf, dfreq, stats = corpus(docs, id_col, text_col)
     return (
-        score_over_terms(
-            tf, None, dfreq.join(wterms, "term"), stats, id_col, weight_col="w"
-        )
+        score_over_terms(c, c.dfreq.join(wterms, "term"), id_col, weight_col="w")
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )

@@ -85,7 +85,8 @@ def hybrid_topk(
     top-n (vec ids aliased onto doc ids), RRF-fused to the k best.
     Both input pages keep their own audited plans (bm25_topk's pruned
     candidate join; cosine_topk_over's rounded TakeOrdered); fusion
-    touches ≤ 2n rows."""
+    touches ≤ 2n rows. `docs` is a documents DataFrame or a
+    `bm25.Corpus`, passed through to bm25_topk."""
     from semantic_pdf_search_engine_spark.operators.bm25 import bm25_topk
     from semantic_pdf_search_engine_spark.operators.similarity import (
         cosine_topk_over,

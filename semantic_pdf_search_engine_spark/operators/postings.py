@@ -292,7 +292,8 @@ def positional_postings(
         F.col(id_col), F.posexplode(toks).alias("pos0", "term")
     )
     if terms is not None:
-        exploded = exploded.filter(F.col("term").isin(list(set(terms))))
+        # sorted: the plan's IN-list order must not follow the hash seed
+        exploded = exploded.filter(F.col("term").isin(sorted(set(terms))))
     return (
         exploded.groupBy("term", id_col)
         .agg(
@@ -703,17 +704,23 @@ def best_passage(
     winner docs only — k docs, never the corpus. Plan: winners
     (TakeOrderedAndProject) → semi-join restricts the positional
     postings stream → per-doc flatten + sort → transform/filter fold;
-    zero Python, zero extra corpus scans."""
+    zero Python, zero extra corpus scans. `docs` is a documents
+    DataFrame or a `bm25.Corpus`; positions come from its documents."""
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-    from semantic_pdf_search_engine_spark.operators.bm25 import bm25_topk
+    from semantic_pdf_search_engine_spark.operators.bm25 import (
+        bm25_topk,
+        corpus,
+        no_hits,
+    )
 
     q_terms = sorted(set(tokenize_py(query)))
     if not q_terms:
-        return docs.sparkSession.createDataFrame(
-            [], f"{id_col} long, score double, win_start int, n_matched int"
+        return no_hits(
+            docs, f"{id_col} long, score double, win_start int, n_matched int"
         )
-    winners = bm25_topk(docs, query, k, id_col, text_col)
-    post = positional_postings(docs, q_terms, id_col, text_col)
+    c = corpus(docs, id_col, text_col)
+    winners = bm25_topk(c, query, k, id_col, text_col)
+    post = positional_postings(c.docs, q_terms, id_col, text_col)
     ps = (
         post.join(winners.select(id_col), id_col, "leftsemi")
         .groupBy(id_col)

@@ -123,6 +123,25 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
+def _corpus(spark: SparkSession, sf_dir: str) -> bm25.Corpus:
+    """Build-once store of the relational corpus (`bm25.corpus` over
+    the documents table): tf and dfreq persisted and materialized once
+    per session, the stats held as driver-side floats. Every relational
+    BM25 query reads it instead of re-tokenizing the table. Memoized
+    like the index handles, on the table's cheap signature, so a
+    rewritten table rebuilds the store and the replaced one is
+    unpersisted. In memory only: no disk cache, no build_index."""
+    data_path = f"{sf_dir}/documents.parquet"
+    hit = _cached_handle(spark, "corpus", sf_dir, data_path)
+    if hit is not None:
+        return hit
+    c = bm25.corpus(_docs(spark, sf_dir))
+    # tf first: dfreq's plan then reads the tf cache, not the table
+    c.tf.persist().count()
+    c.dfreq.persist().count()
+    return _remember_handle(spark, "corpus", sf_dir, data_path, c)
+
+
 def q_tokenize_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25.tf_df(_docs(spark, sf_dir))
 
@@ -169,7 +188,7 @@ def q_search_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field-collapsed BM25: flagship query, at most one hit per
     `source` (the conversation/file analog), k best groups."""
     return bm25.collapse_topk(
-        _docs(spark, sf_dir), FLAGSHIP_QUERY, "source", DEFAULT_TOP_K
+        _corpus(spark, sf_dir), FLAGSHIP_QUERY, "source", DEFAULT_TOP_K
     )
 
 
@@ -180,9 +199,9 @@ def q_term_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the Jaro-Winkler fuzzy half stays rows-only in fuzzy_spans)."""
     from semantic_pdf_search_engine_spark.operators.spans import snippet_exprs
 
-    docs = _docs(spark, sf_dir)
-    winners = bm25.bm25_topk(docs, FLAGSHIP_QUERY, DEFAULT_TOP_K)
-    joined = winners.join(docs.select("doc_id", "text"), "doc_id")
+    c = _corpus(spark, sf_dir)
+    winners = bm25.bm25_topk(c, FLAGSHIP_QUERY, DEFAULT_TOP_K)
+    joined = winners.join(c.docs.select("doc_id", "text"), "doc_id")
     off, snip = snippet_exprs(F.col("text"), _FLAGSHIP_TERMS)
     return joined.select(
         "doc_id",
@@ -241,7 +260,7 @@ def q_prf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion terms 0.4) → re-ranked top-10. Hard oracle (weighted
     union of term sets + weighted score twin)."""
     return bm25.prf_search(
-        _docs(spark, sf_dir),
+        _corpus(spark, sf_dir),
         FLAGSHIP_QUERY,
         DEFAULT_TOP_K,
         DEFAULT_TOP_K,
@@ -257,7 +276,7 @@ def q_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted-BM25 top-10. 'sow filtr' finds slow/row/filter docs.
     Hard oracle (DuckDB levenshtein + the weighted score twin)."""
     return bm25.fuzzy_search(
-        _docs(spark, sf_dir), FUZZY_QUERY, DEFAULT_TOP_K, FUZZY_MAX_DIST
+        _corpus(spark, sf_dir), FUZZY_QUERY, DEFAULT_TOP_K, FUZZY_MAX_DIST
     )
 
 
@@ -267,7 +286,7 @@ def q_synonym_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must drop at the docfreq join). Hard oracle (weighted union
     twin)."""
     return bm25.synonym_search(
-        _docs(spark, sf_dir), FLAGSHIP_QUERY, SYNONYMS, SYN_WEIGHT, DEFAULT_TOP_K
+        _corpus(spark, sf_dir), FLAGSHIP_QUERY, SYNONYMS, SYN_WEIGHT, DEFAULT_TOP_K
     )
 
 
@@ -305,7 +324,7 @@ def q_best_passage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_pdf_search_engine_spark.operators.postings import best_passage
 
     return best_passage(
-        _docs(spark, sf_dir), FLAGSHIP_QUERY, PASSAGE_WINDOW, DEFAULT_TOP_K
+        _corpus(spark, sf_dir), FLAGSHIP_QUERY, PASSAGE_WINDOW, DEFAULT_TOP_K
     )
 
 
@@ -318,7 +337,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_pdf_search_engine_spark.operators.fusion import hybrid_topk
 
     return hybrid_topk(
-        _docs(spark, sf_dir),
+        _corpus(spark, sf_dir),
         _emb(spark, sf_dir),
         FLAGSHIP_QUERY,
         _query_vec(sf_dir),
@@ -333,10 +352,10 @@ def q_search_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
     opaque-cursor protocol a serving API runs (client returns the
     cursor, server filters strictly-after). Hard oracle (ranks
     k+1..2k of the same scored stream)."""
-    docs = _docs(spark, sf_dir)
-    page1 = bm25.bm25_topk(docs, FLAGSHIP_QUERY, DEFAULT_TOP_K).collect()
+    c = _corpus(spark, sf_dir)
+    page1 = bm25.bm25_topk(c, FLAGSHIP_QUERY, DEFAULT_TOP_K).collect()
     cur = (page1[-1]["score"], page1[-1]["doc_id"])
-    return bm25.search_after(docs, FLAGSHIP_QUERY, cur, DEFAULT_TOP_K)
+    return bm25.search_after(c, FLAGSHIP_QUERY, cur, DEFAULT_TOP_K)
 
 
 def q_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +393,9 @@ def q_wildcard_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjunct with its own idf; expansion is a relational StartsWith
     over docfreq, never a driver-side enumeration. Hard oracle
     (LIKE-filtered dfreq as the query-term set)."""
-    return bm25.wildcard_search(_docs(spark, sf_dir), WILDCARD_PREFIX, DEFAULT_TOP_K)
+    return bm25.wildcard_search(
+        _corpus(spark, sf_dir), WILDCARD_PREFIX, DEFAULT_TOP_K
+    )
 
 
 def q_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,7 +404,7 @@ def q_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded) — "related searches". Hard oracle (winner subquery +
     weight twin)."""
     return bm25.prf_expand(
-        _docs(spark, sf_dir), FLAGSHIP_QUERY, DEFAULT_TOP_K, PRF_N_TERMS
+        _corpus(spark, sf_dir), FLAGSHIP_QUERY, DEFAULT_TOP_K, PRF_N_TERMS
     )
 
 
@@ -417,7 +438,7 @@ def q_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Facet counts over the flagship query's full BM25 candidate set:
     (source, n_hits, best_score) — the result-page sidebar aggregate.
     Hard oracle (same scores CTE as search_collapse)."""
-    return bm25.search_facets(_docs(spark, sf_dir), FLAGSHIP_QUERY, "source")
+    return bm25.search_facets(_corpus(spark, sf_dir), FLAGSHIP_QUERY, "source")
 
 
 def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,27 +446,27 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the query, BM25 top-k over every other doc, one DAG, no driver
     collect. Hard oracle (term-selection subquery + bm25 twin)."""
     return bm25.more_like_this(
-        _docs(spark, sf_dir), MLT_DOC_ID, MLT_M, DEFAULT_TOP_K
+        _corpus(spark, sf_dir), MLT_DOC_ID, MLT_M, DEFAULT_TOP_K
     )
 
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stats = bm25.corpus(_docs(spark, sf_dir))[2]
-    return stats.select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        round_half_up(F.col("avgdl"), SCORE_DECIMALS).alias("avgdl"),
+    c = _corpus(spark, sf_dir)
+    return spark.range(1).select(
+        F.lit(int(c.n_docs)).cast("long").alias("n_docs"),
+        round_half_up(F.lit(c.avgdl), SCORE_DECIMALS).alias("avgdl"),
     )
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bm25.bm25_topk(_docs(spark, sf_dir), FLAGSHIP_QUERY, DEFAULT_TOP_K)
+    return bm25.bm25_topk(_corpus(spark, sf_dir), FLAGSHIP_QUERY, DEFAULT_TOP_K)
 
 
 def q_bm25_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # P6/J2 parity: scope predicate pushed into the scan, global stats
     # (/root/reference/src/qdrant.rs:84-90 — filename filter inside the index)
     return bm25.bm25_topk(
-        _docs(spark, sf_dir),
+        _corpus(spark, sf_dir),
         FLAGSHIP_QUERY,
         DEFAULT_TOP_K,
         scope=F.col("source") == SCOPED_SOURCE,
@@ -854,8 +875,23 @@ _STORE_HANDLES: dict[tuple[str, str, str], tuple[str, object]] = {}
 def _cached_handle(spark: SparkSession, kind: str, sf_dir: str, data_path: str):
     key = (spark.sparkContext.applicationId, kind, sf_dir)
     hit = _STORE_HANDLES.get(key)
-    if hit is not None and hit[0] == _parquet_signature_cheap(data_path):
+    if hit is None:
+        return None
+    if hit[0] == _parquet_signature_cheap(data_path):
         return hit[1]
+    # the source changed: the stale handle releases its executor
+    # storage — without this, every mid-session source regeneration
+    # leaks a resident copy until OOM/eviction thrash. It is released
+    # BEFORE the caller rebuilds: a rewritten table reads through an
+    # equal plan, so a store still cached would serve the old rows to
+    # the new build.
+    _STORE_HANDLES.pop(key)
+    unp = getattr(hit[1], "unpersist", None)
+    if callable(unp):
+        try:
+            unp()
+        except Exception:
+            pass
     return None
 
 
@@ -864,17 +900,6 @@ def _remember_handle(
 ):
     app = spark.sparkContext.applicationId
     key = (app, kind, sf_dir)
-    # a replaced handle releases its prepare()'d executor storage —
-    # without this, every mid-session source regeneration leaks a
-    # resident postings+docfreq copy until OOM/eviction thrash
-    old = _STORE_HANDLES.get(key)
-    if old is not None and old[1] is not handle:
-        unp = getattr(old[1], "unpersist", None)
-        if callable(unp):
-            try:
-                unp()
-            except Exception:
-                pass
     # prune entries from dead SparkSessions (stale applicationIds):
     # their JVMs are gone, the handles are unusable, and the dict
     # would otherwise grow for the process lifetime
@@ -1061,7 +1086,7 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_pdf_search_engine_spark.operators.bm25 import boolean_search
 
     return boolean_search(
-        _docs(spark, sf_dir),
+        _corpus(spark, sf_dir),
         must=BOOL_MUST,
         should=BOOL_SHOULD,
         must_not=BOOL_MUST_NOT,
@@ -1775,7 +1800,7 @@ def q_regex_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching REGEX_PATTERN is a disjunct with its own idf; expansion is
     an rlike filter over docfreq (vocab-sized), zero extra corpus
     passes. Hard oracle (regexp_full_match-filtered dfreq)."""
-    return bm25.regex_search(_docs(spark, sf_dir), REGEX_PATTERN, DEFAULT_TOP_K)
+    return bm25.regex_search(_corpus(spark, sf_dir), REGEX_PATTERN, DEFAULT_TOP_K)
 
 
 def q_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1894,7 +1919,7 @@ def q_search_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_pdf_search_engine_spark.operators.bm25 import search_histogram
 
     return search_histogram(
-        _docs(spark, sf_dir), FLAGSHIP_QUERY, "n_chars", HIST_WIDTH
+        _corpus(spark, sf_dir), FLAGSHIP_QUERY, "n_chars", HIST_WIDTH
     )
 
 
@@ -1911,7 +1936,7 @@ def q_boolean_msm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from semantic_pdf_search_engine_spark.operators.bm25 import boolean_search
 
     return boolean_search(
-        _docs(spark, sf_dir),
+        _corpus(spark, sf_dir),
         must=[],
         should=BOOL_MSM_SHOULD,
         must_not=BOOL_MUST_NOT,
@@ -3698,7 +3723,8 @@ SELECT window_start, term, n, rising, rank FROM (
 
 
 # fields sorted alphabetically by the operator: tf_0/w=1.0 is body,
-# tf_1/w=2.0 is title — the CASE sums below are pinned to that order
+# tf_1/w=2.0 is title — the CASE sums below are pinned to that order.
+# A NULL field counts 0 tokens in dlw, as in bm25.bm25f_topk.
 ORACLE_SQL["bm25f_search"] = f"""
 WITH base AS (
     SELECT doc_id,
@@ -3734,8 +3760,8 @@ tfw AS (
 ),
 dlw AS (
     SELECT doc_id,
-           1.0 * CAST(len(list_filter(regexp_split_to_array(lower(body), '{TOKEN_SPLIT_RE}'), x -> x <> '')) AS DOUBLE)
-           + 2.0 * CAST(len(list_filter(regexp_split_to_array(lower(title), '{TOKEN_SPLIT_RE}'), x -> x <> '')) AS DOUBLE) AS dlw
+           1.0 * CAST(COALESCE(len(list_filter(regexp_split_to_array(lower(body), '{TOKEN_SPLIT_RE}'), x -> x <> '')), 0) AS DOUBLE)
+           + 2.0 * CAST(COALESCE(len(list_filter(regexp_split_to_array(lower(title), '{TOKEN_SPLIT_RE}'), x -> x <> '')), 0) AS DOUBLE) AS dlw
     FROM base
 ),
 stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dlw) AS avgdlw FROM dlw),

@@ -345,12 +345,24 @@ def test_more_like_this_indexed_equals_relational(spark, tmp_path_factory):
 
 def test_null_text_is_a_zero_length_doc(spark, tmp_path_factory, both_paths):
     """A NULL, an empty and a punctuation-only turn are all zero-length
-    docs in N and avgdl, on the relational spec, the numpy oracle and
-    both index paths alike."""
+    docs in N and avgdl, on the relational spec (DataFrame form and the
+    registry's stored Corpus alike), the numpy oracle and both index
+    paths."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from semantic_pdf_search_engine_spark import registry
     from semantic_pdf_search_engine_spark.operators.bm25 import bm25_topk
 
     texts = ["alpha beta", None, "", "?! ...", "alpha", "beta gamma alpha"]
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sf = tmp_path_factory.mktemp("null_docs")
+    pq.write_table(
+        pa.table({"doc_id": list(range(len(texts))), "text": texts}),
+        str(sf / "documents.parquet"),
+    )
+    stored = registry._corpus(spark, str(sf))
+    assert (stored.n_docs, stored.avgdl) == (6.0, 1.0)
     transcripts = docs.select(
         F.format_string("%012d", F.col("doc_id")).alias("conv_id"),
         F.lit(0).alias("turn_idx"),
@@ -367,6 +379,7 @@ def test_null_text_is_a_zero_length_doc(spark, tmp_path_factory, both_paths):
     for q in ("alpha", "beta", "alpha beta gamma"):
         want = rounded(oracle.top_k(q, K))
         assert rounded(_topk(bm25_topk(docs, q, K, round_scores=False))) == want, q
+        assert rounded(_topk(bm25_topk(stored, q, K, round_scores=False))) == want, q
         for path in both_paths():
             got = rounded(_topk(score_topk(idx, q, K, round_scores=False)))
             assert got == want, (path, q)

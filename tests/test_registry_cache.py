@@ -5,7 +5,10 @@
   walk against the cheap signature);
 - store handles are memoized per (session, sf_dir) — repeated registry
   calls reuse ONE prepare()'d index instead of re-opening per call;
-- the ANN query vector is fetched driver-side (pyarrow), no Spark job.
+- the ANN query vector is fetched driver-side (pyarrow), no Spark job;
+- the relational corpus is a build-once store: memoized per documents
+  table, rebuilt (and the old one unpersisted) when the table changes,
+  and a warm relational query reads it instead of re-tokenizing.
 """
 
 from __future__ import annotations
@@ -150,3 +153,56 @@ def test_schema_memo_follows_in_process_rewrite(spark, tmp_path):
     pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
     got = registry._read_parquet(spark, path).select("b").collect()
     assert sorted(r["b"] for r in got) == ["x", "y"]
+
+
+def test_corpus_store_is_built_once_and_follows_rewrite(spark, tmp_path):
+    """`_corpus` returns ONE persisted store per documents table; an
+    in-process rewrite of the table builds a new one and releases the
+    old one's executor storage."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import StorageLevel
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [0, 1], "text": ["alpha beta", "beta"]}), path)
+    c1 = registry._corpus(spark, str(tmp_path))
+    assert registry._corpus(spark, str(tmp_path)) is c1
+    assert c1.tf.storageLevel != StorageLevel.NONE
+    assert (c1.n_docs, c1.avgdl) == (2.0, 1.5)
+
+    pq.write_table(
+        pa.table({"doc_id": [0, 1, 2], "text": ["alpha beta", "beta", "gamma"]}),
+        path,
+    )
+    # the signature miss releases the stale store before any rebuild:
+    # the rewritten table reads through a plan equal to the old one, so
+    # a store still cached would hand its rows to the new build
+    assert registry._cached_handle(spark, "corpus", str(tmp_path), path) is None
+    assert c1.tf.storageLevel == StorageLevel.NONE
+    assert c1.dfreq.storageLevel == StorageLevel.NONE
+
+    c2 = registry._corpus(spark, str(tmp_path))
+    assert c2 is not c1
+    assert c2.tf.storageLevel != StorageLevel.NONE
+    assert c2.n_docs == 3.0
+    assert sorted(r["doc_id"] for r in c2.tf.collect()) == [0, 0, 1, 2]
+    assert sorted(r["term"] for r in c2.dfreq.collect()) == ["alpha", "beta", "gamma"]
+    c2.unpersist()
+
+
+@pytest.mark.parametrize("name,max_jobs", [("bm25_topk", 3), ("prf_search", 10)])
+def test_warm_relational_query_reads_the_stored_corpus(spark, sf_dir, name, max_jobs):
+    """Once the corpus store is built, a relational query schedules only
+    its own scoring jobs: no tokenize, docfreq or stats job per call."""
+    q = registry.QUERIES[name]
+    q(spark, sf_dir).toPandas()  # builds the store
+
+    sc = spark.sparkContext
+    group = f"warm-{name}"
+    sc.setJobGroup(group, "warm relational query")
+    try:
+        q(spark, sf_dir).toPandas()
+    finally:
+        sc.setJobGroup("", "")
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= max_jobs, (name, n)

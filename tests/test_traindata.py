@@ -710,6 +710,27 @@ def test_bm25f_title_boost_outranks_body_hit(spark):
     assert out[0][1] > out[1][1]
 
 
+def test_bm25f_null_field_is_zero_length(spark):
+    """A NULL field has zero tokens: the doc keeps its other field's
+    match and counts in avgdl, ranking exactly as with an empty field."""
+    from semantic_pdf_search_engine_spark.operators.bm25 import bm25f_topk
+
+    def ranked(title_1):
+        rows = [
+            (0, "alpha beta", "alpha"),
+            (1, "alpha", title_1),
+            (2, "beta alpha alpha", "gamma"),
+        ]
+        d = spark.createDataFrame(rows, "doc_id long, body string, title string")
+        out = bm25f_topk(d, "alpha", {"body": 1.0, "title": 2.0}, 10).collect()
+        return [(r["doc_id"], r["score"]) for r in out]
+
+    got = ranked(None)
+    assert got == ranked("")
+    assert [d for d, _ in got] == [0, 1, 2]
+    assert got[1][1] == 0.187114
+
+
 def test_significant_terms_groupwise_known_value(spark):
     """A term occurring ONLY in one group must top that group's ranking
     (maximal G² among its terms); grouped output covers every group;
