@@ -257,17 +257,13 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "phrase":
         from semantic_pdf_search_engine_spark.operators.postings import (
             phrase_occurrences,
-            phrase_occurrences_indexed,
         )
 
         if bool(args.pos) == bool(args.input):
             p.error("phrase: exactly one of --pos / --input is required")
-        if args.pos:
-            hits = phrase_occurrences_indexed(spark, args.pos, args.phrase)
-        else:
-            hits = phrase_occurrences(
-                spark.read.parquet(args.input), args.phrase
-            )
+        hits = phrase_occurrences(
+            args.pos or spark.read.parquet(args.input), args.phrase
+        )
         for row in hits.orderBy("doc_id").collect():
             print(json.dumps(row.asDict()))
     elif args.cmd == "append":
@@ -384,19 +380,13 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "near":
         from semantic_pdf_search_engine_spark.operators.postings import (
             proximity_search,
-            proximity_search_indexed,
         )
 
         if bool(args.pos) == bool(args.input):
             p.error("near: exactly one of --pos / --input is required")
-        if args.pos:
-            hits = proximity_search_indexed(
-                spark, args.pos, args.a, args.b, args.window
-            )
-        else:
-            hits = proximity_search(
-                spark.read.parquet(args.input), args.a, args.b, args.window
-            )
+        hits = proximity_search(
+            args.pos or spark.read.parquet(args.input), args.a, args.b, args.window
+        )
         for row in hits.orderBy("doc_id").collect():
             print(json.dumps(row.asDict()))
     elif args.cmd == "classify":

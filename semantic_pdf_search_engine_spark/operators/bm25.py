@@ -41,17 +41,10 @@ from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py, tok
 from semantic_pdf_search_engine_spark.functions.rounding import round_half_up
 
 
-def terms_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, term) one row per token occurrence (order not preserved)."""
-    return docs.select(
-        F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("term")
-    )
-
-
 def tf_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, term, tf) term frequencies."""
     return (
-        terms_df(docs, id_col, text_col)
+        docs.select(F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("term"))
         .groupBy(id_col, "term")
         .agg(F.count("*").cast("int").alias("tf"))
     )
@@ -99,7 +92,7 @@ def tf_dl_df(
     )
 
 
-def docfreq_df(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def docfreq_df(tf: DataFrame) -> DataFrame:
     """(term, df) document frequencies — tf already has one row per
     (doc, term), so df = plain count, no count-distinct shuffle."""
     return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
@@ -151,7 +144,7 @@ def corpus(
         )
         .first()
     )
-    return Corpus(docs, tf, docfreq_df(tf, id_col), stats["n_docs"], stats["avgdl"])
+    return Corpus(docs, tf, docfreq_df(tf), stats["n_docs"], stats["avgdl"])
 
 
 def no_hits(docs: DataFrame | Corpus, schema: str) -> DataFrame:
@@ -627,7 +620,7 @@ def bm25f_topk(
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     ).first()
-    dfreq = docfreq_df(tfw, id_col)
+    dfreq = docfreq_df(tfw)
     weighted = Corpus(docs, tfw, dfreq, stats["n_docs"], stats["avgdl"])
     dfreq_q = dfreq.filter(F.col("term").isin(q_terms))
     return (

@@ -55,40 +55,18 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def shingles_expr(text, n: int = SHINGLE_N):
-    """Distinct token n-gram shingles as ARRAY<STRING> (1-based
-    element_at — mirrors DuckDB list indexing exactly)."""
-    toks = tokens_expr(text)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def doc_shingles(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "arrow",
 ) -> DataFrame:
     """(id, shingle): one row per DISTINCT token-3-gram per doc.
 
-    mode='arrow' (default): tokenize + window + set per doc in one
-    Arrow pass — the shingle construction already byte-pinned to the
-    DuckDB list semantics by the minhash parity test (the pure-Column
-    form pays a nested element_at chain per gram: measured ~4× slower
-    at sf0.1). mode='column' keeps the Column-expr spec (exact-equality
-    tested against arrow)."""
-    if mode == "column":
-        return docs.select(
-            F.col(id_col), F.explode(shingles_expr(F.col(text_col))).alias("shingle")
-        )
+    Tokenize + window + set per doc in one Arrow pass — the shingle
+    construction byte-pinned to the DuckDB list semantics by the
+    minhash parity test (the pure-Column form, kept as the reference in
+    tests/test_dedup.py, pays a nested element_at chain per gram:
+    measured ~4× slower at sf0.1)."""
     import pandas as pd
 
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
@@ -209,7 +187,7 @@ def minhash_signatures(
 
     One Arrow pass per batch: tokenize + shingle + hash in Python
     (C-backed), min per permutation. The previous pure-Column form
-    re-evaluated the whole shingles_expr expression tree once PER
+    re-evaluated the whole shingle expression tree once PER
     SIGNATURE (Catalyst does not CSE across projection items through
     higher-order functions), making signatures the dominant cost of the
     minhash suite entry (17.6 s at sf0.1 → ~1 s here).
@@ -248,7 +226,7 @@ def minhash_signatures(
         for pdf in batches:
             ids, sig_cols = [], [[] for _ in range(n_perms)]
             for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                # normalize=False: shingles_expr/the DuckDB twin both
+                # normalize=False: the Column shingle spec and the DuckDB twin both
                 # tokenize RAW lowered text (no artifact normalization)
                 toks = tokenize_py(text, normalize=False)
                 if len(toks) < n:
@@ -332,7 +310,6 @@ def simhash(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "arrow",
 ) -> DataFrame:
     """(doc_id, simhash) — 16-bit tf-weighted sign fingerprint.
 
@@ -340,96 +317,62 @@ def simhash(
     output bit j set iff S_j > 0. Integer arithmetic throughout →
     exact DuckDB twin.
 
-    mode='arrow' (default, r6): the fingerprint is a PER-DOCUMENT
-    function of the doc's own term counts, so it is computed entirely
-    inside one Arrow pass — tokenize, count, fold the 16 md5-nibble
-    signs per doc — with a cross-batch md5 memo over the (Heaps-law
-    sublinear) vocabulary. ZERO shuffles, versus the column form's
-    16-way bit explode + two corpus-keyed groupBys (the explode
-    multiplied the exchange input 16×). mode='column' keeps the
-    pure-Column spec the DuckDB oracle mirrors; both modes are pinned
-    exactly equal in tests/test_dedup.py.
+    The fingerprint is a PER-DOCUMENT function of the doc's own term
+    counts, so it is computed entirely inside one Arrow pass —
+    tokenize, count, fold the 16 md5-nibble signs per doc — with a
+    cross-batch md5 memo over the (Heaps-law sublinear) vocabulary.
+    ZERO shuffles, versus the pure-Column spec's 16-way bit explode +
+    two corpus-keyed groupBys (the explode multiplied the exchange
+    input 16×). That spec, which the DuckDB oracle mirrors, is kept as
+    the reference in tests/test_dedup.py and pinned exactly equal.
     """
-    if mode == "arrow":
-        import hashlib
+    import hashlib
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        from semantic_pdf_search_engine_spark.functions.tokenize import (
-            tokenize_py,
-        )
+    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 
-        id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema[id_col].dataType.simpleString()
 
-        def gen(batches):
-            from collections import Counter
+    def gen(batches):
+        from collections import Counter
 
-            # md5-sign memo: term → int16 bit pattern of (nibble_j >= 8)
-            memo: dict[str, np.ndarray] = {}
+        # md5-sign memo: term → int16 bit pattern of (nibble_j >= 8)
+        memo: dict[str, np.ndarray] = {}
 
-            def signs(term: str) -> np.ndarray:
-                v = memo.get(term)
-                if v is None:
-                    h = hashlib.md5(term.encode()).hexdigest()
-                    v = np.array(
-                        [1 if int(c, 16) >= 8 else -1 for c in h[:16]],
-                        dtype=np.int64,
-                    )
-                    memo[term] = v
-                return v
-
-            for pdf in batches:
-                ids, fps = [], []
-                for did, text in zip(
-                    pdf[id_col].tolist(), pdf[text_col].tolist()
-                ):
-                    counts = Counter(tokenize_py(text, normalize=False))
-                    if not counts:
-                        continue  # zero-token docs have no fingerprint row
-                    s = np.zeros(16, dtype=np.int64)
-                    for term, tf in counts.items():
-                        s += tf * signs(term)
-                    bits = (s > 0).astype(np.int64)
-                    fps.append(int((bits << np.arange(16)).sum()))
-                    ids.append(did)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "simhash": pd.Series(fps, dtype="int64"),
-                    }
+        def signs(term: str) -> np.ndarray:
+            v = memo.get(term)
+            if v is None:
+                h = hashlib.md5(term.encode()).hexdigest()
+                v = np.array(
+                    [1 if int(c, 16) >= 8 else -1 for c in h[:16]],
+                    dtype=np.int64,
                 )
+                memo[term] = v
+            return v
 
-        return docs.select(id_col, text_col).mapInPandas(
-            gen, schema=f"{id_col} {id_type}, simhash long"
-        )
+        for pdf in batches:
+            ids, fps = [], []
+            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
+                counts = Counter(tokenize_py(text, normalize=False))
+                if not counts:
+                    continue  # zero-token docs have no fingerprint row
+                s = np.zeros(16, dtype=np.int64)
+                for term, tf in counts.items():
+                    s += tf * signs(term)
+                bits = (s > 0).astype(np.int64)
+                fps.append(int((bits << np.arange(16)).sum()))
+                ids.append(did)
+            yield pd.DataFrame(
+                {
+                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
+                    "simhash": pd.Series(fps, dtype="int64"),
+                }
+            )
 
-    from semantic_pdf_search_engine_spark.operators.bm25 import tf_df
-
-    tf = tf_df(docs, id_col, text_col).withColumn(
-        "h", F.md5(F.col("term").cast("binary"))
-    )
-    bits = tf.select(
-        F.col(id_col),
-        F.col("tf"),
-        F.col("h"),
-        F.explode(F.sequence(F.lit(1), F.lit(16))).alias("j"),
-    ).withColumn(
-        "nibble",
-        F.instr(F.lit("0123456789abcdef"), F.substring(F.col("h"), F.col("j"), 1)) - 1,
-    ).withColumn(
-        "signed", F.col("tf") * F.when(F.col("nibble") >= 8, 1).otherwise(-1)
-    )
-    sj = bits.groupBy(id_col, "j").agg(F.sum("signed").alias("s"))
-    return (
-        sj.withColumn(
-            "bitval",
-            F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j") - 1).cast("long")).otherwise(
-                F.lit(0)
-            ),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("bitval").cast("long").alias("simhash"))
+    return docs.select(id_col, text_col).mapInPandas(
+        gen, schema=f"{id_col} {id_type}, simhash long"
     )
 
 

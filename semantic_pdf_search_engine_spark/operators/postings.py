@@ -75,11 +75,6 @@ def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return term_freq_map_in_pandas(docs, id_cols=("doc_id",), text_col=text_col)
 
 
-def docfreq(tf: DataFrame) -> DataFrame:
-    """(term, df) — plain count: tf already has one row per (doc, term)."""
-    return tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-
-
 def docfreq_with_tfsum(tf: DataFrame) -> DataFrame:
     """(term, df, tf_sum) in one pass — tf_sum lets the caller derive
     total corpus tokens (Σdl == Σtf) from the vocab-sized aggregate via
@@ -267,115 +262,154 @@ def build_posting_blocks(
 
 
 # ---------------------------------------------------------------------------
-# positional postings + indexed phrase search
+# positional postings: the one (term, doc_id, positions) relation that
+# phrase, NEAR/W, sloppy phrase and best passage read
 # ---------------------------------------------------------------------------
 
 
 def positional_postings(
-    docs: DataFrame,
+    source: DataFrame | str,
     terms: list[str] | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(term, doc_id, positions ARRAY<INT>): 1-based token positions
-    under the pinned tokenizer — the positional posting lists a phrase
-    query intersects. `terms` restricts to a query's vocabulary BEFORE
-    the shuffle (the exploded stream is filtered at the scan, so only
-    the phrase terms' postings ever move — the computed-on-the-fly
-    analog of a pruned posting-list read; a materialized variant would
-    persist this table partitioned by term_bucket exactly like the
-    BM25 index). positions are sorted; ONE shuffle on (doc, term)."""
+    """(term, doc_id, positions ARRAY<INT>): sorted 1-based token
+    positions under the pinned tokenizer, restricted to `terms` (None
+    keeps every term). The only place positions are produced or read.
+
+    `source` is either
+    - a documents DataFrame, tokenized here: the `terms` filter sits on
+      the exploded stream below the one (term, doc) shuffle, so only
+      the query terms' postings move; or
+    - a positional-index directory (build_positional_index), read
+      through the active session: the scan prunes to the terms'
+      `term_bucket` partitions and pushes the term IN-list to parquet,
+      so nothing is tokenized at query time.
+
+    IN-lists are sorted so the plan text does not follow the hash
+    seed."""
     from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
 
-    toks = tokens_expr(F.col(text_col))
-    exploded = docs.select(
-        F.col(id_col), F.posexplode(toks).alias("pos0", "term")
+    terms = None if terms is None else sorted(set(terms))
+    if isinstance(source, str):
+        from semantic_pdf_search_engine_spark.sources.index_store import term_bucket_of
+
+        post = _session(source).read.parquet(source)
+        if terms is not None:
+            buckets = sorted({term_bucket_of(t) for t in terms})
+            post = post.filter(F.col("term_bucket").isin(buckets)).filter(
+                F.col("term").isin(terms)
+            )
+        return post.select("term", id_col, "positions")
+    exploded = source.select(
+        F.col(id_col), F.posexplode(tokens_expr(F.col(text_col))).alias("pos0", "term")
     )
     if terms is not None:
-        # sorted: the plan's IN-list order must not follow the hash seed
-        exploded = exploded.filter(F.col("term").isin(sorted(set(terms))))
-    return (
-        exploded.groupBy("term", id_col)
-        .agg(
-            F.sort_array(
-                F.collect_list((F.col("pos0") + 1).cast("int"))
-            ).alias("positions")
-        )
+        exploded = exploded.filter(F.col("term").isin(terms))
+    return exploded.groupBy("term", id_col).agg(
+        F.sort_array(F.collect_list((F.col("pos0") + 1).cast("int"))).alias("positions")
     )
 
 
-def phrase_occurrences(
-    docs: DataFrame,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+def _session(source: DataFrame | str):
+    if isinstance(source, DataFrame):
+        return source.sparkSession
+    from pyspark.sql import SparkSession
+
+    return SparkSession.active()
+
+
+def _positions_by_doc(postings: DataFrame, n_terms: int, id_col: str) -> DataFrame:
+    """(id, pm MAP<term, positions>) for the docs holding all `n_terms`
+    distinct query terms: the per-doc pivot (second shuffle, on doc)
+    under every phrase and NEAR fold. Docs missing a term drop at the
+    map-size guard, before any fold runs."""
+    return (
+        postings.groupBy(id_col)
+        .agg(F.map_from_entries(F.collect_list(F.struct("term", "positions"))).alias("pm"))
+        .filter(F.size(F.col("pm")) == n_terms)
+    )
+
+
+def _term_positions(term: str):
+    return F.element_at(F.col("pm"), term)
+
+
+def _span_search(
+    source: DataFrame | str, phrase: str, valid_starts, id_col: str, text_col: str
 ) -> DataFrame:
-    """(doc_id, n_occ, first_pos): token-adjacency phrase search via
-    positional posting intersection — the indexed-engine form of
-    find_exact (/root/reference/src/fuzzy.rs:99-102), matching WHOLE
-    token sequences (substring scans also hit mid-word prefixes; this
-    does not). Plan: positional_postings filtered to the phrase's
-    distinct terms (only those postings shuffle), pivot to one
-    term→positions map per doc (second shuffle on doc), then the
-    adjacency fold is a pure Column expression — candidate starts =
-    positions of token 0, filtered per subsequent token j by
-    `array_contains(positions[t_j], start + j)`. Docs missing any
-    phrase term drop at the map-size guard. No UDF, no substring scan
-    over full text at query time once postings are materialized."""
+    """(doc_id, n_occ, first_pos) for a phrase-shaped query: the
+    phrase's token sequence `seq` (normalize=False, like the doc-side
+    tokens_expr and the DuckDB oracle, so a phrase holding 'ﬁle' looks
+    for the same un-normalized token), pivoted per doc, then
+    `valid_starts(seq)` — an ARRAY<INT> Column of the matching start
+    positions of seq[0] — counted and minimized."""
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 
-    # normalize=False mirrors tokens_expr, which builds the doc-side
-    # positions WITHOUT ligature/artifact normalization (and matches the
-    # DuckDB oracle's doc-side tokenization): a phrase containing 'ﬁle'
-    # must look for the same un-normalized token the postings store
     seq = tokenize_py(phrase, normalize=False)
     if not seq:
-        return docs.sparkSession.createDataFrame(
+        return _session(source).createDataFrame(
             [], f"{id_col} long, n_occ int, first_pos int"
         )
-    return _phrase_over_postings(
-        positional_postings(docs, sorted(set(seq)), id_col, text_col), seq, id_col
-    )
-
-
-def _phrase_over_postings(
-    postings: DataFrame, seq: list[str], id_col: str
-) -> DataFrame:
-    """Shared tail of the on-the-fly and indexed phrase paths: pivot a
-    (term, doc_id, positions) DataFrame — already filtered to the
-    phrase's terms — to one term→positions map per doc, drop docs
-    missing any term (map-size guard), then run the Column adjacency
-    fold. ONE definition so the two sources cannot drift in phrase
-    semantics (parity also pinned in tests/test_spans.py)."""
-    distinct_terms = sorted(set(seq))
-    per_doc = (
-        postings.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("pm")
-        )
-        .filter(F.size(F.map_keys(F.col("pm"))) == len(distinct_terms))
-    )
-
-    def _adjacent(term: str, offset: int):
-        # one-arg closure per fold step (extra lambda params would read
-        # as a multi-arg HOF lambda to Spark's resolver)
-        def pred(s):
-            return F.array_contains(F.element_at(F.col("pm"), term), s + offset)
-
-        return pred
-
-    starts = F.element_at(F.col("pm"), seq[0])
-    for j, t in enumerate(seq[1:], start=1):
-        starts = F.filter(starts, _adjacent(t, j))
+    starts = valid_starts(seq)
     return (
-        per_doc.select(
+        _positions_by_doc(
+            positional_postings(source, seq, id_col, text_col), len(set(seq)), id_col
+        )
+        .select(
             F.col(id_col),
             F.size(starts).cast("int").alias("n_occ"),
             F.array_min(starts).cast("int").alias("first_pos"),
         )
         .filter(F.col("n_occ") > 0)
+    )
+
+
+def phrase_occurrences(
+    source: DataFrame | str,
+    phrase: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(doc_id, n_occ, first_pos): token-adjacency phrase search over
+    positional postings — the indexed-engine form of the reference's
+    find_exact (src/fuzzy.rs:99-102), matching WHOLE token
+    sequences (substring scans also hit mid-word prefixes; this does
+    not). `source` is a documents DataFrame or a positional-index
+    directory (see positional_postings). The adjacency fold is a pure
+    Column expression: candidate starts = positions of token 0,
+    filtered per later token j by `array_contains(positions[t_j],
+    start + j)`. No UDF, no substring scan."""
+
+    def adjacent(term: str, offset: int):
+        # one-arg closure per fold step (extra lambda params would read
+        # as a multi-arg HOF lambda to Spark's resolver)
+        return lambda s: F.array_contains(_term_positions(term), s + offset)
+
+    def valid_starts(seq):
+        starts = _term_positions(seq[0])
+        for j, t in enumerate(seq[1:], start=1):
+            starts = F.filter(starts, adjacent(t, j))
+        return starts
+
+    return _span_search(source, phrase, valid_starts, id_col, text_col)
+
+
+def _write_positions(
+    docs: DataFrame, out_dir: str, mode: str, id_col: str, text_col: str
+) -> None:
+    from semantic_pdf_search_engine_spark.sources.index_store import (
+        NUM_TERM_BUCKETS,
+        term_bucket_udf,
+    )
+
+    (
+        positional_postings(docs, None, id_col, text_col)
+        .withColumn("term_bucket", term_bucket_udf(F.col("term")))
+        .repartition(NUM_TERM_BUCKETS, "term_bucket")
+        .write.mode(mode)
+        .partitionBy("term_bucket")
+        .parquet(out_dir)
     )
 
 
@@ -391,19 +425,7 @@ def build_positional_index(
     of NUM_TERM_BUCKETS directories via a static PartitionFilter
     instead of rescanning the corpus. One build shuffle (groupBy
     (term, doc)), one write repartition by bucket."""
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        NUM_TERM_BUCKETS,
-        term_bucket_udf,
-    )
-
-    (
-        positional_postings(docs, None, id_col, text_col)
-        .withColumn("term_bucket", term_bucket_udf(F.col("term")))
-        .repartition(NUM_TERM_BUCKETS, "term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(out_dir)
-    )
+    _write_positions(docs, out_dir, "overwrite", id_col, text_col)
 
 
 def append_to_positional_index(
@@ -420,155 +442,54 @@ def append_to_positional_index(
     segments would yield two rows for one (term, doc) and
     double-counted starts); phrase queries read old and new files
     transparently through the partition layout."""
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        NUM_TERM_BUCKETS,
-        term_bucket_udf,
-    )
-
-    (
-        positional_postings(new_docs, None, id_col, text_col)
-        .withColumn("term_bucket", term_bucket_udf(F.col("term")))
-        .repartition(NUM_TERM_BUCKETS, "term_bucket")
-        .write.mode("append")
-        .partitionBy("term_bucket")
-        .parquet(out_dir)
-    )
-
-
-def phrase_occurrences_indexed(
-    spark,
-    index_dir: str,
-    phrase: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """phrase_occurrences served from a materialized positional index:
-    the scan is partition-pruned to the phrase terms' buckets (filter
-    on the `term_bucket` partition column + term equality pushed to
-    parquet), then the same per-doc map pivot + Column adjacency fold.
-    Identical output to the computed-on-the-fly form (asserted in
-    tests/test_spans.py)."""
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        term_bucket_of,
-    )
-
-    # normalize=False: same tokens_expr-mirroring contract as
-    # phrase_occurrences (the index stores un-normalized tokens)
-    seq = tokenize_py(phrase, normalize=False)
-    if not seq:
-        return spark.createDataFrame([], f"{id_col} long, n_occ int, first_pos int")
-    distinct_terms = sorted(set(seq))
-    buckets = sorted({term_bucket_of(t) for t in distinct_terms})
-    postings = (
-        spark.read.parquet(index_dir)
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(distinct_terms))
-    )
-    return _phrase_over_postings(postings, seq, id_col)
-
-
-def _near_over_postings(
-    postings: DataFrame,
-    term_a: str,
-    term_b: str,
-    window: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Shared tail of the on-the-fly and indexed proximity paths:
-    (doc_id, min_dist) for docs containing BOTH terms with token-
-    position distance <= window. The pairwise-min fold is a pure
-    Column higher-order expression (array_min over transform) — per
-    doc it costs |positions_a| x |positions_b|, both bounded by the
-    term's per-doc tf, and nothing but the two terms' postings ever
-    shuffles. Same map-pivot shape as _phrase_over_postings (NOT a
-    two-branch self-join, which would scan the postings source twice —
-    on the on-the-fly path that source is the full corpus). One
-    definition so the two sources cannot drift."""
-    per_doc = (
-        postings.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("pm")
-        )
-        .filter(F.size(F.map_keys(F.col("pm"))) == 2)  # both terms present
-    )
-    pa = F.element_at(F.col("pm"), term_a)
-    pb = F.element_at(F.col("pm"), term_b)
-    min_dist = F.array_min(
-        F.transform(
-            pa,
-            lambda x: F.array_min(F.transform(pb, lambda y: F.abs(x - y))),
-        )
-    )
-    return per_doc.select(
-        F.col(id_col), min_dist.cast("int").alias("min_dist")
-    ).filter(F.col("min_dist") <= window)
+    _write_positions(new_docs, out_dir, "append", id_col, text_col)
 
 
 def proximity_search(
-    docs: DataFrame,
+    source: DataFrame | str,
     term_a: str,
     term_b: str,
     window: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """NEAR/W retrieval: docs where `term_a` and `term_b` occur within
-    `window` token positions — the proximity operator classic fulltext
-    engines expose beside exact phrase (phrase = NEAR/1 ordered; this
-    is unordered). The reference approximates proximity only through
-    its fuzzy sliding window (/root/reference/src/fuzzy.rs:64-97);
-    here it is exact over the same positional postings the phrase path
-    intersects: only the two terms' postings move, adjacency relaxed
-    to a distance bound. Returns (doc_id, min_dist), min_dist >= 1."""
+    """NEAR/W retrieval: (doc_id, min_dist) for docs where `term_a` and
+    `term_b` occur within `window` token positions, min_dist >= 1 —
+    the unordered proximity operator classic fulltext engines expose
+    beside exact phrase. The reference approximates proximity only
+    through its fuzzy sliding window (src/fuzzy.rs:64-97); here it is exact over the same positional postings the
+    phrase path intersects, from a documents DataFrame or a
+    positional-index directory. The pairwise-min fold is a Column
+    higher-order expression costing |positions_a| x |positions_b| per
+    doc, both bounded by the terms' per-doc tf."""
     if term_a == term_b:
         raise ValueError("proximity_search requires two distinct terms")
-    return _near_over_postings(
-        positional_postings(docs, [term_a, term_b], id_col, text_col),
-        term_a,
-        term_b,
-        window,
-        id_col,
+    pa, pb = _term_positions(term_a), _term_positions(term_b)
+    min_dist = F.array_min(
+        F.transform(pa, lambda x: F.array_min(F.transform(pb, lambda y: F.abs(x - y))))
+    )
+    return (
+        _positions_by_doc(
+            positional_postings(source, [term_a, term_b], id_col, text_col), 2, id_col
+        )
+        .select(F.col(id_col), min_dist.cast("int").alias("min_dist"))
+        .filter(F.col("min_dist") <= window)
     )
 
 
-def proximity_search_indexed(
-    spark,
-    index_dir: str,
-    term_a: str,
-    term_b: str,
-    window: int = 5,
+def phrase_slop(
+    source: DataFrame | str,
+    phrase: str,
+    slop: int = 0,
     id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """proximity_search served from the materialized positional index:
-    partition-pruned to the two terms' term_bucket directories (<=2 of
-    NUM_TERM_BUCKETS) exactly like phrase_occurrences_indexed — the
-    build-once/probe-many form. Identical output to the on-the-fly
-    path by construction (pinned in tests/test_spans.py)."""
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        term_bucket_of,
-    )
-
-    if term_a == term_b:
-        raise ValueError("proximity_search requires two distinct terms")
-    buckets = sorted({term_bucket_of(term_a), term_bucket_of(term_b)})
-    postings = (
-        spark.read.parquet(index_dir)
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin([term_a, term_b]))
-    )
-    return _near_over_postings(postings, term_a, term_b, window, id_col)
-
-
-def _slop_over_postings(
-    postings: DataFrame, seq: list[str], slop: int, id_col: str
-) -> DataFrame:
-    """Shared tail of the on-the-fly and indexed sloppy-phrase paths
-    (mirrors _phrase_over_postings so the two sources cannot drift):
-    pivot to one term→positions map per doc, drop docs missing any
-    phrase term, then run the GREEDY ordered-chain fold per candidate
-    start.
+    """Ordered sloppy-phrase search ("search engine"~2): the phrase
+    terms must appear IN ORDER within a token span of len(phrase)-1 +
+    `slop` — the middle ground between exact phrase (slop=0) and
+    unordered NEAR/W (proximity_search). Returns (doc_id, n_occ,
+    first_pos), one occurrence per valid start position of the first
+    term; `source` as in positional_postings.
 
     Semantics (Lucene SpanNearQuery, ordered): an occurrence at start
     s ∈ positions[t_0] exists iff there are p_0 = s < p_1 < … <
@@ -582,104 +503,21 @@ def _slop_over_postings(
     tests. Nulls propagate through the fold: an exhausted posting list
     yields array_min(empty) = NULL, every later comparison is NULL,
     and the start is filtered out."""
-    distinct_terms = sorted(set(seq))
-    per_doc = (
-        postings.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("pm")
-        )
-        .filter(F.size(F.map_keys(F.col("pm"))) == len(distinct_terms))
-    )
-    span_bound = len(seq) - 1 + slop
 
-    def _chain_end(s):
-        e = s
-        for t in seq[1:]:
-            arr = F.element_at(F.col("pm"), t)
-            e = F.array_min(F.filter(arr, (lambda prev: lambda x: x > prev)(e)))
-        return e
+    def valid_starts(seq):
+        span_bound = len(seq) - 1 + slop
 
-    def _valid(s):
-        e = _chain_end(s)
-        return e.isNotNull() & (e - s <= F.lit(span_bound))
+        def valid(s):
+            e = s
+            for t in seq[1:]:
+                e = F.array_min(
+                    F.filter(_term_positions(t), (lambda prev: lambda x: x > prev)(e))
+                )
+            return e.isNotNull() & (e - s <= F.lit(span_bound))
 
-    starts = F.filter(F.element_at(F.col("pm"), seq[0]), _valid)
-    return (
-        per_doc.select(
-            F.col(id_col),
-            F.size(starts).cast("int").alias("n_occ"),
-            F.array_min(starts).cast("int").alias("first_pos"),
-        )
-        .filter(F.col("n_occ") > 0)
-    )
+        return F.filter(_term_positions(seq[0]), valid)
 
-
-def phrase_slop(
-    docs: DataFrame,
-    phrase: str,
-    slop: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Ordered sloppy-phrase search ("search engine"~2): the phrase
-    terms must appear IN ORDER within a token span of len(phrase)-1 +
-    `slop` — the middle ground between exact phrase (slop=0) and
-    unordered NEAR/W (proximity_search). Returns (doc_id, n_occ,
-    first_pos), one occurrence per valid start position of the first
-    term.
-
-    Same plan spine as phrase_occurrences: only the phrase terms'
-    positional postings shuffle (filter pushed below the posting
-    groupBy), one pivot shuffle to per-doc maps, then the greedy chain
-    fold is pure Column expressions — no UDF, no corpus rescan. At
-    100 TB the cost is bounded by the phrase terms' posting sizes,
-    identical to the exact-phrase path."""
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-
-    # normalize=False mirrors tokens_expr (the doc-side tokenization):
-    # same contract as phrase_occurrences
-    seq = tokenize_py(phrase, normalize=False)
-    if not seq:
-        return docs.sparkSession.createDataFrame(
-            [], f"{id_col} long, n_occ int, first_pos int"
-        )
-    return _slop_over_postings(
-        positional_postings(docs, sorted(set(seq)), id_col, text_col),
-        seq,
-        slop,
-        id_col,
-    )
-
-
-def phrase_slop_indexed(
-    spark,
-    index_dir: str,
-    phrase: str,
-    slop: int = 0,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """phrase_slop served from the materialized positional index:
-    partition-pruned to the phrase terms' term_bucket directories,
-    same greedy fold, identical output to the on-the-fly path by
-    construction (shared _slop_over_postings tail)."""
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        term_bucket_of,
-    )
-
-    seq = tokenize_py(phrase, normalize=False)
-    if not seq:
-        return spark.createDataFrame([], f"{id_col} long, n_occ int, first_pos int")
-    distinct_terms = sorted(set(seq))
-    buckets = sorted({term_bucket_of(t) for t in distinct_terms})
-    postings = (
-        spark.read.parquet(index_dir)
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(distinct_terms))
-    )
-    return _slop_over_postings(postings, seq, slop, id_col)
+    return _span_search(source, phrase, valid_starts, id_col, text_col)
 
 
 def best_passage(
@@ -700,12 +538,12 @@ def best_passage(
 
     Only candidate starts at match positions need checking (a window
     not starting at a match is dominated by one that does), so the
-    per-doc work is |matches|² Column-expression comparisons over the
-    winner docs only — k docs, never the corpus. Plan: winners
-    (TakeOrderedAndProject) → semi-join restricts the positional
-    postings stream → per-doc flatten + sort → transform/filter fold;
-    zero Python, zero extra corpus scans. `docs` is a documents
-    DataFrame or a `bm25.Corpus`; positions come from its documents."""
+    per-doc work is |matches|² Column-expression comparisons. Plan:
+    winners (TakeOrderedAndProject) → semi-join restricts the
+    documents to the ≤ k winners BEFORE they are tokenized for
+    positions → per-doc flatten + sort → transform/filter fold. `docs`
+    is a documents DataFrame or a `bm25.Corpus`; positions come from
+    its documents."""
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
     from semantic_pdf_search_engine_spark.operators.bm25 import (
         bm25_topk,
@@ -720,13 +558,11 @@ def best_passage(
         )
     c = corpus(docs, id_col, text_col)
     winners = bm25_topk(c, query, k, id_col, text_col)
-    post = positional_postings(c.docs, q_terms, id_col, text_col)
+    winner_docs = c.docs.join(winners.select(id_col), id_col, "leftsemi")
     ps = (
-        post.join(winners.select(id_col), id_col, "leftsemi")
+        positional_postings(winner_docs, q_terms, id_col, text_col)
         .groupBy(id_col)
-        .agg(
-            F.sort_array(F.flatten(F.collect_list("positions"))).alias("ps")
-        )
+        .agg(F.sort_array(F.flatten(F.collect_list("positions"))).alias("ps"))
     )
 
     def _cnt(m):

@@ -304,15 +304,11 @@ def q_phrase_slop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_phrase_slop_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`phrase_slop` served from the MATERIALIZED positional index
     (partition-pruned to the three terms' term_bucket dirs) — same
-    hard oracle, identical output by construction (shared
-    _slop_over_postings tail)."""
-    from semantic_pdf_search_engine_spark.operators.postings import (
-        phrase_slop_indexed,
-    )
+    hard oracle, identical output by construction (one phrase_slop,
+    only the positional_postings source differs)."""
+    from semantic_pdf_search_engine_spark.operators.postings import phrase_slop
 
-    return phrase_slop_indexed(
-        spark, _pos_index(spark, sf_dir), SLOP_PHRASE, PHRASE_SLOP
-    )
+    return phrase_slop(_pos_index(spark, sf_dir), SLOP_PHRASE, PHRASE_SLOP)
 
 
 def q_best_passage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,12 +422,10 @@ def q_near_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, identical output by construction (also pinned in
     tests/test_spans.py)."""
     from semantic_pdf_search_engine_spark.operators.postings import (
-        proximity_search_indexed,
+        proximity_search,
     )
 
-    return proximity_search_indexed(
-        spark, _pos_index(spark, sf_dir), NEAR_A, NEAR_B, NEAR_WINDOW
-    )
+    return proximity_search(_pos_index(spark, sf_dir), NEAR_A, NEAR_B, NEAR_WINDOW)
 
 
 def q_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,12 +1133,10 @@ def q_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-many form. Same hard oracle as phrase_positional (identical
     output by construction, also pinned in tests/test_spans.py)."""
     from semantic_pdf_search_engine_spark.operators.postings import (
-        phrase_occurrences_indexed,
+        phrase_occurrences,
     )
 
-    return phrase_occurrences_indexed(
-        spark, _pos_index(spark, sf_dir), POSITIONAL_PHRASE
-    )
+    return phrase_occurrences(_pos_index(spark, sf_dir), POSITIONAL_PHRASE)
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

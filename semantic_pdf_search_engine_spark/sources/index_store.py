@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.config import STRIPE_DOCS
 from semantic_pdf_search_engine_spark.operators import postings as P
+from semantic_pdf_search_engine_spark.operators.bm25 import docfreq_df
 from semantic_pdf_search_engine_spark.operators.docids import (
     assign_doc_ids,
     unpersist_doc_ids,
@@ -750,7 +751,7 @@ def append_to_index(
     avgdl = float(total_all) / n_all if n_all else 0.0
 
     # merge docfreq: old df + new per-term df, idf under the new N
-    df_new = P.docfreq(tf_new)
+    df_new = docfreq_df(tf_new)
     df_old = spark.read.parquet(str(d / docfreq_rel)).select("term", "df")
     merged = (
         df_old.unionByName(df_new)

@@ -434,13 +434,35 @@ def test_range_join_subsecond_boundary(spark):
     assert got == {101, 102}  # 300.5s excluded; 299.999999s and -300s in
 
 
+def _shingles_expr(text, n: int):
+    """Reference spec of dedup.doc_shingles' shingle set: distinct token
+    n-grams as ARRAY<STRING> over pure Column exprs (1-based element_at
+    mirrors DuckDB list indexing exactly)."""
+    from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
+
+    toks = tokens_expr(text)
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(grams)
+
+
 def test_doc_shingles_arrow_equals_column(spark, planted):
     """The Arrow shingle pass and the Column-expr spec emit the exact
     same (doc, shingle) set."""
-    from semantic_pdf_search_engine_spark.operators.dedup import doc_shingles
+    from semantic_pdf_search_engine_spark.operators.dedup import SHINGLE_N, doc_shingles
 
-    a = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted, mode="arrow").collect()}
-    c = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted, mode="column").collect()}
+    a = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted).collect()}
+    c = {
+        (r["doc_id"], r["shingle"])
+        for r in planted.select(
+            "doc_id", F.explode(_shingles_expr(F.col("text"), SHINGLE_N)).alias("shingle")
+        ).collect()
+    }
     assert a == c and len(a) > 0
 
 
@@ -831,10 +853,39 @@ def test_minhash_prod_sql_generator_other_params(spark, sf_dir):
     assert len(got) > 0  # the 31-word fixture vocab guarantees candidates
 
 
+def _simhash_column_spec(docs):
+    """Reference spec of dedup.simhash over pure Column exprs, the form
+    the DuckDB oracle mirrors: explode each (doc, term, tf) over the 16
+    md5 nibbles, sum tf·(±1) per (doc, bit), set the bits whose sum is
+    positive."""
+    from semantic_pdf_search_engine_spark.operators.bm25 import tf_df
+
+    tf = tf_df(docs).withColumn("h", F.md5(F.col("term").cast("binary")))
+    bits = tf.select(
+        "doc_id", "tf", "h", F.explode(F.sequence(F.lit(1), F.lit(16))).alias("j")
+    ).withColumn(
+        "nibble",
+        F.instr(F.lit("0123456789abcdef"), F.substring(F.col("h"), F.col("j"), 1)) - 1,
+    ).withColumn(
+        "signed", F.col("tf") * F.when(F.col("nibble") >= 8, 1).otherwise(-1)
+    )
+    sj = bits.groupBy("doc_id", "j").agg(F.sum("signed").alias("s"))
+    return (
+        sj.withColumn(
+            "bitval",
+            F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j") - 1).cast("long")).otherwise(
+                F.lit(0)
+            ),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("bitval").cast("long").alias("simhash"))
+    )
+
+
 def test_simhash_arrow_equals_column_spec(spark, sf_dir):
-    """r6: the per-doc Arrow fingerprint pass (mode='arrow', zero
-    shuffles) must agree EXACTLY with the pure-Column spec the DuckDB
-    oracle mirrors — including dropping zero-token docs."""
+    """r6: the per-doc Arrow fingerprint pass (zero shuffles) must agree
+    EXACTLY with the pure-Column spec the DuckDB oracle mirrors —
+    including dropping zero-token docs."""
     from pyspark.sql import functions as F
 
     from semantic_pdf_search_engine_spark.operators.dedup import simhash
@@ -851,7 +902,7 @@ def test_simhash_arrow_equals_column_spec(spark, sf_dir):
             )
         )
     )
-    a = {(r["doc_id"], r["simhash"]) for r in simhash(docs, mode="arrow").collect()}
-    c = {(r["doc_id"], r["simhash"]) for r in simhash(docs, mode="column").collect()}
+    a = {(r["doc_id"], r["simhash"]) for r in simhash(docs).collect()}
+    c = {(r["doc_id"], r["simhash"]) for r in _simhash_column_spec(docs).collect()}
     assert a == c
     assert all(did < 99990 for did, _ in a)  # tokenless docs have no row

@@ -15,7 +15,6 @@ from semantic_pdf_search_engine_spark.operators.postings import (
     build_positional_index,
     phrase_occurrences,
     phrase_slop,
-    phrase_slop_indexed,
 )
 
 
@@ -146,9 +145,7 @@ class TestPhraseSlop:
         idx = str(tmp_path / "posidx")
         build_positional_index(docs, idx)
         a = sorted(tuple(r) for r in phrase_slop(docs, "spark filter join", 4).collect())
-        b = sorted(
-            tuple(r) for r in phrase_slop_indexed(spark, idx, "spark filter join", 4).collect()
-        )
+        b = sorted(tuple(r) for r in phrase_slop(idx, "spark filter join", 4).collect())
         assert a == b and a
 
 

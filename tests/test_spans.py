@@ -213,7 +213,6 @@ def test_phrase_indexed_equals_on_the_fly(spark, tmp_path):
     from semantic_pdf_search_engine_spark.operators.postings import (
         build_positional_index,
         phrase_occurrences,
-        phrase_occurrences_indexed,
     )
 
     docs = spark.createDataFrame(
@@ -229,16 +228,11 @@ def test_phrase_indexed_equals_on_the_fly(spark, tmp_path):
     live = sorted(
         tuple(r) for r in phrase_occurrences(docs, "stream table hash").collect()
     )
-    idx = sorted(
-        tuple(r)
-        for r in phrase_occurrences_indexed(spark, d, "stream table hash").collect()
-    )
+    idx = sorted(tuple(r) for r in phrase_occurrences(d, "stream table hash").collect())
     assert idx == live
     assert live == [(1, 2, 1), (3, 1, 1)]
 
-    plan = phrase_occurrences_indexed(
-        spark, d, "stream table hash"
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = phrase_occurrences(d, "stream table hash")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "term_bucket" in plan
 
 
@@ -286,7 +280,7 @@ def test_positional_index_append_equals_full_build(spark, tmp_path):
     from semantic_pdf_search_engine_spark.operators.postings import (
         append_to_positional_index,
         build_positional_index,
-        phrase_occurrences_indexed,
+        phrase_occurrences,
     )
 
     a = [(1, "x y z x y"), (2, "x z y")]
@@ -301,16 +295,12 @@ def test_positional_index_append_equals_full_build(spark, tmp_path):
         spark.createDataFrame(a + b, "doc_id long, text string"), d_full
     )
     for phrase in ("x y", "w x y", "y x"):
-        got = sorted(
-            tuple(r) for r in phrase_occurrences_indexed(spark, d_inc, phrase).collect()
-        )
-        want = sorted(
-            tuple(r) for r in phrase_occurrences_indexed(spark, d_full, phrase).collect()
-        )
+        got = sorted(tuple(r) for r in phrase_occurrences(d_inc, phrase).collect())
+        want = sorted(tuple(r) for r in phrase_occurrences(d_full, phrase).collect())
         assert got == want, phrase
     got = {
         r["doc_id"]: (r["n_occ"], r["first_pos"])
-        for r in phrase_occurrences_indexed(spark, d_inc, "x y").collect()
+        for r in phrase_occurrences(d_inc, "x y").collect()
     }
     # doc 1 "x y z x y" → starts 1, 4; doc 3 "w x y w" → start 2;
     # doc 4 is "y x" (reversed) → no match
@@ -353,7 +343,6 @@ def test_proximity_indexed_equals_on_the_fly(spark, tmp_path):
     from semantic_pdf_search_engine_spark.operators.postings import (
         build_positional_index,
         proximity_search,
-        proximity_search_indexed,
     )
 
     docs = spark.createDataFrame(
@@ -369,11 +358,46 @@ def test_proximity_indexed_equals_on_the_fly(spark, tmp_path):
     live = sorted(
         tuple(r) for r in proximity_search(docs, "filter", "join", 2).collect()
     )
-    idx = sorted(
-        tuple(r)
-        for r in proximity_search_indexed(spark, d, "filter", "join", 2).collect()
-    )
+    idx = sorted(tuple(r) for r in proximity_search(d, "filter", "join", 2).collect())
     assert live == idx and live  # non-empty and identical
+
+
+def test_cli_phrase_and_near_pos_equals_input(spark, tmp_path, capsys):
+    """cli `phrase` and `near` print identical rows whether they read
+    the positional index `build-pos-index` wrote (--pos) or tokenize the
+    documents parquet (--input), and still demand exactly one of the
+    two."""
+    import json
+
+    from semantic_pdf_search_engine_spark.cli import main
+
+    inp = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [
+            (1, "stream table hash join stream table"),
+            (2, "filter pad join stream of table"),
+            (3, "join filter stream table"),
+            (4, "nothing to see"),
+        ],
+        "doc_id long, text string",
+    ).write.parquet(inp)
+    pos = str(tmp_path / "pos")
+    assert main(["build-pos-index", "--input", inp, "--pos", pos]) == 0
+    capsys.readouterr()
+
+    def rows(*argv):
+        assert main(list(argv)) == 0
+        return [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+
+    for cmd, want in (
+        (["phrase", "--phrase", "stream table"], [1, 3]),
+        (["near", "--a", "filter", "--b", "join", "--window", "2"], [2, 3]),
+    ):
+        via_pos = rows(*cmd, "--pos", pos)
+        assert via_pos == rows(*cmd, "--input", inp)
+        assert [r["doc_id"] for r in via_pos] == want
+        with pytest.raises(SystemExit):
+            main(cmd)
 
 
 def test_fuzzy_spans_sql_generator_other_params(spark, sf_dir):
