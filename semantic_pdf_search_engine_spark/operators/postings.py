@@ -400,12 +400,12 @@ def _write_positions(
 ) -> None:
     from semantic_pdf_search_engine_spark.sources.index_store import (
         NUM_TERM_BUCKETS,
-        term_bucket_udf,
+        term_bucket_col,
     )
 
     (
         positional_postings(docs, None, id_col, text_col)
-        .withColumn("term_bucket", term_bucket_udf(F.col("term")))
+        .withColumn("term_bucket", term_bucket_col(F.col("term")))
         .repartition(NUM_TERM_BUCKETS, "term_bucket")
         .write.mode(mode)
         .partitionBy("term_bucket")
@@ -539,11 +539,12 @@ def best_passage(
     Only candidate starts at match positions need checking (a window
     not starting at a match is dominated by one that does), so the
     per-doc work is |matches|² Column-expression comparisons. Plan:
-    winners (TakeOrderedAndProject) → semi-join restricts the
-    documents to the ≤ k winners BEFORE they are tokenized for
-    positions → per-doc flatten + sort → transform/filter fold. `docs`
-    is a documents DataFrame or a `bm25.Corpus`; positions come from
-    its documents."""
+    the ≤ k winners are collected once (one TakeOrderedAndProject) →
+    an id IN-list restricts the documents to them BEFORE they are
+    tokenized for positions → per-doc flatten + sort → transform/filter
+    fold → join to the winners as a local relation. `docs` is a
+    documents DataFrame or a `bm25.Corpus`; positions come from its
+    documents."""
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
     from semantic_pdf_search_engine_spark.operators.bm25 import (
         bm25_topk,
@@ -557,10 +558,13 @@ def best_passage(
             docs, f"{id_col} long, score double, win_start int, n_matched int"
         )
     c = corpus(docs, id_col, text_col)
-    winners = bm25_topk(c, query, k, id_col, text_col)
-    winner_docs = c.docs.join(winners.select(id_col), id_col, "leftsemi")
+    top = bm25_topk(c, query, k, id_col, text_col).toArrow()
+    winners = c.docs.sparkSession.createDataFrame(top)
     ps = (
-        positional_postings(winner_docs, q_terms, id_col, text_col)
+        positional_postings(
+            c.docs.filter(F.col(id_col).isin(top.column(id_col).to_pylist())),
+            q_terms, id_col, text_col,
+        )
         .groupBy(id_col)
         .agg(F.sort_array(F.flatten(F.collect_list("positions"))).alias("ps"))
     )

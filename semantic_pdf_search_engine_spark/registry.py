@@ -97,6 +97,24 @@ LIMIT {k}
 # ---------------------------------------------------------------------------
 
 
+def _stat_signature(path: str) -> str:
+    """O(#files) stat-only fingerprint of a parquet file/directory:
+    (name, size, mtime_ns) per file — no footer reads, no Spark job.
+    Every cache below (schema memo, query vector, build-once stores)
+    keys on it, so any rewrite of the source, even one with the same
+    bytes, reads as a change."""
+    import hashlib
+    from pathlib import Path
+
+    p = Path(path)
+    files = sorted(p.rglob("*.parquet")) if p.is_dir() else [p]
+    h = hashlib.md5()
+    for f in files:
+        st = f.stat()
+        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return h.hexdigest()
+
+
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
@@ -106,11 +124,10 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     footer-inference JOB on every call — one scheduler round-trip per
     registry query (~98 per bench pass). The memo holds the table's
     StructType (metadata only, never rows); every invocation still
-    scans the parquet data itself. Keying on the stat-only signature
-    (no footer reads) means a table rewritten in-process — new files,
-    sizes or mtimes — infers its schema afresh instead of reusing a
-    stale one."""
-    key = (path, _parquet_signature_cheap(path))
+    scans the parquet data itself. Keying on the stat signature means
+    a table rewritten in-process — new files, sizes or mtimes — infers
+    its schema afresh instead of reusing a stale one."""
+    key = (path, _stat_signature(path))
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
@@ -123,23 +140,101 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
+# build-once/serve-many handles, keyed by (spark app, store kind,
+# sf_dir) and holding (source stat signature, handle): repeated
+# registry calls in one session reuse ONE built, prepare()'d handle
+# instead of re-opening (and for the doc index, re-persisting) per call.
+_STORE_HANDLES: dict[tuple[str, str, str], tuple[str, object]] = {}
+
+
+def _read_record(sig_path: str) -> str | None:
+    """The one-line `<kind> <signature>` record of a disk store, or
+    None when there is none."""
+    try:
+        with open(sig_path) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
+def _store(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    table: str,
+    build: Callable,
+    load: Callable | None = None,
+):
+    """The one build-once path for the registry's stores over
+    `<sf_dir>/<table>.parquet`. The source's stat signature is checked
+    on every call (a stat walk, no Spark job), so a mid-session rewrite
+    rebuilds. A stale handle releases its executor storage BEFORE the
+    rebuild: a rewritten table reads through an equal plan, so a store
+    still cached would serve the old rows to the new build.
+
+    Without `load` the store lives in memory only: `build()`. With it,
+    the store is kept on disk in `<SPSE_INDEX_CACHE>/<kind>_<md5(sf_dir)
+    [:12]>` (default root: the temp dir) next to a `<kind> <signature>`
+    record: a matching record reopens it with `load(dir)`, anything else
+    runs `build(dir)` and then publishes the record (computed before the
+    build) atomically, so a later process reopens what this one built."""
+    import hashlib
+    import tempfile
+
+    data_path = f"{sf_dir}/{table}.parquet"
+    sig = _stat_signature(data_path)
+    app = spark.sparkContext.applicationId
+    key = (app, kind, sf_dir)
+    hit = _STORE_HANDLES.get(key)
+    if hit is not None:
+        if hit[0] == sig:
+            return hit[1]
+        if hasattr(hit[1], "unpersist"):
+            hit[1].unpersist()
+    # prune entries from dead SparkSessions (stale applicationIds):
+    # their JVMs are gone, the handles are unusable, and the dict
+    # would otherwise grow for the process lifetime
+    for k in [k for k in _STORE_HANDLES if k[0] != app]:
+        del _STORE_HANDLES[k]
+    if load is None:
+        handle = build()
+    else:
+        root = os.environ.get(
+            "SPSE_INDEX_CACHE", os.path.join(tempfile.gettempdir(), "spse_index_cache")
+        )
+        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+        d = os.path.join(root, f"{kind}_{tag}")
+        sig_path = os.path.join(d, "cache_sig.txt")
+        record = f"{kind} {sig}"
+        if _read_record(sig_path) == record:
+            handle = load(d)
+        else:
+            handle = build(d)
+            os.makedirs(d, exist_ok=True)
+            tmp = f"{sig_path}.tmp.{os.getpid()}"
+            with open(tmp, "w") as f:
+                f.write(record)
+            os.replace(tmp, sig_path)
+    _STORE_HANDLES[key] = (sig, handle)
+    return handle
+
+
 def _corpus(spark: SparkSession, sf_dir: str) -> bm25.Corpus:
     """Build-once store of the relational corpus (`bm25.corpus` over
     the documents table): tf and dfreq persisted and materialized once
     per session, the stats held as driver-side floats. Every relational
-    BM25 query reads it instead of re-tokenizing the table. Memoized
-    like the index handles, on the table's cheap signature, so a
-    rewritten table rebuilds the store and the replaced one is
-    unpersisted. In memory only: no disk cache, no build_index."""
-    data_path = f"{sf_dir}/documents.parquet"
-    hit = _cached_handle(spark, "corpus", sf_dir, data_path)
-    if hit is not None:
-        return hit
-    c = bm25.corpus(_docs(spark, sf_dir))
-    # tf first: dfreq's plan then reads the tf cache, not the table
-    c.tf.persist().count()
-    c.dfreq.persist().count()
-    return _remember_handle(spark, "corpus", sf_dir, data_path, c)
+    BM25 query reads it instead of re-tokenizing the table. In memory
+    only (see `_store`): a rewritten table rebuilds the store and the
+    replaced one is unpersisted."""
+
+    def build() -> bm25.Corpus:
+        c = bm25.corpus(_docs(spark, sf_dir))
+        # tf first: dfreq's plan then reads the tf cache, not the table
+        c.tf.persist().count()
+        c.dfreq.persist().count()
+        return c
+
+    return _store(spark, "corpus", sf_dir, "documents", build)
 
 
 def q_tokenize_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,13 +818,13 @@ def _query_vec(sf_dir: str, vec_id: int = 0) -> list[float]:
     pyarrow (row-group statistics prune the scan to the group holding
     `vec_id`) — replaces the 1-row Spark job each ann_* registry entry
     used to run (a scheduler round-trip per query at serving time;
-    VERDICT r3 'what's wrong' #5). Cached per (sf_dir, vec_id, cheap
-    source signature): a mid-session regeneration of the embeddings
+    VERDICT r3 'what's wrong' #5). Cached per (sf_dir, vec_id, source
+    stat signature): a mid-session regeneration of the embeddings
     table invalidates this cache the same way it invalidates the store
     handles — the serving path never scores against a vector that no
     longer exists in the data."""
     path = f"{sf_dir}/embeddings.parquet"
-    key = f"{path}:{vec_id}:{_parquet_signature_cheap(path)}"
+    key = f"{path}:{vec_id}:{_stat_signature(path)}"
     if key not in _QVEC_CACHE:
         import pyarrow.dataset as ds
 
@@ -747,196 +842,28 @@ def q_ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_cosine_topk(emb, _query_vec(sf_dir), k=10, exclude_ids=(0,))
 
 
-def _parquet_signature(path: str) -> str:
-    """Driver-side data signature of a parquet file/directory: per-file
-    (name, size, row count) plus EVERY row group's per-column statistics
-    (min/max/null_count from the footer) plus each file's first 64 KiB
-    of bytes. Changed VALUES change column statistics even deep inside a
-    multi-file dataset, so a regenerated fixture with the same shape
-    cannot silently serve a stale materialized store. Footer-only reads
-    — NO Spark jobs on the serving path (this replaced the emb.count()
-    + first-vector fetch, two scheduler round-trips per ANN registry
-    query)."""
-    import hashlib
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    p = Path(path)
-    files = sorted(p.rglob("*.parquet")) if p.is_dir() else [p]
-    h = hashlib.md5()
-    for f in files:
-        h.update(f"{f.name}:{f.stat().st_size}:".encode())
-        md = pq.ParquetFile(f).metadata
-        h.update(str(md.num_rows).encode())
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for c in range(g.num_columns):
-                col = g.column(c)
-                h.update(
-                    f"{col.total_compressed_size}:{col.statistics}".encode()
-                )
-        with open(f, "rb") as fh:
-            h.update(fh.read(65536))
-    return h.hexdigest()
-
-
-def _parquet_signature_cheap(path: str) -> str:
-    """O(#files) stat-only fingerprint: (name, size, mtime_ns) per file.
-    ZERO footer/row-group iteration — the serving-path fast check. Any
-    regeneration of the source data changes mtimes, which demotes
-    validation to the full footer signature below; a value change with
-    an unchanged mtime+size is not physically producible by a normal
-    rewrite."""
-    import hashlib
-    from pathlib import Path
-
-    p = Path(path)
-    files = sorted(p.rglob("*.parquet")) if p.is_dir() else [p]
-    h = hashlib.md5()
-    for f in files:
-        st = f.stat()
-        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()
-
-
-def _write_store_sig(
-    sig_path: str,
-    tag: str,
-    data_path: str,
-    cheap: str | None = None,
-    full: str | None = None,
-) -> None:
-    """Persist BOTH signature levels at store-build time, atomically
-    (temp file + os.replace — two processes interleaving the store
-    write and the sig write can no longer publish a half-written
-    record; the LAST completed build wins the pointer). The footer walk
-    happens here, once per build — never again on a cache hit. Callers
-    that already computed a level pass it in (the demoted-validation
-    refresh would otherwise re-walk the footers it just walked)."""
-    import json as _json
-
-    payload = _json.dumps(
-        {
-            "tag": tag,
-            "cheap": cheap if cheap is not None else _parquet_signature_cheap(data_path),
-            "full": full if full is not None else _parquet_signature(data_path),
-        }
-    )
-    tmp = f"{sig_path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, sig_path)
-
-
-def _store_sig_valid(sig_path: str, tag: str, data_path: str) -> bool:
-    """Two-level cache validation (VERDICT r3 'what's wrong' #4): the
-    hot path is a stat walk against the persisted cheap signature —
-    zero row-group iteration, zero Spark jobs. Only when the stat walk
-    misses (source files touched/moved) does the full footer signature
-    run; a content-identical source re-validates and refreshes the
-    cheap level in place. Legacy single-hash sig files fail the JSON
-    parse and read as a miss (one rebuild, then the new format)."""
-    import json as _json
-
-    try:
-        rec = _json.loads(open(sig_path).read())
-    except (FileNotFoundError, ValueError):
-        return False
-    if not isinstance(rec, dict) or rec.get("tag") != tag:
-        return False
-    cheap_now = _parquet_signature_cheap(data_path)
-    if rec.get("cheap") == cheap_now:
-        return True
-    full_now = _parquet_signature(data_path)
-    if rec.get("full") == full_now:
-        # same bytes, new stat identity (copy / touch): refresh cheap,
-        # reusing the signatures just computed (no second footer walk)
-        _write_store_sig(sig_path, tag, data_path, cheap=cheap_now, full=full_now)
-        return True
-    return False
-
-
-# build-once/serve-many handles, keyed by (spark app, store kind,
-# sf_dir): repeated registry calls in one session reuse ONE validated,
-# prepare()'d handle instead of re-opening (and for the doc index,
-# re-persisting) per call — the fuzzy_spans per-call growth fix. The
-# cheap signature is re-checked per call (stat walk), so mid-session
-# source changes still invalidate.
-_STORE_HANDLES: dict[tuple[str, str, str], tuple[str, object]] = {}
-
-
-def _cached_handle(spark: SparkSession, kind: str, sf_dir: str, data_path: str):
-    key = (spark.sparkContext.applicationId, kind, sf_dir)
-    hit = _STORE_HANDLES.get(key)
-    if hit is None:
-        return None
-    if hit[0] == _parquet_signature_cheap(data_path):
-        return hit[1]
-    # the source changed: the stale handle releases its executor
-    # storage — without this, every mid-session source regeneration
-    # leaks a resident copy until OOM/eviction thrash. It is released
-    # BEFORE the caller rebuilds: a rewritten table reads through an
-    # equal plan, so a store still cached would serve the old rows to
-    # the new build.
-    _STORE_HANDLES.pop(key)
-    unp = getattr(hit[1], "unpersist", None)
-    if callable(unp):
-        try:
-            unp()
-        except Exception:
-            pass
-    return None
-
-
-def _remember_handle(
-    spark: SparkSession, kind: str, sf_dir: str, data_path: str, handle
-):
-    app = spark.sparkContext.applicationId
-    key = (app, kind, sf_dir)
-    # prune entries from dead SparkSessions (stale applicationIds):
-    # their JVMs are gone, the handles are unusable, and the dict
-    # would otherwise grow for the process lifetime
-    for k in [k for k in _STORE_HANDLES if k[0] != app]:
-        _STORE_HANDLES.pop(k, None)
-    _STORE_HANDLES[key] = (_parquet_signature_cheap(data_path), handle)
-    return handle
-
-
 def _ann_index(spark: SparkSession, sf_dir: str):
-    """Build-once/probe-many: the materialized ANN store for sf_dir,
-    cached under $SPSE_ANN_CACHE (default tmpdir) keyed by the data
-    path and validated DRIVER-SIDE against the signature persisted at
-    build time (stat walk on a hit; footer walk only on a stat miss —
-    see _store_sig_valid; no Spark jobs on the serving path) — queries
-    against it are parquet PARTITION PRUNING on the bucket column, not
-    full-corpus rescans."""
-    import hashlib
-    import tempfile
-
+    """Build-once/probe-many: the materialized ANN store over the
+    embeddings table (see `_store`) — queries against it are parquet
+    PARTITION PRUNING on the bucket column, not full-corpus rescans."""
     from semantic_pdf_search_engine_spark.sources import ann_store
 
     _N_PLANES = 6  # 64 LSH bucket dirs: right-sized for the testdata
     # corpus (bucket occupancy ~n/64); at production corpus sizes raise
     # n_planes so buckets stay directory-sized
 
-    data_path = f"{sf_dir}/embeddings.parquet"
-    hit = _cached_handle(spark, "ann", sf_dir, data_path)
-    if hit is not None:
-        return hit
-    root = os.environ.get(
-        "SPSE_ANN_CACHE", os.path.join(tempfile.gettempdir(), "spse_ann_cache")
-    )
-    d = os.path.join(root, hashlib.md5(sf_dir.encode()).hexdigest()[:12])
-    sig_path = os.path.join(d, "cache_sig.txt")
-    if _store_sig_valid(sig_path, f"ann:{_N_PLANES}:ivf-md5-q6", data_path):
-        idx = ann_store.load_ann_index(spark, d)
-    else:
-        idx = ann_store.build_ann_index(
+    # the plane count is part of the kind: a store built with another
+    # count lives in its own directory and is never loaded here
+    return _store(
+        spark,
+        f"ann{_N_PLANES}",
+        sf_dir,
+        "embeddings",
+        lambda d: ann_store.build_ann_index(
             spark, _emb(spark, sf_dir), d, n_planes=_N_PLANES
-        )
-        _write_store_sig(sig_path, f"ann:{_N_PLANES}:ivf-md5-q6", data_path)
-    return _remember_handle(spark, "ann", sf_dir, data_path, idx)
+        ),
+        lambda d: ann_store.load_ann_index(spark, d),
+    )
 
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,28 +1029,21 @@ def q_phrase_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pos_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialized positional posting index over documents
-    (postings.build_positional_index), cached under $SPSE_INDEX_CACHE
-    next to the BM25/ANN stores with the same build-time-persisted
-    signature validation (stat walk on a hit, atomic sig publish —
-    no Spark jobs and no footer iteration spent re-validating)."""
-    import hashlib
-    import tempfile
-
+    """Path of the materialized positional posting index over documents
+    (postings.build_positional_index), a disk store like the BM25/ANN
+    stores (see `_store`)."""
     from semantic_pdf_search_engine_spark.operators.postings import (
         build_positional_index,
     )
 
-    data_path = f"{sf_dir}/documents.parquet"
-    root = os.environ.get(
-        "SPSE_INDEX_CACHE", os.path.join(tempfile.gettempdir(), "spse_index_cache")
-    )
-    d = os.path.join(root, "pos_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
-    sig_path = os.path.join(d, "cache_sig.txt")
-    if not _store_sig_valid(sig_path, "posidx", data_path):
+    def build(d: str) -> str:
         build_positional_index(_docs(spark, sf_dir), os.path.join(d, "postings"))
-        _write_store_sig(sig_path, "posidx", data_path)
-    return os.path.join(d, "postings")
+        return os.path.join(d, "postings")
+
+    return _store(
+        spark, "pos", sf_dir, "documents", build,
+        lambda d: os.path.join(d, "postings"),
+    )
 
 
 def q_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1631,51 +1551,34 @@ def q_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_index(spark: SparkSession, sf_dir: str):
-    """Prebuilt COMPRESSED inverted index over the documents table
-    (build-once/probe-many, cached under $SPSE_INDEX_CACHE like the ANN
-    store, validated by the driver-side parquet signature): serving-
-    path queries read partition-pruned posting blocks instead of
-    re-running the 4-scan relational BM25 spec per query. Documents map
-    to the transcript shape via conv_id = zero-padded doc_id (one turn
-    per doc), so assigned docIDs follow doc_id order; the original id
-    travels as `orig_doc_id` in the docs table.
+    """Prebuilt COMPRESSED inverted index over the documents table, a
+    disk store (see `_store`): serving-path queries read
+    partition-pruned posting blocks instead of re-running the 4-scan
+    relational BM25 spec per query. Documents map to the transcript
+    shape via conv_id = zero-padded doc_id (one turn per doc), so
+    assigned docIDs follow doc_id order; the original id travels as
+    `orig_doc_id` in the docs table.
 
     The returned handle is prepare()'d (postings + docfreq pinned in
     executor memory — query-serving posture) and memoized per (session,
-    sf_dir), so serving-path entries in one session share ONE validated
-    handle instead of re-opening the store, re-walking signatures, and
-    re-reading parquet per call (part of the fuzzy_spans regression fix,
-    VERDICT r3 next #3)."""
-    import hashlib
-    import tempfile
+    sf_dir), so serving-path entries in one session share ONE handle
+    instead of re-opening the store and re-reading parquet per call
+    (part of the fuzzy_spans regression fix, VERDICT r3 next #3)."""
+    from semantic_pdf_search_engine_spark.sources import index_store
 
-    from semantic_pdf_search_engine_spark.sources.index_store import (
-        build_index,
-        load_index,
-    )
-
-    data_path = f"{sf_dir}/documents.parquet"
-    hit = _cached_handle(spark, "docidx", sf_dir, data_path)
-    if hit is not None:
-        return hit
-    root = os.environ.get(
-        "SPSE_INDEX_CACHE", os.path.join(tempfile.gettempdir(), "spse_index_cache")
-    )
-    d = os.path.join(root, hashlib.md5(sf_dir.encode()).hexdigest()[:12])
-    sig_path = os.path.join(d, "cache_sig.txt")
-    if _store_sig_valid(sig_path, "docidx", data_path):
-        idx = load_index(spark, d)
-    else:
+    def build(d: str):
         transcripts = _docs(spark, sf_dir).select(
             F.format_string("%012d", F.col("doc_id")).alias("conv_id"),
             F.lit(0).alias("turn_idx"),
             F.col("doc_id").alias("orig_doc_id"),
             "text",
         )
-        idx = build_index(spark, transcripts, d, resume=False)
-        _write_store_sig(sig_path, "docidx", data_path)
-    idx.prepare()
-    return _remember_handle(spark, "docidx", sf_dir, data_path, idx)
+        return index_store.build_index(spark, transcripts, d, resume=False).prepare()
+
+    return _store(
+        spark, "docidx", sf_dir, "documents", build,
+        lambda d: index_store.load_index(spark, d).prepare(),
+    )
 
 
 def q_fuzzy_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -57,20 +57,14 @@ def term_bucket_of(term: str) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % NUM_TERM_BUCKETS
 
 
-from pyspark.sql.types import IntegerType
-
-
-@F.pandas_udf(IntegerType())  # DataType instance: no session needed at import
-def term_bucket_udf(terms):
-    import pandas as pd
-
-    return pd.Series(
-        [
-            int(hashlib.md5(t.encode("utf-8")).hexdigest()[:8], 16) % NUM_TERM_BUCKETS
-            for t in terms
-        ],
-        dtype="int32",
-    )
+def term_bucket_col(term: Column) -> Column:
+    """`term_bucket_of` as a JVM column expression (md5 of the UTF-8
+    bytes, first 8 hex digits, mod NUM_TERM_BUCKETS) for the bucketed
+    writers: no Python worker stage."""
+    return F.pmod(
+        F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("bigint"),
+        F.lit(NUM_TERM_BUCKETS),
+    ).cast("int")
 
 
 class Manifest:
@@ -323,21 +317,18 @@ class InvertedIndex:
     def postings_path(self) -> str:
         return f"{self.index_dir}/{self.postings_rel}"
 
-    @property
-    def docfreq_path(self) -> str:
-        return f"{self.index_dir}/{self.docfreq_rel}"
-
-    def _read_postings(self) -> DataFrame:
-        if self.postings_files is not None:
-            return self.spark.read.option("basePath", self.postings_path).parquet(
-                *self.postings_files
-            )
-        return self.spark.read.parquet(self.postings_path)
-
-    def _read_docfreq(self) -> DataFrame:
-        if self.docfreq_files is not None:
-            return self.spark.read.parquet(*self.docfreq_files)
-        return self.spark.read.parquet(self.docfreq_path)
+    def _read(self, table: str) -> DataFrame:
+        """Index table `table` as a Spark DataFrame over a snapshot
+        handle's exact file list, else the current `*_rel` directory —
+        the Spark twin of arrow_dataset. Postings read with basePath so
+        the term_bucket partition column survives explicit-file reads."""
+        files = getattr(self, f"{table}_files")
+        if files is None:
+            return self.spark.read.parquet(f"{self.index_dir}/{getattr(self, f'{table}_rel')}")
+        reader = self.spark.read
+        if table == "postings":
+            reader = reader.option("basePath", self.postings_path)
+        return reader.parquet(*files)
 
     def arrow_dataset(self, table: str):
         """Index table `table` ("postings", "docfreq", "docs", …) as a
@@ -361,13 +352,13 @@ class InvertedIndex:
     def postings(self) -> DataFrame:
         if self._postings_cached is not None:
             return self._postings_cached
-        return self._read_postings()
+        return self._read("postings")
 
     @property
     def docfreq(self) -> DataFrame:
         if self._docfreq_cached is not None:
             return self._docfreq_cached
-        return self._read_docfreq()
+        return self._read("docfreq")
 
     def prepare(self) -> "InvertedIndex":
         """Pin the hot read path in executor memory for a query-serving
@@ -389,8 +380,8 @@ class InvertedIndex:
         # resolve through the same file-list logic as the lazy
         # properties — on a snapshot handle, prepare() must pin the
         # SNAPSHOT's files, not the current table state
-        self._postings_cached = self._read_postings().persist()
-        self._docfreq_cached = self._read_docfreq().persist()
+        self._postings_cached = self._read("postings").persist()
+        self._docfreq_cached = self._read("docfreq").persist()
         self._postings_cached.count()
         self._docfreq_cached.count()
         row = self._docfreq_cached.select("term").head(1)
@@ -418,9 +409,7 @@ class InvertedIndex:
 
     @property
     def docs(self) -> DataFrame:
-        if self.docs_files is not None:
-            return self.spark.read.parquet(*self.docs_files)
-        return self.spark.read.parquet(f"{self.index_dir}/{self.docs_rel}")
+        return self._read("docs")
 
     @property
     def tf(self) -> DataFrame:
@@ -431,9 +420,7 @@ class InvertedIndex:
         file list (same contract as postings/docfreq/docs): appends
         after the snapshot are invisible, and a compaction's dir swap
         cannot break the handle."""
-        if self.tf_files is not None:
-            return self.spark.read.parquet(*self.tf_files)
-        return self.spark.read.parquet(f"{self.index_dir}/{self.tf_rel}")
+        return self._read("tf")
 
     def fetch_docs(self, doc_ids: list[int]) -> DataFrame:
         """Payload fetch of winners — the analog of the reference's
@@ -530,7 +517,7 @@ def _write_postings(
     into every bucket (P × NUM_TERM_BUCKETS small files); blocks are
     compact, so this extra shuffle moves little data."""
     obs = Observation("postings")
-    blocks.withColumn("term_bucket", term_bucket_udf(F.col("term"))).observe(
+    blocks.withColumn("term_bucket", term_bucket_col(F.col("term"))).observe(
         obs,
         F.count(F.lit(1)).alias("rows"),
         F.sum("n_postings").alias("n_postings"),

@@ -593,3 +593,27 @@ def test_snapshot_tf_pinned_and_survives_compaction(spark, corpora, tmp_path):
     # the live pointer moved (and rows stay the pre-append set)
     snap0b = load_index(spark, d, snapshot_id=0)
     assert snap0b.tf.count() == n_tf_a
+
+
+def test_term_bucket_column_matches_driver_bucket(spark):
+    """The bucketed writers' JVM `term_bucket_col` and the driver-side
+    `term_bucket_of` (which query pruning uses) agree on every term,
+    non-ASCII included: a drifted bucket would file postings where no
+    query looks."""
+    from pyspark.sql import functions as F
+
+    from semantic_pdf_search_engine_spark.sources.index_store import (
+        term_bucket_col,
+        term_bucket_of,
+    )
+
+    vocab = ["", "a", "spark", "café", "東京", "ﬁle", "naïve", "straße", "🙂",
+             "x" * 300, "Ελληνικά", "\u00ad", "zero\u200bwidth"]
+    vocab += [f"term{i}" for i in range(200)]
+    got = {
+        r["term"]: r["b"]
+        for r in spark.createDataFrame([(t,) for t in vocab], "term string")
+        .select("term", term_bucket_col(F.col("term")).alias("b"))
+        .collect()
+    }
+    assert got == {t: term_bucket_of(t) for t in vocab}
